@@ -422,8 +422,7 @@ object Bench {
     // emitted double would break the JSON. Pin ROOT before any formatting.
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = EngineSession.local(cpus)
+    val spark = EngineSession.local()
     def noop(df: DataFrame): Unit = df.write.mode("overwrite").format("noop").save()
     // JVM/classloader warm-up outside the timed region. The range-sum alone
     // is NOT enough (r10 lesson): the session's first window, first shuffle

@@ -11,8 +11,7 @@ object Verify {
     // query's oracle can be checked without re-running all of them.
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = EngineSession.local(cpus)
+    val spark = EngineSession.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (keep(name))

@@ -49,6 +49,8 @@ object JobSpec {
   /** Parse an INI-style `key=value` config (reference `src/mapreduce_spec.h:23-47`).
     * Unknown keys are ignored; missing keys get zero/empty defaults so that
     * `validate()` reports them, matching the reference's parse-then-validate split.
+    * An integer key whose value does not parse throws IllegalArgumentException
+    * naming the key and the value.
     */
   def fromConfig(path: String): JobSpec = {
     val kv = Files
@@ -67,13 +69,16 @@ object JobSpec {
   def fromMap(kv: Map[String, String]): JobSpec = {
     def csv(k: String): Seq[String] =
       kv.get(k).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Seq.empty)
+    def int(k: String): Int = kv.get(k).fold(0) { v =>
+      v.toIntOption.getOrElse(throw new IllegalArgumentException(s"$k must be an integer, got '$v'"))
+    }
     JobSpec(
-      numWorkers = kv.get("n_workers").map(_.toInt).getOrElse(0),
+      numWorkers = int("n_workers"),
       workerAddrs = csv("worker_ipaddr_ports"),
       inputFiles = csv("input_files"),
       outputDir = kv.getOrElse("output_dir", ""),
-      numOutputs = kv.get("n_output_files").map(_.toInt).getOrElse(0),
-      mapKilobytes = kv.get("map_kilobytes").map(_.toInt).getOrElse(0),
+      numOutputs = int("n_output_files"),
+      mapKilobytes = int("map_kilobytes"),
       userId = kv.getOrElse("user_id", "")
     )
   }

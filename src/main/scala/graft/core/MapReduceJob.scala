@@ -43,19 +43,22 @@ object MapReduceJob {
   def run(spark: SparkSession, spec: JobSpec): Unit = {
     spec.validate().left.foreach(msg => throw new IllegalArgumentException(msg))
     val task = TaskRegistry(spec.userId)
-    val prev = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-    // map_kilobytes ≡ input split size (reference src/file_shard.h:20-21)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", (spec.mapKilobytes.toLong * 1024).toString)
-    try {
-      val lines = spark.read.textFile(spec.inputFiles: _*)
-      val reduced = reduceSorted(mapPhase(lines, task), task, spec.numOutputs)
-      writeResultFiles(spark, reduced, spec.outputDir, spec.userId, spec.numOutputs)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.files.maxPartitionBytes", v)
-        case None    => spark.conf.unset("spark.sql.files.maxPartitionBytes")
-      }
-    }
+    val job = jobSession(spark, spec)
+    val lines = job.read.textFile(spec.inputFiles: _*)
+    val reduced = reduceSorted(mapPhase(lines, task), task, spec.numOutputs)
+    writeResultFiles(job, reduced, spec.outputDir, spec.userId, spec.numOutputs)
+  }
+
+  /** The session one job runs on: a new session on the caller's context, so
+    * it starts from the engine confs the context was built with, and the
+    * job's split size (map_kilobytes ≡ reference src/file_shard.h:20-21) is
+    * set on it alone — never on the caller's session, which concurrent jobs
+    * may share.
+    */
+  private[core] def jobSession(spark: SparkSession, spec: JobSpec): SparkSession = {
+    val job = spark.newSession()
+    job.conf.set("spark.sql.files.maxPartitionBytes", (spec.mapKilobytes.toLong * 1024).toString)
+    job
   }
 
   /** Map phase: one narrow stage, no shuffle (reference map loop `src/worker.h:64-75`). */
@@ -113,9 +116,27 @@ object MapReduceJob {
       }
     }
 
+  /** One `key value` sink line. Read back, a line splits at its first space
+    * into the pair, so the key may hold no space and neither may hold a line
+    * break; the value may hold spaces (MonthlyStats emits `mean max count`).
+    * A pair the format cannot hold fails the job naming it, instead of
+    * reading back as a different pair.
+    */
+  private[core] def resultLine(key: String, value: String): String = {
+    def breaks(s: String) = s.exists(c => c == '\n' || c == '\r')
+    if (key == null || value == null || key.contains(' ') || breaks(key) || breaks(value)) {
+      def show(s: String) =
+        if (s == null) "null" else "\"" + s.take(100).replace("\n", "\\n").replace("\r", "\\r") + "\""
+      throw new IllegalArgumentException(
+        s"reduce emitted (${show(key)}, ${show(value)}): the `key value` sink needs a non-null key " +
+          "without spaces or line breaks and a non-null value without line breaks")
+    }
+    s"$key $value"
+  }
+
   /** Text sink contract of the reference (`src/mr_tasks.h:66-70,89-91` +
     * `description.md:62,66-68`): R files named `{user_id}_result_{r}`, one
-    * `key value` line per pair, keys sorted within each file.
+    * `key value` line per pair ([[resultLine]]), keys sorted within each file.
     */
   private def writeResultFiles(
       spark: SparkSession,
@@ -124,8 +145,9 @@ object MapReduceJob {
       userId: String,
       numOutputs: Int
   ): Unit = {
+    import spark.implicits._
     reduced
-      .select(concat_ws(" ", col("_1"), col("_2")))
+      .map { case (k, v) => resultLine(k, v) }
       .write
       .mode(SaveMode.Overwrite)
       .text(outputDir)

@@ -1,23 +1,17 @@
 package graft.examples
 
+import graft.EngineSession
 import graft.core.{JobSpec, MapReduceJob, TaskRegistry}
 import graft.tasks.WordCount
-import org.apache.spark.sql.SparkSession
 
 /** Runnable example: the reference's end-to-end test (`test/main.cc:21-22`) on this
-  * engine — `MapReduce::run(config.ini)` ≡ `WordCountDemo <config.ini>`.
+  * engine — `MapReduce::run(config.ini)` ≡ `WordCountDemo <config.ini>`. Runs on
+  * the engine session, `EngineSession.local()`.
   */
 object WordCountDemo {
   def main(args: Array[String]): Unit = {
     require(args.length == 1, "usage: WordCountDemo <config.ini>")
-    val spark = SparkSession
-      .builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-wordcount")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineSession.local()
     TaskRegistry.register("cs6210", WordCount)
     val spec = JobSpec.fromConfig(args(0))
     println(s"[demo] spec: $spec")

@@ -9,12 +9,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * expressions as SQL functions, so `spark.sql("SELECT graft_md5long(text)...")`
   * works and the functions are usable from pure-SQL deployments.
   *
-  * Activate with:
-  * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)            // programmatic, or
-  *   .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-  * }}}
+  * Engine sessions (`graft.EngineSession`) install it. Elsewhere, pass it to a
+  * session builder's `withExtensions`, or set
+  * `spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

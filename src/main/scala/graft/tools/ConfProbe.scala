@@ -30,8 +30,7 @@ object ConfProbe {
     val fixed = args.drop(5).filter(_.startsWith("fix:")).map { a =>
       val kv = a.stripPrefix("fix:").split("=", 2); (kv(0), kv(1))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val s = graft.EngineSession.local(cpus)
+    val s = graft.EngineSession.local()
     val orig = s.conf.getOption(key)
     def noop(df: DataFrame): Unit = df.write.mode("overwrite").format("noop").save()
     fixed.foreach { case (k, v) => s.conf.set(k, v); println(s"[confprobe] fixed $k=$v (both arms)") }

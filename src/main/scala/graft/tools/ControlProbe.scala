@@ -23,8 +23,7 @@ object ControlProbe {
     }
     val dir = args(0)
     val iters = if (args.length > 1) args(1).toInt else 60
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val s = graft.EngineSession.local(cpus)
+    val s = graft.EngineSession.local()
     def noop(df: DataFrame): Unit = df.write.mode("overwrite").format("noop").save()
 
     def trivial(): DataFrame =

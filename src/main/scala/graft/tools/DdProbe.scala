@@ -68,8 +68,7 @@ object DdProbe {
         sys.exit(2)
       }
     }.getOrElse(5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val s = graft.EngineSession.local(cpus)
+    val s = graft.EngineSession.local()
     def noop(df: DataFrame): Unit = df.write.mode("overwrite").format("noop").save()
     import scala.jdk.CollectionConverters._
     def gcMillis: Long =

@@ -112,8 +112,7 @@ object DqProbe {
       sys.exit(2)
     }
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val s = graft.EngineSession.local(cpus)
+    val s = graft.EngineSession.local()
     def noop(df: DataFrame): Unit = df.write.mode("overwrite").format("noop").save()
     // Era yardsticks (shared across probe mains — see Yardsticks): recorded
     // before Spark touches the files so a future floor move here can name

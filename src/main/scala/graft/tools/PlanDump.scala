@@ -16,8 +16,7 @@ object PlanDump {
       System.err.println("usage: PlanDump <query> <sfDir> [filterSubstring] (or set SPARK_GRAFT_SF_DIR)")
       sys.exit(2); ""
     }
-    val spark = graft.EngineSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val spark = graft.EngineSession.local()
     val p = graft.SparkEntry.queries(args(0))(spark, dir)
       .queryExecution.executedPlan.toString
     val lines = args.lift(2) match {

@@ -32,8 +32,7 @@ object PlanSnap {
     val confs = flags.filter(_.startsWith("conf:")).map { a =>
       val kv = a.stripPrefix("conf:").split("=", 2); (kv(0), kv(1))
     }
-    val spark = graft.EngineSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString))
+    val spark = graft.EngineSession.local()
     Files.createDirectories(Paths.get(outDir))
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     var failures = 0

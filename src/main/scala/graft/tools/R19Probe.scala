@@ -110,8 +110,7 @@ object R19Probe {
       sys.exit(2)
     }
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val s = graft.EngineSession.local(cpus)
+    val s = graft.EngineSession.local()
     def noop(df: DataFrame): Unit = df.write.mode("overwrite").format("noop").save()
     Yardsticks.record("r19probe", dir, Seq("embeddings", "orders"))
 

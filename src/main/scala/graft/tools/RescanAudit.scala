@@ -27,8 +27,7 @@ object RescanAudit {
       sys.exit(2)
     }
     val dir = args(0)
-    val s = graft.EngineSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString))
+    val s = graft.EngineSession.local()
     for ((name, fn) <- graft.SparkEntry.queries.toSeq.sortBy(_._1)) {
       try {
         val p = fn(s, dir).queryExecution.executedPlan.toString

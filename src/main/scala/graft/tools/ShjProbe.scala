@@ -17,8 +17,7 @@ object ShjProbe {
     val dir = args(0)
     val names = args(1).split(",").toSeq
     val thr = args.lift(2).getOrElse((64L * 1024 * 1024).toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val s = graft.EngineSession.local(cpus)
+    val s = graft.EngineSession.local()
     def noop(df: DataFrame): Unit = df.write.mode("overwrite").format("noop").save()
     val key = "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"
     Yardsticks.record("shjprobe", dir, Seq("orders", "embeddings"))

@@ -77,8 +77,7 @@ object TailProbe {
       sys.exit(2)
     }
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val s = graft.EngineSession.local(cpus)
+    val s = graft.EngineSession.local()
     def noop(df: DataFrame): Unit = df.write.mode("overwrite").format("noop").save()
     def timed(pass: Int, name: String)(f: => Unit): Unit = {
       val t0 = System.nanoTime()

@@ -19,8 +19,7 @@ object TimeMany {
     }
     val names = args(0).split(",").toSeq
     val sfDir = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = graft.EngineSession.local(cpus)
+    val spark = graft.EngineSession.local()
     // Optional per-stage attribution (TimeQuery's listener, under the
     // bench's accumulated-state conditions): "stages" as a trailing arg.
     if (names.contains("stages")) {

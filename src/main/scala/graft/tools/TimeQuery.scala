@@ -14,12 +14,11 @@ object TimeQuery {
     }
     val name = args(0)
     val sfDir = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
     // The ENGINE session, not a bare builder: a hand-rolled session here
     // silently dropped GraftExtensions, so explained plans were missing
     // every injected optimizer rule (TopKRewrite, JoinElimination,
     // EagerAggregation) that the gate and bench sessions run with.
-    val spark = graft.EngineSession.local(cpus)
+    val spark = graft.EngineSession.local()
     spark.sparkContext.setLogLevel("WARN")
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {

@@ -148,71 +148,37 @@ class PlanAuditSpec extends SparkSpec {
       s"attribution must window once:\n${plan("ev_attribution")}")
   }
 
+  // The suite's session is EngineSession's own (SparkSpec), so these read the
+  // confs the engine ships with; a refactor that drops one fails here, not
+  // as a bench cliff.
+
   test("engine session sizes the generated-class cache for the query surface") {
-    // Static conf — the FIRST session in a JVM fixes it for the whole
-    // process, so BOTH builders (EngineSession for the engine, SparkSpec
-    // for this suite) must carry it. At the 100-entry default every
-    // non-back-to-back query re-invocation pays Janino compilation + a
-    // fresh C2 JIT of brand-new classes — measured as a uniform
-    // +0.3–0.7 s tax once bench passes stopped being adjacent (sf0.1
-    // bench 203 → 154 s when raised). A refactor that drops the conf
-    // must fail here, not as a bench cliff.
-    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
-      EngineSession.CodegenCacheEntries)
-    // And the engine builder itself must declare it (the running test
-    // session can't observe EngineSession's builder directly — a static
-    // conf is process-wide — so check the declaration at the source).
-    // The match is the STRUCTURED .config call referencing the shared
-    // constant, anchored at start-of-line so the explanatory comment (which
-    // also names the key) can never satisfy it. The source is resolved via
-    // the BUILD-INJECTED project root (-Dgraft.projectRoot from build.sbt),
-    // so the test always reads the checkout under test — a hardcoded
-    // absolute fallback could read a DIFFERENT checkout and pass/fail
-    // spuriously. Missing property or file fails loudly.
-    val root = sys.props.getOrElse("graft.projectRoot",
-      fail("-Dgraft.projectRoot not set (build.sbt injects it for forked tests)"))
-    val srcPath = java.nio.file.Paths.get(root, "src/main/scala/graft/EngineSession.scala")
-    assert(java.nio.file.Files.exists(srcPath), s"EngineSession.scala not found at $srcPath")
-    val src = new String(java.nio.file.Files.readAllBytes(srcPath), "UTF-8")
-    val decl = """(?m)^\s*\.config\("spark\.sql\.codegen\.cache\.maxEntries",\s*CodegenCacheEntries\)""".r
-    assert(decl.findFirstIn(src).isDefined,
-      "EngineSession must size the codegen cache for the engine's own sessions " +
-        "(.config(\"spark.sql.codegen.cache.maxEntries\", CodegenCacheEntries) missing)")
+    // At the 100-entry default every non-back-to-back query re-invocation
+    // pays Janino compilation + a fresh C2 JIT of brand-new classes —
+    // measured as a uniform +0.3–0.7 s tax once bench passes stopped being
+    // adjacent (sf0.1 bench 203 → 154 s when raised).
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "5000")
   }
 
   test("engine session forces the sort-based shuffle writer and couples the advisory size") {
-    // r20: the bypass-merge shuffle writer opens R partition files PER MAP
-    // TASK (M×R file round-trips per exchange) — measured as the dominant
-    // per-stage overhead of the engine's many byte-light exchanges at
-    // sf0.1 (rt_prf_expansion 3.04→1.66 s, dd_incremental 3.28→1.72 s
-    // warm when forced to the sort writer). Threshold 0 is scale-NEUTRAL:
-    // a production shuffle (R > 200) never takes the bypass path anyway,
-    // so this makes the local bench exercise the cluster code path. A
-    // refactor that drops the conf must fail here, not as a bench cliff.
-    // Same declaration-pin technique as the codegen-cache test above: the
-    // writer choice is a context conf the test session can't observe from
-    // EngineSession's builder directly.
-    val root = sys.props.getOrElse("graft.projectRoot",
-      fail("-Dgraft.projectRoot not set (build.sbt injects it for forked tests)"))
-    val srcPath = java.nio.file.Paths.get(root, "src/main/scala/graft/EngineSession.scala")
-    val src = new String(java.nio.file.Files.readAllBytes(srcPath), "UTF-8")
-    val writerDecl = """(?m)^\s*\.config\("spark\.shuffle\.sort\.bypassMergeThreshold",\s*"0"\)""".r
-    assert(writerDecl.findFirstIn(src).isDefined,
-      "EngineSession must force the sort-based shuffle writer " +
-        "(.config(\"spark.shuffle.sort.bypassMergeThreshold\", \"0\") missing)")
-    // And the running test context must mirror it (SparkSpec) — the first
-    // context in a JVM fixes the shuffle manager's conf process-wide.
-    assert(spark.sparkContext.getConf.get("spark.shuffle.sort.bypassMergeThreshold") == "0",
-      "test context must mirror the engine's sort-writer conf (SparkSpec builder)")
-    // ADVICE r19: the AQE sort-merge→shuffled-hash conversion threshold is
-    // only honored while it is ≥ the advisory partition size — both must
-    // derive from the ONE shared constant so a future advisory bump cannot
-    // silently disable the conversion.
-    val shjDecl = """(?m)^\s*\.config\("spark\.sql\.adaptive\.maxShuffledHashJoinLocalMapThreshold",\s*\n?\s*AdvisoryPartitionBytes\)""".r
-    val advDecl = """(?m)^\s*\.config\("spark\.sql\.adaptive\.advisoryPartitionSizeInBytes",\s*\n?\s*AdvisoryPartitionBytes\)""".r
-    assert(shjDecl.findFirstIn(src).isDefined && advDecl.findFirstIn(src).isDefined,
-      "EngineSession must derive BOTH the SHJ-conversion threshold and the advisory " +
-        "partition size from AdvisoryPartitionBytes (ADVICE r19 coupling)")
+    // r20: the bypass-merge writer opens R partition files PER MAP TASK (M×R
+    // file round-trips per exchange), the dominant per-stage overhead of the
+    // engine's many byte-light exchanges at sf0.1. The shuffle manager reads
+    // it from the CONTEXT conf.
+    assert(spark.sparkContext.getConf.getOption("spark.shuffle.sort.bypassMergeThreshold")
+      .contains("0"))
+    // ADVICE r19: the AQE sort-merge→shuffled-hash conversion is only honored
+    // while its threshold is ≥ the advisory partition size. Both are set from
+    // one constant; the strings differ if either falls back to its default.
+    assert(spark.conf.get("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold") ==
+      spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+  }
+
+  test("engine session excludes InferFiltersFromGenerate") {
+    // Its inferred size(f(x)) > 0 filter re-evaluates every exploded array
+    // expression (tokenization, shingling) below the parallelizing exchange.
+    assert(spark.conf.getOption("spark.sql.optimizer.excludedRules")
+      .exists(_.contains("org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")))
   }
 
   test("incremental df maintenance reads the stored base index, never re-tokenizes it") {

@@ -19,38 +19,20 @@ trait SparkSpec extends AnyFunSuite {
 object SparkSpec {
   private var _session: SparkSession = _
 
+  /** The shared session: the engine's own (`EngineSession.create`), on
+    * `local[8]` with 8 shuffle partitions.
+    */
   def session: SparkSession = synchronized {
-    if (_session == null || _session.sparkContext.isStopped) {
-      _session = SparkSession
-        .builder()
-        .master("local[8]")
-        .appName("graft-test")
-        .withExtensions(new graft.plans.GraftExtensions)
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        // Mirror EngineSession's codegen-cache sizing (static conf — the
-        // FIRST session in a JVM fixes it for the whole process, and the
-        // 340-test suite churns far more generated classes than 100
-        // entries hold). PlanAuditSpec pins the active value.
-        .config("spark.sql.codegen.cache.maxEntries", graft.EngineSession.CodegenCacheEntries)
-        // Mirror EngineSession's sort-based shuffle writer (r20): the
-        // shuffle manager reads this from the CONTEXT conf, and the first
-        // context in the JVM is process-wide — without the mirror, suites
-        // would exercise the bypass-merge writer the engine never runs.
-        .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-        .getOrCreate()
-      _session.sparkContext.setLogLevel("WARN")
-    }
+    if (_session == null || _session.sparkContext.isStopped) _session = EngineSession.create("local[8]", 8)
     _session
   }
 
-  /** Stop the shared session (if any) so a suite can build one with a
-    * different master; the next `session` call recreates the shared one.
+  /** Stop the running session (the shared one or a suite's own) so a suite
+    * can build one with a different master; the next `session` call
+    * recreates the shared one.
     */
   def reset(): Unit = synchronized {
-    if (_session != null && !_session.sparkContext.isStopped) _session.stop()
+    (Option(_session) ++ SparkSession.getDefaultSession).foreach(_.stop())
     _session = null
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()

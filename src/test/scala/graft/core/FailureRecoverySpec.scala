@@ -1,5 +1,6 @@
 package graft.core
 
+import graft.{EngineSession, SparkSpec}
 import graft.tasks.WordCount
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.SparkSession
@@ -49,8 +50,8 @@ private object FlakyMap extends MapReduceTask {
   * must be byte-identical to a failure-free run.
   *
   * Local masters pin task attempts to 1, so this suite swaps the shared test
-  * session for a `local[4, 2]` one (2 attempts per task — one injected
-  * failure + one retry). Tests run sequentially in one forked JVM;
+  * session for an engine session on `local[4, 2]` (2 attempts per task — one
+  * injected failure + one retry). Tests run sequentially in one forked JVM;
   * SparkSpec.session recreates the shared session for later suites.
   * The cluster-side posture (spark.task.maxFailures, spark.speculation) is
   * set centrally in [[graft.EngineSession]].
@@ -59,22 +60,13 @@ class FailureRecoverySpec extends AnyFunSuite {
 
   private val lines = (1 to 500).map(i => s"w${i % 37} w${i % 11} common word$i")
 
-  private def withRetrySession(f: SparkSession => Unit): Unit = {
-    graft.SparkSpec.reset()
-    val s = SparkSession.builder()
-      .master("local[4, 2]")
-      .appName("graft-failure-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    try f(s)
-    finally {
-      s.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-    }
+  /** Run `f` on an engine session with `master` in place of the shared test
+    * session; SparkSpec.session recreates the shared one afterwards.
+    */
+  private def withSession(master: String)(f: SparkSession => Unit): Unit = {
+    SparkSpec.reset()
+    try f(EngineSession.create(master, 4))
+    finally SparkSpec.reset()
   }
 
   private def runJob(spark: SparkSession, task: MapReduceTask, id: String, in: java.nio.file.Path): Seq[String] = {
@@ -88,7 +80,7 @@ class FailureRecoverySpec extends AnyFunSuite {
   }
 
   test("reduce task failing once per attempt is retried; output has no duplicates (O9)") {
-    withRetrySession { spark =>
+    withSession("local[4, 2]") { spark =>
       val in = Files.createTempDirectory("o9-in").resolve("input.txt")
       Files.writeString(in, lines.mkString("\n"))
       val clean = runJob(spark, WordCount, "o9clean", in)
@@ -103,7 +95,7 @@ class FailureRecoverySpec extends AnyFunSuite {
   }
 
   test("map task failing once per attempt is retried; shuffle output not duplicated (O9)") {
-    withRetrySession { spark =>
+    withSession("local[4, 2]") { spark =>
       val in = Files.createTempDirectory("o9-in-map").resolve("input.txt")
       Files.writeString(in, lines.mkString("\n"))
       val clean = runJob(spark, WordCount, "o9clean2", in)
@@ -113,25 +105,13 @@ class FailureRecoverySpec extends AnyFunSuite {
   }
 
   test("without retries, the same injected failure fails the job (control)") {
-    graft.SparkSpec.reset()
-    val s = SparkSession.builder()
-      .master("local[4]") // 1 attempt per task
-      .appName("graft-failure-control")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    try {
+    withSession("local[4]") { s => // 1 attempt per task
+      s.sparkContext.setLogLevel("ERROR")
       val in = Files.createTempDirectory("o9-in-ctl").resolve("input.txt")
       Files.writeString(in, lines.mkString("\n"))
       intercept[org.apache.spark.SparkException] {
         runJob(s, FlakyMap, "o9control", in)
       }
-    } finally {
-      s.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
     }
   }
 }

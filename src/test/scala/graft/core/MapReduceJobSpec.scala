@@ -47,6 +47,13 @@ class JobSpecSpec extends org.scalatest.funsuite.AnyFunSuite {
   test("rejects unreadable input file") {
     assert(base.copy(inputFiles = Seq("/nonexistent/x.txt")).validate().isLeft)
   }
+  test("a non-integer value names its key and the value") {
+    for (k <- Seq("n_workers", "n_output_files", "map_kilobytes")) {
+      val e = intercept[IllegalArgumentException](JobSpec.fromMap(Map(k -> "abc")))
+      assert(e.getClass == classOf[IllegalArgumentException], e)
+      assert(e.getMessage.contains(k) && e.getMessage.contains("'abc'"), e.getMessage)
+    }
+  }
   test("parses INI key=value config") {
     val f = Files.createTempFile("cfg", ".ini")
     Files.writeString(

@@ -18,9 +18,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   */
 object StarSkewExperiment {
   def main(args: Array[String]): Unit = {
-    val spark = graft.EngineSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS",
-        Runtime.getRuntime.availableProcessors().toString))
+    val spark = graft.EngineSession.local()
     import spark.implicits._
 
     val hub = 10000000L

@@ -3,8 +3,9 @@ package graft.plans
 import graft.SparkSpec
 import graft.functions.HashFunctions
 
-/** The shared test session is built with `.withExtensions(new GraftExtensions)`
-  * (see SparkSpec), so the engine's native expressions are callable from SQL.
+/** The shared test session is the engine's own (`EngineSession.create`, see
+  * SparkSpec), built with `.withExtensions(new GraftExtensions)`, so the
+  * engine's native expressions are callable from SQL.
   */
 class GraftExtensionsSpec extends SparkSpec {
 
