@@ -12,11 +12,12 @@ import org.apache.spark.sql.SparkSession
   *
   *  - `spark.task.maxFailures=4` — a failed task attempt is re-run up to 4
   *    times before the job fails (≡ the master re-dispatching a failed
-  *    worker's shard). Retried attempts cannot duplicate output: the task
-  *    commit protocol discards uncommitted attempt files, which fixes the
-  *    reference's append-mode double-write-on-retry hazard
-  *    (`src/mr_tasks.h:25,69`) by construction — asserted by
-  *    `graft.core.FailureRecoverySpec`.
+  *    worker's shard). Retried attempts cannot duplicate output: the
+  *    MapReduce sink publishes only each partition's accepted attempt file,
+  *    and the query writers' task commit protocol discards uncommitted
+  *    attempt files, which fixes the reference's append-mode
+  *    double-write-on-retry hazard (`src/mr_tasks.h:25,69`) by construction
+  *    — asserted by `graft.core.FailureRecoverySpec`.
   *  - `spark.speculation=true` — stragglers are re-launched speculatively
   *    (≡ `master.h:234-256` backup tasks). Quantile 0.95 / multiplier 3
   *    re-launches only extreme outliers, so speculation never duplicates

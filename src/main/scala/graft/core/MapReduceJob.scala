@@ -1,7 +1,15 @@
 package graft.core
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.{SparkException, TaskContext}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
+
+import java.io.{BufferedWriter, IOException, OutputStreamWriter}
+import java.nio.charset.StandardCharsets
+import java.util.UUID
+import scala.jdk.CollectionConverters._
 
 /** The whole reference runtime, Spark-first.
   *
@@ -10,6 +18,7 @@ import org.apache.spark.sql.functions._
   * {{{
   * text scan (line-aligned byte splits)        ≡ reference src/file_shard.h:19-43 + src/worker.h:57-81
   *   → flatMap(task.map)                       ≡ map UDTF dispatch, src/worker.h:73
+  *   → bounded map-side combine (optional)     ≡ OSDI'04 §4.3 Combiner; the reference has none
   *   → repartition(R, key)                     ≡ hash partitioner, src/mr_tasks.h:47-49
   *   → sortWithinPartitions(key)               ≡ reduce-side sort grouping, src/worker.h:92-106
   *   → streaming adjacent-group reduce         ≡ reduce UDAF dispatch, src/worker.h:105-106
@@ -20,8 +29,9 @@ import org.apache.spark.sql.functions._
   * (`src/masterworker.proto`), greedy FIFO scheduling (`src/master.h:217-232`),
   * straggler/failure handling (`src/master.h:234-256`) — Spark's DAGScheduler, task
   * retry, speculation, and shuffle service subsume all of it. The reference's
-  * append-mode duplicate-on-retry hazard (`src/mr_tasks.h:25,69`) is fixed for free
-  * by Spark's task-commit protocol.
+  * append-mode duplicate-on-retry hazard (`src/mr_tasks.h:25,69`) cannot happen:
+  * every reduce attempt writes its own staged file and only the accepted attempt
+  * of each partition is published ([[writeResultFiles]]).
   *
   * Scale notes (100 TB design points):
   *  - The reduce is sort-based and streaming: within each of the R partitions,
@@ -32,8 +42,12 @@ import org.apache.spark.sql.functions._
   *  - The reference writes M·R intermediate files (`src/mr_tasks.h:23`); Spark's
   *    sort-based shuffle writes one spillable file per map task. No small-file
   *    explosion at M=10^5.
-  *  - For algebraic reduces prefer the DataFrame formulation (map-side partial
-  *    aggregation); see [[graft.tasks.WordCount.dataFrameQuery]].
+  *  - A task that declares a combiner ([[MapReduceTask.combine]]) shuffles at
+  *    most one pair per distinct key per map task and per [[CombineKeys]]
+  *    flush, instead of one per emitted pair; the combiner's hash map holds at
+  *    most [[CombineKeys]] keys. A reduce expressible as a SQL aggregate can
+  *    also use the DataFrame formulation, whose partial aggregation is
+  *    codegen'd; see [[graft.tasks.WordCount.dataFrameQuery]].
   */
 object MapReduceJob {
 
@@ -46,7 +60,8 @@ object MapReduceJob {
     val job = jobSession(spark, spec)
     val lines = job.read.textFile(spec.inputFiles: _*)
     val reduced = reduceSorted(mapPhase(lines, task), task, spec.numOutputs)
-    writeResultFiles(job, reduced, spec.outputDir, spec.userId, spec.numOutputs)
+    try writeResultFiles(job, reduced, spec.outputDir, spec.userId, spec.numOutputs)
+    catch { case e: SparkException => throw userError(e) }
   }
 
   /** The session one job runs on: a new session on the caller's context, so
@@ -61,11 +76,51 @@ object MapReduceJob {
     job
   }
 
-  /** Map phase: one narrow stage, no shuffle (reference map loop `src/worker.h:64-75`). */
+  /** Map phase: one narrow stage, no shuffle (reference map loop `src/worker.h:64-75`).
+    * A task with a combiner folds each map partition's pairs through
+    * [[combineBounded]] before they reach the shuffle.
+    */
   def mapPhase(lines: Dataset[String], task: MapReduceTask): Dataset[(String, String)] = {
     import lines.sparkSession.implicits._
-    lines.flatMap(task.map(_))
+    task.combine match {
+      case None => lines.flatMap(task.map(_))
+      case Some(f) =>
+        lines.mapPartitions(it => combineBounded(it.flatMap(task.map(_).iterator), f, CombineKeys))
+    }
   }
+
+  /** Distinct keys the map-side combiner holds before it flushes. */
+  private[core] val CombineKeys = 65536
+
+  /** Merge equal keys' values with `f` in a hash map of at most `maxKeys`
+    * keys. When the map is full, every entry is emitted and the map starts
+    * over, so memory stays bounded at any scale and a key may come out more
+    * than once — which a combiner's contract allows.
+    */
+  private[core] def combineBounded(
+      pairs: Iterator[(String, String)],
+      f: (String, String) => String,
+      maxKeys: Int
+  ): Iterator[(String, String)] =
+    new Iterator[(String, String)] {
+      private var flushed: Iterator[(String, String)] = Iterator.empty
+
+      def hasNext: Boolean = flushed.hasNext || { fill(); flushed.hasNext }
+      def next(): (String, String) = {
+        if (!hasNext) throw new NoSuchElementException("combined pairs exhausted")
+        flushed.next()
+      }
+
+      private def fill(): Unit = {
+        val acc = new java.util.HashMap[String, String]
+        while (acc.size < maxKeys && pairs.hasNext) {
+          val (k, v) = pairs.next()
+          val old = acc.get(k)
+          acc.put(k, if (old == null) v else f(old, v))
+        }
+        flushed = acc.entrySet.iterator.asScala.map(e => (e.getKey, e.getValue))
+      }
+    }
 
   /** Shuffle + sorted streaming reduce. Exactly one exchange: hash-partition on key
     * into R partitions (reference `src/mr_tasks.h:48` — co-location semantics, not
@@ -137,41 +192,71 @@ object MapReduceJob {
   /** Text sink contract of the reference (`src/mr_tasks.h:66-70,89-91` +
     * `description.md:62,66-68`): R files named `{user_id}_result_{r}`, one
     * `key value` line per pair ([[resultLine]]), keys sorted within each file.
+    *
+    * Each reduce task streams its lines as UTF-8 into its own attempt file
+    * under a hidden staging sibling of `outputDir` (`.<name>.staging-<uuid>`,
+    * same filesystem) and returns `(partition, file)`. The driver takes the
+    * accepted attempt of each partition — exactly `0 until R`, or the job
+    * fails — renames it to `final/{user_id}_result_{r}`, then replaces
+    * `outputDir` with `final` by one directory rename. A failed or
+    * speculative attempt writes only under `attempts/`, never into the
+    * published directory, and a failed job leaves the previous `outputDir`
+    * untouched. Attempt files are created non-recursively, so a straggler
+    * outliving the job cannot recreate the staging directory once it is
+    * deleted. Tasks read the Hadoop conf from one broadcast instead of
+    * carrying it in every task closure.
     */
   private def writeResultFiles(
-      spark: SparkSession,
+      job: SparkSession,
       reduced: Dataset[(String, String)],
       outputDir: String,
       userId: String,
       numOutputs: Int
   ): Unit = {
-    import spark.implicits._
-    reduced
-      .map { case (k, v) => resultLine(k, v) }
-      .write
-      .mode(SaveMode.Overwrite)
-      .text(outputDir)
-    // Rename part files to the reference's result-file naming, via the Hadoop
-    // FileSystem API (works on any FS the sink wrote to, not just local).
-    // The reduce partition index r is parsed from the part file name
-    // (part-00003-… → result_3): empty partitions write no part file, so a
-    // positional rename of the sorted survivors would shift indices and break
-    // the key→hash-partition→file correspondence.
-    import org.apache.hadoop.fs.Path
-    val out = new Path(outputDir)
-    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(out).map(_.getPath).filter(_.getName.startsWith("part-"))
-    parts.foreach { p =>
-      val r = p.getName.stripPrefix("part-").takeWhile(_.isDigit).toInt
-      val dst = new Path(out, s"${userId}_result_$r")
-      if (!fs.rename(p, dst))
-        throw new java.io.IOException(s"failed to rename $p to $dst")
-    }
-    // Partitions with no data produce no part file; emit empty files to keep the
-    // R-files contract (the reference always creates all R sinks, src/mr_tasks.h:19-27).
-    (0 until numOutputs).foreach { r =>
-      val p = new Path(out, s"${userId}_result_$r")
-      if (!fs.exists(p)) fs.create(p).close()
+    import job.implicits._
+    val hadoopConf = job.sessionState.newHadoopConf()
+    val fs = new Path(outputDir).getFileSystem(hadoopConf)
+    val out = fs.makeQualified(new Path(outputDir))
+    if (out.getParent == null) throw new IllegalArgumentException(s"output_dir must not be a root: $out")
+    val staging = new Path(out.getParent, s".${out.getName}.staging-${UUID.randomUUID()}")
+    val attempts = new Path(staging, "attempts").toString
+    val conf = job.sparkContext.broadcast(new SerializableConfiguration(hadoopConf)) // bounded: one Hadoop conf
+    try {
+      if (!fs.mkdirs(new Path(attempts))) throw new IOException(s"failed to create $attempts")
+      val written = reduced.mapPartitions { it =>
+        val tc = TaskContext.get()
+        val file = new Path(attempts, s"${tc.partitionId()}-${tc.taskAttemptId()}")
+        val w = new BufferedWriter(new OutputStreamWriter(
+          file.getFileSystem(conf.value.value).createFile(file).build(), StandardCharsets.UTF_8))
+        try it.foreach { case (k, v) => w.write(resultLine(k, v)); w.write('\n') }
+        finally w.close()
+        Iterator.single((tc.partitionId(), file.toString))
+      }.collect()
+      val partitions = written.map(_._1).sorted.toSeq
+      if (partitions != (0 until numOutputs))
+        throw new IllegalStateException(s"expected reduce partitions 0 until $numOutputs, got $partitions")
+      val published = new Path(staging, "final")
+      if (!fs.mkdirs(published)) throw new IOException(s"failed to create $published")
+      written.foreach { case (r, file) => rename(fs, new Path(file), new Path(published, s"${userId}_result_$r")) }
+      if (fs.exists(out) && !fs.delete(out, true)) throw new IOException(s"failed to delete $out")
+      rename(fs, published, out)
+    } finally {
+      conf.destroy()
+      fs.delete(staging, true)
     }
   }
+
+  private def rename(fs: FileSystem, src: Path, dst: Path): Unit =
+    if (!fs.rename(src, dst)) throw new IOException(s"failed to rename $src to $dst")
+
+  /** A failed job surfaces as a `SparkException` with the task's own
+    * exception deep in its cause chain. A rejected pair (or any other
+    * `IllegalArgumentException` a task threw) is rethrown as one with the
+    * same message, keeping the `SparkException` as its cause, so the caller
+    * sees the reason first; any other failure is rethrown as is.
+    */
+  private def userError(e: SparkException): Exception =
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).collectFirst {
+      case iae: IllegalArgumentException => new IllegalArgumentException(iae.getMessage, e)
+    }.getOrElse(e)
 }

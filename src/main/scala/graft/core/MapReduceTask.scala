@@ -22,6 +22,15 @@ trait MapReduceTask extends Serializable {
 
   /** One distinct key + all its values → zero or more (key, value) pairs. */
   def reduce(key: String, values: Iterator[String]): IterableOnce[(String, String)]
+
+  /** Optional combiner (OSDI'04 §4.3, absent from the reference): merges two
+    * values of one key into one value that [[reduce]] accepts in their place.
+    * It must be associative and commutative; the runtime may apply it any
+    * number of times, zero included, so `reduce` must give the same result
+    * over raw and over combined values. `None` keeps one shuffled pair per
+    * emitted pair.
+    */
+  def combine: Option[(String, String) => String] = None
 }
 
 /** Registry keyed by `user_id`, the Spark-side analog of the reference's

@@ -9,6 +9,10 @@ import graft.core.MapReduceTask
   *
   * Demonstrates multi-task registry use (the reference's `user_id` dispatch,
   * `src/mr_task_factory.cc:74-88`) alongside [[WordCount]].
+  *
+  * Declares no combiner: `reduce` takes raw readings, not partial
+  * `(sum, max, n)` triples, so a combined value is not something it accepts
+  * in place of the values it merged. Every reading is shuffled.
   */
 object MonthlyStats extends MapReduceTask {
 

@@ -45,9 +45,10 @@ private object FlakyMap extends MapReduceTask {
 /** O9 — failure semantics (SURVEY.md §5 item 5; reference
   * `description.md:85-86`, `src/master.h:234-256`): a failed task attempt is
   * retried, and the retry produces NO duplicate output. The reference's
-  * append-mode sinks double-write on retry; Spark's task-commit protocol
-  * discards the failed attempt's uncommitted file, so the committed result
-  * must be byte-identical to a failure-free run.
+  * append-mode sinks double-write on retry; here each reduce attempt writes
+  * its own staged file and the job publishes only the accepted attempt of
+  * each partition, so the failed attempt's partial file is never published
+  * and the result must be identical to a failure-free run.
   *
   * Local masters pin task attempts to 1, so this suite swaps the shared test
   * session for an engine session on `local[4, 2]` (2 attempts per task — one

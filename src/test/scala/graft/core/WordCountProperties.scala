@@ -27,8 +27,9 @@ object WordCountProperties extends Properties("WordCount") {
 
   property("merge associativity: wc(a ++ b) == wc(a) |+| wc(b)") =
     forAll(lines, lines) { (a, b) =>
-      val merged = (wc(a).keySet ++ wc(b).keySet).map { k =>
-        k -> (wc(a).getOrElse(k, 0L) + wc(b).getOrElse(k, 0L))
+      val (wa, wb) = (wc(a), wc(b))
+      val merged = (wa.keySet ++ wb.keySet).map { k =>
+        k -> (wa.getOrElse(k, 0L) + wb.getOrElse(k, 0L))
       }.toMap
       wc(a ++ b) == merged
     }
