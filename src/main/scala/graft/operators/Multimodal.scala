@@ -164,9 +164,7 @@ object Multimodal {
 
   /** The decode + dHash tier of mm_phash_neardup, RAM-materialized (decode
     * once, hash once — the frame every banding/verification consumer
-    * reads). ONE definition serves the gate query and
-    * [[graft.tools.TailProbe]]'s stage decomposition (the CdProbe/DqProbe
-    * no-drift discipline).
+    * reads).
     */
   private[graft] def phashFrame(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

@@ -37,25 +37,16 @@ object Quality {
       sum(when(bad, 1L).otherwise(0L)).as("n_violations")))
 
   /** The dq_profile plan: one pruned scan, one hash aggregate to a 1-row
-    * frame, explode to the 4-row report. ONE definition serves the gate
-    * query and [[graft.tools.DqProbe]]'s stage decomposition (the CdProbe
-    * no-drift discipline). Per-column distinct strategy by DECLARED domain:
-    * the three domain-bounded columns ride size(collect_set) (state bounded
-    * by the domain, so the sole remaining countDistinct plans as a
-    * two-phase group-by instead of the ×5 Expand that 4 raw distincts
-    * cost — the r12 restructure). `distincts = false` is the probe's
-    * attribution knob ONLY (replaces every distinct measure with a
-    * constant to isolate the distinct-state share); production always
-    * profiles all four.
+    * frame, explode to the 4-row report. Per-column distinct strategy by
+    * DECLARED domain: the three domain-bounded columns ride
+    * size(collect_set) (state bounded by the domain, so the sole remaining
+    * countDistinct plans as a two-phase group-by instead of the ×5 Expand
+    * that 4 raw distincts cost — the r12 restructure).
     */
-  private[graft] def profileStats(s: SparkSession, dir: String, distincts: Boolean): DataFrame = {
+  private[graft] def profileStats(s: SparkSession, dir: String): DataFrame = {
     val d2 = org.apache.spark.sql.types.DecimalType(18, 2)
-    // Bounded-domain exact distinct vs the sole two-phase countDistinct;
-    // the knob collapses both to a constant (no distinct state at all).
-    def bdist(c: Column): Column =
-      if (distincts) size(collect_set(c)).cast("long") else lit(-1L)
-    def cdist(c: Column): Column =
-      if (distincts) countDistinct(c) else lit(-1L)
+    // Bounded-domain exact distinct: aggregation state is the domain.
+    def bdist(c: Column): Column = size(collect_set(c)).cast("long")
     // parallelizeNarrowScan spreads the map side across the session's
     // cores when the file layout under-splits (single-file local table);
     // no-op at scale, where the table scans as thousands of splits.
@@ -68,7 +59,7 @@ object Quality {
       min(col("l_quantity").cast(d2)).cast("string").as("qty_min"),
       max(col("l_quantity").cast(d2)).cast("string").as("qty_max"),
       (count(lit(1)) - count(col("l_extendedprice"))).as("price_null"),
-      cdist(col("l_extendedprice")).as("price_dist"),
+      countDistinct(col("l_extendedprice")).as("price_dist"),
       min(col("l_extendedprice").cast(d2)).cast("string").as("price_min"),
       max(col("l_extendedprice").cast(d2)).cast("string").as("price_max"),
       (count(lit(1)) - count(col("l_returnflag"))).as("flag_null"),
@@ -92,14 +83,10 @@ object Quality {
 
   /** One RELY-constraint audit frame (ft.fk → pt.pk): the distinct'd-PK
     * left join counted in a single pass, plus the PK-uniqueness one-row
-    * aggregate cross-joined on. ONE definition serves the dq_referential
-    * gate query and [[graft.tools.DqProbe]]'s stage decomposition (the
-    * CdProbe no-drift discipline). `dupPk = false` is the probe's
-    * attribution knob ONLY (drops the uniqueness aggregate to isolate its
-    * share); production always audits all three soundness conditions.
+    * aggregate cross-joined on: all three soundness conditions.
     */
   private[graft] def riConstraint(s: SparkSession, dir: String,
-      ft: String, fk: String, pt: String, pk: String, dupPk: Boolean): DataFrame = {
+      ft: String, fk: String, pt: String, pk: String): DataFrame = {
     val f = Relational.t(s, dir, ft).select(col(fk).as("fk"))
     val p = Relational.t(s, dir, pt).select(col(pk).as("pk"))
     val base = f.join(p.distinct(), col("fk") === col("pk"), "left_outer")
@@ -108,13 +95,10 @@ object Quality {
         sum(when(col("fk").isNull, 1L).otherwise(0L)).as("n_null_fk"),
         sum(when(col("fk").isNotNull && col("pk").isNull, 1L).otherwise(0L))
           .as("n_orphans"))
-    val withDup =
-      if (dupPk)
-        base.crossJoin(broadcast( // bounded: one row
-          p.agg((count(lit(1)) - countDistinct(col("pk"))).as("n_dup_pk"))))
-      else base.withColumn("n_dup_pk", lit(-1L))
-    withDup.select(lit(s"$ft.$fk->$pt.$pk").as("constraint_name"),
-      col("n_rows"), col("n_null_fk"), col("n_orphans"), col("n_dup_pk"))
+    base.crossJoin(broadcast( // bounded: one row
+        p.agg((count(lit(1)) - countDistinct(col("pk"))).as("n_dup_pk"))))
+      .select(lit(s"$ft.$fk->$pt.$pk").as("constraint_name"),
+        col("n_rows"), col("n_null_fk"), col("n_orphans"), col("n_dup_pk"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -131,7 +115,7 @@ object Quality {
     // |constraints| reports are one-row frames unioned.
     "dq_referential" -> { (s, dir) =>
       graft.plans.JoinElimination.Declared.map { case (ft, fk, pt, pk) =>
-        riConstraint(s, dir, ft, fk, pt, pk, dupPk = true)
+        riConstraint(s, dir, ft, fk, pt, pk)
       }.reduce(_.unionByName(_)).orderBy("constraint_name")
     },
 
@@ -341,20 +325,20 @@ object Quality {
     // forms only (DECIMAL, DATE, VARCHAR — never raw double formatting,
     // which differs across engines).
     //
-    // Distinct strategy is per-column by DECLARED domain (r12 A/B,
-    // now tools/DqProbe: 2.3–2.6 s → 1.3–1.6 s at sf0.1): the three
+    // Distinct strategy is per-column by DECLARED domain (r12 A/B:
+    // 2.3–2.6 s → 1.3–1.6 s at sf0.1): the three
     // bounded-domain columns (quantity: integral 1..50; returnflag: enum;
     // shipdate: calendar days) ride size(collect_set) — exact, with
     // aggregation state bounded by the DOMAIN, not the row count — so the
     // single high-cardinality column's countDistinct is the SOLE distinct
     // aggregate and plans as a two-phase group-by instead of the ×5 Expand
     // that multiplying 4 distincts over the scan used to cost (the Expand
-    // tier was ~2/3 of the query, isolated by the probe's no-distinct
-    // floor of 0.8–0.9 s). Boundedness is a declared contract per profiled
+    // tier was ~2/3 of the query, against a no-distinct floor of
+    // 0.8–0.9 s). Boundedness is a declared contract per profiled
     // column (like every pin-tier bound); a column without one must use
     // countDistinct. No-Expand + one-scan is plan-asserted in
     // PlanAuditSpec.
-    "dq_profile" -> { (s, dir) => profileStats(s, dir, distincts = true) },
+    "dq_profile" -> { (s, dir) => profileStats(s, dir) },
 
     // Distribution-drift monitor between two corpus snapshots — the
     // dataset-shift check a training pipeline runs before accepting a new

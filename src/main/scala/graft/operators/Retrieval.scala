@@ -249,7 +249,7 @@ object Retrieval {
     // expanded set is data-dependent). Scale: both stages keep the rt_bm25
     // shape (term-pruned posting stream before any exchange, broadcast
     // df/stats); the feedback tier touches FbDocs documents.
-    "rt_prf_expansion" -> { (s, dir) => prfRanked(s, dir, expand = true) },
+    "rt_prf_expansion" -> { (s, dir) => prfRanked(s, dir) },
 
     // nDCG@k ranking-quality evaluation of the BM25 ranking — the IR-eval
     // observability artifact beside ss_ann_recall: graded relevance is the
@@ -329,35 +329,26 @@ object Retrieval {
   val FbDocs = 5
   val FbTerms = 3
 
-  /** The rt_prf_expansion plan with the feedback tier as a knob — ONE
-    * definition serves the gate query (`expand = true`) and
-    * [[graft.tools.TailProbe]]'s cost attribution (the CdProbe/DqProbe
-    * no-drift discipline; TailProbeSpec pins probe-full ≡ production on
-    * canonicalized plans). `expand = false` is the seed-query BM25 pass
-    * alone (stage 1 of the two-pass contract), so full − seed prices
-    * exactly the pseudo-relevance tier: the FbDocs cut, the feedback-term
-    * promotion, and the second ranked pass over the expanded term frame.
+  /** The rt_prf_expansion plan, two ranked passes: the seed-query BM25
+    * pass, the FbDocs cut, the feedback-term promotion, and the second
+    * ranked pass over the expanded term frame.
     */
-  private[graft] def prfRanked(s: SparkSession, dir: String, expand: Boolean): DataFrame = {
+  private[graft] def prfRanked(s: SparkSession, dir: String): DataFrame = {
     val docs = tokenStore(s, dir)
     val q0 = termFrame(s, Bm25Terms)
-    val terms =
-      if (!expand) q0
-      else {
-        val fb = Dedup.materialized(
-          bm25Ranked(docs, q0).orderBy(col("score").desc, col("doc_id").asc)
-            .limit(FbDocs).select("doc_id"))
-        val cdf = dfStore(s, dir)
-        val exp = docs.join(fb.hint("broadcast"), "doc_id") // bounded: FbDocs rows by construction
-          .select(explode(col("ts")).as("term"))
-          .filter(!col("term").isin(Bm25Terms: _*))
-          .groupBy("term").agg(count(lit(1)).as("fb_tf"))
-          .join(cdf, "term")
-          .orderBy(col("fb_tf").desc, col("cdf").asc, col("term").asc)
-          .limit(FbTerms)
-          .select("term")
-        Dedup.materialized(q0.unionByName(exp))
-      }
+    val fb = Dedup.materialized(
+      bm25Ranked(docs, q0).orderBy(col("score").desc, col("doc_id").asc)
+        .limit(FbDocs).select("doc_id"))
+    val cdf = dfStore(s, dir)
+    val exp = docs.join(fb.hint("broadcast"), "doc_id") // bounded: FbDocs rows by construction
+      .select(explode(col("ts")).as("term"))
+      .filter(!col("term").isin(Bm25Terms: _*))
+      .groupBy("term").agg(count(lit(1)).as("fb_tf"))
+      .join(cdf, "term")
+      .orderBy(col("fb_tf").desc, col("cdf").asc, col("term").asc)
+      .limit(FbTerms)
+      .select("term")
+    val terms = Dedup.materialized(q0.unionByName(exp))
     bm25Ranked(docs, terms)
       .orderBy(col("score").desc, col("doc_id").asc)
       .limit(Bm25K)
@@ -434,8 +425,8 @@ object Retrieval {
     * delta, merged by a full-outer term join — O(|vocab| + |batch tokens|),
     * never a corpus re-tokenization. ONE definition for the
     * rt_df_incremental gate and RetrievalSpec's StaleStructureContract
-    * term-level assertions (the no-drift discipline: the spec must compare
-    * the plan the gate runs, not a restated merge).
+    * term-level assertions, so the spec compares the plan the gate runs,
+    * not a restated merge.
     */
   private[graft] def mergedDfStore(s: SparkSession, dir: String): DataFrame = {
     val base = baseDfStore(s, dir)

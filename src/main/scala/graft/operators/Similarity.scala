@@ -310,7 +310,7 @@ object Similarity {
     // so ranks are bit-reproducible across partitionings and engines — the
     // unrolled DuckDB oracle lands on identical doubles. The edge set is
     // the STORED k-NN index ([[knnGraph]]): built once, scanned per round.
-    "ss_pagerank" -> { (s, dir) => pageRankRanks(s, dir, PrIters) },
+    "ss_pagerank" -> { (s, dir) => pageRankRanks(s, dir) },
 
     // Single-source BFS hop distances over the undirected 3-NN graph — the
     // frontier-expansion iteration pattern (the third iterative-dataflow
@@ -680,20 +680,15 @@ object Similarity {
   /** PageRank power-iteration rounds for [[queries ss_pagerank]]. */
   val PrIters = 3
 
-  /** The ss_pagerank plan with the round count as a knob — ONE definition
-    * serves the gate query (`iters = PrIters`) and
-    * [[graft.tools.TailProbe]]'s per-round cost attribution (the
-    * CdProbe/DqProbe no-drift discipline; TailProbeSpec pins probe-full ≡
-    * production on canonicalized plans). `iters = 0` is the stored-graph
-    * read + uniform-init floor; each increment adds exactly one
-    * edges-join + hash-aggregate round.
+  /** The ss_pagerank plan: the stored-graph read + uniform init, then
+    * [[PrIters]] rounds of one edges-join + hash aggregate each.
     */
-  private[graft] def pageRankRanks(s: SparkSession, dir: String, iters: Int): DataFrame = {
+  private[graft] def pageRankRanks(s: SparkSession, dir: String): DataFrame = {
     val nodes = vecs(s, dir).select(col("vec_id"))
     // Corpus-constant node count, folded in as a LITERAL via the stored-
     // scalar tier (the lm_vocab_v device — "removing a one-row scan +
     // broadcast-join stage from every query that needs it", and this plan
-    // needed it iters+1 times): the old one-row count aggregate was
+    // needed it PrIters+1 times): the old one-row count aggregate was
     // broadcast-cross-joined into init AND every round, costing an extra
     // corpus scan + broadcast build per round — 4 scans/builds at PrIters=3
     // (r19 plan evidence: plans/r19/ss_pagerank_{before,after}.txt, 8 → 4
@@ -706,7 +701,7 @@ object Similarity {
     // scan of the edge table is a cheap re-read, no checkpoint needed.
     val edges = knnGraph(s, dir).select(col("vec_id").as("src"), col("nbr_id").as("dst"))
     val init = nodes.select(col("vec_id"), (lit(1.0) / lit(nD)).as("pr"))
-    (1 to iters).foldLeft(init) { (pr, _) =>
+    (1 to PrIters).foldLeft(init) { (pr, _) =>
       val contrib = edges
         .join(pr.withColumnRenamed("vec_id", "src"), "src")
         .select(col("dst"),

@@ -7,7 +7,7 @@ import java.nio.file.{Files, Paths}
   * (plans/rNN/<query>_before.txt / _after.txt). Build-only: plans are
   * captured without executing the query, so a snapshot run is cheap and
   * does not disturb a concurrent measurement.
-  * Usage: PlanSnap <outDir> <suffix> <sfDir> <q1,q2,...> [exec]
+  * Usage: PlanSnap <outDir> <suffix> <sfDir> <q1,q2,...> [exec] [conf:key=value ...]
   *
   * With the trailing `exec` flag each query is RUN (noop sink) before the
   * dump, so the text carries the AQE FINAL plan (`isFinalPlan=true`) —
@@ -15,11 +15,10 @@ import java.nio.file.{Files, Paths}
   * invisible in the initial plan and need this mode for honest evidence.
   */
 object PlanSnap {
+  private val Usage = "usage: PlanSnap <outDir> <suffix> <sfDir> <q1,q2,...> [exec] [conf:key=value ...]"
+
   def main(args: Array[String]): Unit = {
-    if (args.length < 4) {
-      System.err.println("usage: PlanSnap <outDir> <suffix> <sfDir> <q1,q2,...> [exec]")
-      sys.exit(2)
-    }
+    if (args.length < 4) ToolArgs.orUsage(Usage)(None)
     val (outDir, suffix, sfDir) = (args(0), args(1), args(2))
     val names = args(3).split(",").toSeq
     // Flags live strictly AFTER the four positionals (ADVICE r19: a bare
@@ -29,9 +28,7 @@ object PlanSnap {
     val exec = flags.contains("exec")
     // Optional runtime-conf overrides (`conf:key=value` args): lets a
     // snapshot pin an A/B arm, e.g. conf:spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold=0.
-    val confs = flags.filter(_.startsWith("conf:")).map { a =>
-      val kv = a.stripPrefix("conf:").split("=", 2); (kv(0), kv(1))
-    }
+    val confs = ToolArgs.orUsage(Usage)(ToolArgs.prefixed(flags.filterNot(_ == "exec").toSeq, "conf:"))
     val spark = graft.EngineSession.local()
     Files.createDirectories(Paths.get(outDir))
     confs.foreach { case (k, v) => spark.conf.set(k, v) }

@@ -13,7 +13,7 @@ object RescanAudit {
   /** Every parquet scan location in a physical-plan string — ONE definition
     * of the walk, shared by this tool and PlanAuditSpec's standing
     * regression pin so the dev report and the gate can never count
-    * different things (the CdProbe no-drift discipline).
+    * different things.
     */
   private[graft] def scanLocations(plan: String): Seq[String] = {
     val loc = """InMemoryFileIndex\(\d+ paths?\)\[([^\]]+)""".r
@@ -21,7 +21,7 @@ object RescanAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    // Dir REQUIRED — same rule as the probe mains (ADVICE r14).
+    // Dir REQUIRED: no machine-specific default (ADVICE r14).
     if (args.isEmpty) {
       System.err.println("usage: RescanAudit <sfDir>")
       sys.exit(2)

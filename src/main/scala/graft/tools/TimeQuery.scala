@@ -2,18 +2,20 @@ package graft.tools
 
 import graft.SparkEntry
 
-/** Dev tool: time one named query (optionally print its physical plan).
-  * Usage: TimeQuery <name> <sfDir> [explain]
+/** Dev tool: time named queries one after another in ONE JVM (optionally
+  * print each physical plan), with a per-stage listener.
+  * Usage: TimeQuery <name[,name...]> <sfDir> [explain] [noop]
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
-    // Name AND dir REQUIRED — same rule as the probe mains (ADVICE r14).
+    // Names AND dir REQUIRED: no machine-specific default (ADVICE r14).
     if (args.length < 2) {
-      System.err.println("usage: TimeQuery <name> <sfDir> [explain] [noop]")
+      System.err.println("usage: TimeQuery <name[,name...]> <sfDir> [explain] [noop]")
       sys.exit(2)
     }
-    val name = args(0)
+    val names = args(0).split(",").toSeq
     val sfDir = args(1)
+    val flags = args.drop(2)
     // The ENGINE session, not a bare builder: a hand-rolled session here
     // silently dropped GraftExtensions, so explained plans were missing
     // every injected optimizer rule (TopKRewrite, JoinElimination,
@@ -27,20 +29,22 @@ object TimeQuery {
         println(f"[stage] ${si.stageId}%3d ${si.numTasks}%4d tasks ${dur}%8.2f s  ${si.name.takeWhile(_ != '(')} ${si.details.linesIterator.take(1).mkString}")
       }
     })
-    // Time CONSTRUCTION separately: eager materializations (localCheckpoint
-    // tiers, stored-structure builds, fixpoint loops) execute while the
-    // query function builds its frame, before any action on the result —
-    // the bench's per-pass cost is build + exec, not exec alone.
-    val tb = System.nanoTime()
-    val df = SparkEntry.queries(name)(spark, sfDir)
-    val buildSec = (System.nanoTime() - tb) / 1e9
-    if (args.contains("explain")) df.explain("formatted")
-    val t0 = System.nanoTime()
-    val n = if (args.contains("noop")) {
-      df.write.mode("overwrite").format("noop").save(); -1L
-    } else df.count()
-    val execSec = (System.nanoTime() - t0) / 1e9
-    println(f"[time] $name: build $buildSec%.2f s + exec $execSec%.2f s = ${buildSec + execSec}%.2f s, $n rows")
+    names.foreach { name =>
+      // Time CONSTRUCTION separately: eager materializations (localCheckpoint
+      // tiers, stored-structure builds, fixpoint loops) execute while the
+      // query function builds its frame, before any action on the result —
+      // the bench's per-pass cost is build + exec, not exec alone.
+      val tb = System.nanoTime()
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      val buildSec = (System.nanoTime() - tb) / 1e9
+      if (flags.contains("explain")) df.explain("formatted")
+      val t0 = System.nanoTime()
+      val n = if (flags.contains("noop")) {
+        df.write.mode("overwrite").format("noop").save(); -1L
+      } else df.count()
+      val execSec = (System.nanoTime() - t0) / 1e9
+      println(f"[time] $name: build $buildSec%.2f s + exec $execSec%.2f s = ${buildSec + execSec}%.2f s, $n rows")
+    }
     spark.stop()
   }
 }

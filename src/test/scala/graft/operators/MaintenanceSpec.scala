@@ -263,4 +263,21 @@ class MaintenanceSpec extends SparkSpec {
     // The session default must be restored (scoped-mode contract).
     assert(!spark.conf.getOption("spark.sql.sources.partitionOverwriteMode").contains("dynamic"))
   }
+
+  test("mt_compact_partitioned equals the direct en/zh documents aggregate") {
+    val dir = sf()
+    val composed = Maintenance.queries("mt_compact_partitioned")(spark, dir).collect().toSeq
+    val direct = Relational.t(spark, dir, "documents")
+      .filter(col("lang").isin("en", "zh"))
+      .groupBy("lang")
+      .agg(
+        count(lit(1)).as("n_docs"),
+        sum(col("n_chars")).as("total_chars"),
+        min(col("doc_id")).as("min_doc_id"),
+        max(col("doc_id")).as("max_doc_id"))
+      .orderBy("lang")
+      .collect().toSeq
+    assert(composed == direct,
+      "fragment → compact → report no longer preserves the original content")
+  }
 }
