@@ -9,11 +9,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Robustness against a contended run (the r01 driver bench was 4-8× slower
   * than identical-plan re-timings — sandbox contention, not code):
-  *  - each query runs TWICE and the MIN is reported; the passes are
-  *    INTERLEAVED (all queries pass 1, then all queries pass 2) so a
-  *    query's two samples land minutes apart — back-to-back passes shed a
-  *    one-query spike but not a multi-minute contended window (the r10
-  *    cd_ / an_ cluster sat inside one with BOTH passes inflated);
+  *  - each query runs [[Passes]] = THREE times and the MEDIAN is reported;
+  *    the passes are INTERLEAVED (all queries pass 1, then pass 2, then
+  *    pass 3) so a query's samples land minutes apart — back-to-back passes
+  *    shed a one-query spike but not a multi-minute contended window (the
+  *    r10 cd_ / an_ cluster sat inside one), and the median drops one
+  *    inflated pass whichever it is;
   *  - TWO fixed CONTROL probes are timed every [[ControlEvery]] slots and
   *    their trajectories recorded in bench_detail.json: a trivial 2-stage
   *    plan (CPU-contention signal) and a byte-light ~6-sequential-stage
@@ -22,43 +23,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    stage-count-amplifying probe would have flagged). Both spike → CPU
   *    hog; staged spikes over a flat trivial one → stage-latency window;
   *    both flat → the plans own their numbers;
-  *  - a query that fails BOTH passes is listed in `failed` and EXCLUDED from
+  *  - a query that fails ALL passes is listed in `failed` and EXCLUDED from
   *    `queries`/`total` (a broken query must not silently look "fast", and
   *    its time-to-exception must not deflate the headline number); a query
-  *    that fails exactly one pass keeps its surviving pass's time AND is
-  *    listed in `flaky`, so a contention-induced failure loses neither the
-  *    measurement nor the failure signal;
+  *    that fails one or two passes keeps the median of its surviving passes
+  *    AND is listed in `flaky`, so a contention-induced failure loses
+  *    neither the measurement nor the failure signal. `value` is the raw
+  *    sum of the per-query figures, nothing substituted into it;
   *  - total JVM GC time over the timed region is reported as `gc_sec`, so a
   *    memory-pressure-inflated run is diagnosable from the artifact alone;
-  *  - SELF-HEALING against contended windows (VERDICT r14 #1 — window noise
-  *    was the dominant judging cost for three rounds: r13's driver total
-  *    +11 % on an unchanged tree, r14's dd_containment +43 % over its probe
-  *    floor with both control maxes spiking at the same sample): after both
-  *    passes, any query whose min trips BOTH gates — above [[RereadFactor]]×
-  *    its recorded quiet-JVM median (checked in as `quiet_medians.json`)
-  *    AND above the median by [[RereadSlackSec]] — is re-run ONCE at the
-  *    end of the run — minutes
-  *    after its inflated samples, when a transient window has passed. The
-  *    first read stays in `queries`/`value` (honesty: the run measured what
-  *    it measured); the re-read goes to `reread` and the substituted total
-  *    to `value_adjudicated`, so an inflated read adjudicates itself from
-  *    the artifact alone instead of consuming a judging round. No medians
-  *    file → no re-reads (the harness degrades to the r14 behavior);
-  *  - a STALE-REFERENCE guard (VERDICT r15 #4, outcome conjunct VERDICT
-  *    r16 #1): many queries tripping the re-read gate while both control
-  *    medians sit flat against their quiet-era references
-  *    (`_control_med`/`_control_staged_med` in the medians file) — or the
-  *    re-read cap saturating — indicts the reference file ONLY when a
-  *    majority of the completed re-reads REPRODUCE the excess; when most
-  *    adjudicate down the reference is demonstrably current and the run is
-  *    a sub-threshold contended window (the r16 driver read: 11 tripped
-  *    under just-flat controls, 9/11 re-reads down); when NO re-read
-  *    completed there is no adjudication evidence either way and the
-  *    verdict hedges (`indeterminate`, ADVICE r17). The verdict is a
-  *    machine-readable `guard` code (`none`/`stale`/`contended`/
-  *    `saturated-stale`/`indeterminate`) recorded with the uncapped `tripped_n` in both
-  *    the stdout line and bench_detail.json (VERDICT r16 #4), plus a
-  *    one-line stderr diagnosis;
   *  - the per-run detail artifact is also copied to
   *    `bench_detail_<total-ms>.json` (VERDICT r15 #5: `bench_detail.json`
   *    is overwritten by every run, and the r14 driver's per-query detail
@@ -67,246 +40,39 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - a DURABLE one-line-per-run ledger (VERDICT r17 #2: the whole r16
   *    day's gitignored detail files were erased by one glob-rm — a
   *    gitignored file is not an archive): the compact facts of every run
-  *    — total, adjudicated total, both control medians, trip/re-read
-  *    counts, guard code, GC, sf — are APPENDED to the TRACKED
-  *    `bench_ledger.jsonl` at the same point the detail copy is made, so
-  *    the replayable history survives any cleanup of the detail files;
+  *    — total, pass count, both control medians, GC, sf — are APPENDED to
+  *    the TRACKED `bench_ledger.jsonl` at the same point the detail copy is
+  *    made, so the replayable history survives any cleanup of the detail
+  *    files;
   *  - the stdout line's fixed overhead is MEASURED from the rendered
   *    template, not estimated, with a compact fallback that folds the
-  *    reread/failed/flaky structures into counts — the line length is
-  *    bounded by [[LineBudget]] on any input (ADVICE r15; the r15 driver
-  *    line overflowed the 2000-char log tail and was head-truncated into
+  *    failed/flaky lists into counts — the line length is bounded by
+  *    [[LineBudget]] on any input (ADVICE r15; the r15 driver line
+  *    overflowed the 2000-char log tail and was head-truncated into
   *    unparseability).
   */
 object Bench {
   /** Slot spacing of the control probe (one control per ~20 query runs). */
   val ControlEvery = 20
 
-  /** Re-read trigger: first-read min > RereadFactor × quiet median ... */
-  val RereadFactor = 1.5
-  /** ... AND the absolute excess over the median is at least this many
-    * seconds — 1.5× of a 0.1 s query is scheduler noise, not a window; the
-    * expensive tail the re-read exists for clears this easily.
+  /** Interleaved timed passes over every query; each query reports the
+    * median of its surviving passes.
     */
-  val RereadSlackSec = 0.25
-  /** Cap on re-reads per run: a fully contended run must not double its own
-    * wall clock chasing every query; the cap keeps the adjudication pass
-    * focused on the worst offenders (sorted by absolute excess).
-    */
-  val MaxRereads = 24
-
-  /** Quiet-JVM reference file text (flat JSON at the repo root, provenance
-    * in its `_provenance` key and README "Performance measurement notes").
-    * Read leniently — absent or unreadable file means empty text, never a
-    * failed bench.
-    */
-  private def quietMediansText(): String =
-    try {
-      val p = java.nio.file.Paths.get("quiet_medians.json")
-      if (!java.nio.file.Files.exists(p)) ""
-      else java.nio.file.Files.readString(p)
-    } catch { case _: Throwable => "" }
-
-  /** One `"name": seconds` entry per line, ANCHORED at line start and end —
-    * the file is written by make_quiet_medians.py with indent=0 (each entry
-    * alone on its own column-0 line), and anchoring means a number embedded
-    * inside a STRING value (e.g. a caller-supplied `_provenance` label
-    * containing an escaped quoted name) can never inject a bogus median
-    * (ADVICE r15).
-    */
-  private val MedianEntry =
-    """(?m)^"([^"]+)"\s*:\s*([0-9]+(?:\.[0-9]+)?)\s*,?\s*$""".r
-
-  /** Flat `{"name": seconds, …}` parse; meta keys (the `_provenance` note,
-    * the `_control_*` references) are skipped by the underscore prefix.
-    * Separated from the file read for BenchSpec.
-    */
-  private[graft] def parseQuietMedians(text: String): Map[String, Double] =
-    MedianEntry.findAllMatchIn(text)
-      .filterNot(_.group(1).startsWith("_"))
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
-
-  /** A single underscore-prefixed numeric meta entry (the quiet-era control
-    * references `_control_med` / `_control_staged_med`), absent when the
-    * file predates them.
-    */
-  private[graft] def parseMetaMedian(text: String, key: String): Option[Double] =
-    MedianEntry.findAllMatchIn(text)
-      .find(_.group(1) == key).map(_.group(2).toDouble)
-
-  /** Every query whose first read trips BOTH re-read gates ([[RereadFactor]]×
-    * the quiet median AND [[RereadSlackSec]] absolute excess), worst absolute
-    * excess first, UNCAPPED — the size of this set is the stale-reference
-    * signal ([[guardVerdict]]), independent of how many re-reads the run
-    * actually pays for.
-    */
-  private[graft] def rereadCandidates(
-      results: Seq[(String, Double)],
-      medians: Map[String, Double]): Seq[String] =
-    results
-      .collect { case (name, t) if medians.get(name).exists(m =>
-        t > RereadFactor * m && t - m > RereadSlackSec) => (name, t - medians(name)) }
-      .sortBy { case (name, excess) => (-excess, name) }
-      .map(_._1)
-
-  /** The adjudication-pass selection: [[rereadCandidates]] capped at
-    * [[MaxRereads]]. Pure — BenchSpec pins the trigger, the ordering, and
-    * the cap.
-    */
-  private[graft] def rereadSelection(
-      results: Seq[(String, Double)],
-      medians: Map[String, Double]): Seq[String] =
-    rereadCandidates(results, medians).take(MaxRereads)
-
-  /** Stale-reference guard (VERDICT r15 #4 + ADVICE r15): a run where MANY
-    * queries trip the re-read gate while BOTH control medians sit flat
-    * against their quiet-era references is not "many contended windows" —
-    * flat controls say the environment is quiet, so broad-based excess over
-    * the medians means the MEDIANS have drifted out of era (the r15 dd-tier
-    * floor lesson applied to the reference file itself).
-    */
-  private[graft] val StaleTripThreshold = 8
-  /** "Flat" for the guard: a control median within this factor of its
-    * quiet-era reference (quiet runs land within a few percent; genuinely
-    * contended windows run 1.5–3×). Both sides of the comparison compute
-    * the SAME statistic since r18 (ADVICE r17): [[medianOf]] averages the
-    * two middle samples on even counts, exactly like the
-    * `statistics.median` call that builds `_control_med`/
-    * `_control_staged_med` in make_quiet_medians.py — the old upper-middle
-    * convention biased run medians slightly high against the reference.
-    *
-    * Transient, r18 until the next medians refresh (ADVICE r18): the
-    * COMMITTED `_control_med`/`_control_staged_med` (0.108/0.157) were
-    * built with the pre-r18 upper-middle per-run convention, so they sit a
-    * hair high against today's true-median run statistics — the comparison
-    * is slightly LENIENT (a marginally elevated window can still grade
-    * flat). Leniency here only widens the `contended`/`none` side; it can
-    * never manufacture a false `stale`, which additionally requires a
-    * majority of re-reads to reproduce the excess. Self-heals at the next
-    * refresh: make_quiet_medians.py emits true-median references since r18.
-    */
-  private[graft] val ControlFlatFactor = 1.3
+  val Passes = 3
 
   /** True median of an ALREADY-SORTED sample: odd size → the middle
-    * element; even size → the mean of the two middle elements. Matches
-    * Python's `statistics.median` (the convention of the quiet-era control
-    * references this value is compared against — see [[ControlFlatFactor]]).
+    * element; even size → the mean of the two middle elements (a flaky
+    * query with two surviving passes reports their mean).
     */
   private[graft] def medianOf(sorted: scala.collection.Seq[Double]): Double =
     if (sorted.isEmpty) 0.0
     else if (sorted.size % 2 == 1) sorted(sorted.size / 2)
     else (sorted(sorted.size / 2 - 1) + sorted(sorted.size / 2)) / 2.0
 
-  /** How many completed re-reads REPRODUCED the excess — i.e. the re-read
-    * value itself still trips both re-read gates against the quiet median.
-    * This is the decisive stale-vs-contended evidence (VERDICT r16 #1): a
-    * stale reference makes re-reads reproduce the excess (the medians are
-    * unreachable on this tree), while a contended window makes them
-    * adjudicate back down to ≈ their medians.
-    */
-  private[graft] def rereadReproducedCount(
-      reread: Map[String, Double], medians: Map[String, Double]): Int =
-    reread.count { case (name, t) => medians.get(name).exists(m =>
-      t > RereadFactor * m && t - m > RereadSlackSec) }
-
-  /** The guard verdict: a machine-readable code — `none` / `stale` /
-    * `contended` / `saturated-stale` / `indeterminate` — recorded in the stdout line and
-    * bench_detail.json (VERDICT r16 #4), plus the stderr message when there
-    * is one. Pure — BenchSpec pins every branch, including the r16 driver
-    * run's real numbers as a test vector.
-    *
-    * The stale diagnosis requires BOTH conjuncts (VERDICT r16 #1 — the r16
-    * driver run exposed the flat-controls trigger alone misclassifying the
-    * mild-contention class: 11 tripped under just-flat controls 0.120/0.189,
-    * but 9/11 re-reads adjudicated DOWN, proof the reference was current):
-    *   1. broad trips while both control medians are flat vs their quiet-era
-    *      references, AND
-    *   2. a MAJORITY of completed re-reads reproduce the excess.
-    * Broad flat-controls trips whose re-reads mostly adjudicate down are a
-    * sub-threshold contended window (`contended`), not a stale reference.
-    * Broad flat-controls trips with ZERO completed re-reads (every re-read
-    * threw — pathological) carry NO adjudication evidence in either
-    * direction, so the verdict is `indeterminate` rather than a claim the
-    * reference is current (ADVICE r17: the old message asserted
-    * "the reference is current" on 0/0 evidence).
-    */
-  private[graft] def guardVerdict(
-      tripped: Int, rereadCount: Int, rereadReproduced: Int,
-      ctlMed: Double, stgMed: Double,
-      refCtl: Option[Double], refStg: Option[Double]): (String, Option[String]) = {
-    val controlsFlat = (refCtl, refStg) match {
-      case (Some(c), Some(s)) =>
-        ctlMed <= ControlFlatFactor * c && stgMed <= ControlFlatFactor * s
-      case _ => false
-    }
-    val controlsElevated = (refCtl, refStg) match {
-      case (Some(c), Some(s)) =>
-        ctlMed > ControlFlatFactor * c || stgMed > ControlFlatFactor * s
-      case _ => false
-    }
-    // Strict majority of COMPLETED re-reads; with zero completed re-reads
-    // (every re-read threw — pathological, the failures carry their own
-    // signal) there is no adjudication evidence and the broad-flat branch
-    // hedges to `indeterminate` instead of claiming the reference current.
-    val staleSupported = rereadCount > 0 && 2 * rereadReproduced > rereadCount
-    val rereadsDown = rereadCount - rereadReproduced
-    if (tripped >= StaleTripThreshold && controlsFlat) {
-      if (rereadCount == 0)
-        ("indeterminate",
-          Some(f"[bench] $tripped%d queries tripped the reread gate under flat control medians " +
-            f"(trivial $ctlMed%.3f, staged $stgMed%.3f) but NO re-read completed (every re-read threw) — " +
-            "no adjudication evidence either way: a stale reference cannot be distinguished from a " +
-            "sub-threshold contended window; fix the re-read failures (see stderr above) and re-run " +
-            "before trusting this read or refreshing quiet_medians.json"))
-      else if (staleSupported)
-        ("stale",
-          Some(f"[bench] $tripped%d queries tripped the reread gate under FLAT control medians " +
-            f"(trivial $ctlMed%.3f vs quiet ${refCtl.get}%.3f, staged $stgMed%.3f vs ${refStg.get}%.3f) " +
-            f"and $rereadReproduced%d/$rereadCount%d re-reads REPRODUCED the excess — the medians are " +
-            "unreachable on this tree: quiet_medians.json is stale for this era; refresh it " +
-            "(scripts/make_quiet_medians.py over >=3 quiet runs with flat controls)"))
-      else
-        ("contended",
-          Some(f"[bench] $tripped%d queries tripped the reread gate under flat control medians " +
-            f"(trivial $ctlMed%.3f, staged $stgMed%.3f) but $rereadsDown%d/$rereadCount%d re-reads " +
-            "adjudicated DOWN to ~ their quiet medians — the reference is current and this is a " +
-            "sub-threshold contended window; trust value_adjudicated, do not refresh quiet_medians.json"))
-    } else if (rereadCount >= MaxRereads && controlsElevated)
-      // Saturation under ELEVATED controls: a heavily contended run
-      // (observed live in r16: 194.6 s, controls 0.136/0.200, 50 tripped) —
-      // the reference is not implicated; the adjudicated total and the
-      // re-read trajectory carry the signal.
-      ("contended",
-        Some(f"[bench] adjudication pass SATURATED ($rereadCount%d re-reads = MaxRereads cap, $tripped%d tripped) " +
-          f"under ELEVATED control medians (trivial $ctlMed%.3f vs quiet ${refCtl.get}%.3f, staged $stgMed%.3f " +
-          f"vs ${refStg.get}%.3f) — a heavily contended run, not a stale reference; trust value_adjudicated " +
-          "and the control trajectories, do not chase per-query numbers"))
-    else if (rereadCount >= MaxRereads) {
-      // Refs absent (with refs present, flat/elevated are complements and
-      // saturation implies tripped >= threshold, so the branches above
-      // apply). Without control references the controls cannot grade the
-      // window (ADVICE r16 #3), so the re-read outcomes decide — hedged,
-      // because sustained contention spanning the re-read pass cannot be
-      // fully excluded without the references.
-      if (staleSupported)
-        ("saturated-stale",
-          Some(s"[bench] adjudication pass SATURATED ($rereadCount re-reads = MaxRereads cap, $tripped tripped) " +
-            s"and $rereadReproduced/$rereadCount re-reads REPRODUCED the excess — likely a stale quiet-median " +
-            "reference (refresh quiet_medians.json), though with no _control_med/_control_staged_med references " +
-            "heavy sustained contention cannot be excluded; check the control trajectories in bench_detail.json"))
-      else
-        ("contended",
-          Some(s"[bench] adjudication pass SATURATED ($rereadCount re-reads = MaxRereads cap, $tripped tripped) " +
-            s"but $rereadsDown/$rereadCount re-reads adjudicated DOWN — a contended run, not a stale reference; " +
-            "no _control_med/_control_staged_med references in quiet_medians.json, so confirm via the control " +
-            "trajectories in bench_detail.json; trust value_adjudicated"))
-    } else ("none", None)
-  }
-
   /** A JSON string literal: quotes the value and escapes `"`, `\` and
     * control characters (ADVICE r18 — an `sf` path containing a quote or
-    * backslash previously produced an unparseable ledger line; `ts` and
-    * `guard` are safe by construction but go through the same door).
+    * backslash previously produced an unparseable ledger line, and the stdout
+    * line and detail file interpolated it raw).
     */
   private[graft] def jsonStr(s: String): String =
     s.flatMap {
@@ -330,15 +96,15 @@ object Bench {
     * per-query map: the ledger is the history that must survive a cleanup
     * of the (gitignored, bulky) detail files, not a second copy of them.
     * `ts` is wall-clock ISO-8601 UTC so the ledger orders runs across days
-    * without relying on file mtimes. Pure — BenchSpec pins the shape,
-    * the string escaping, and the locale stability.
+    * without relying on file mtimes; `passes` tells its `total` (per-query
+    * medians of three) from the older min-of-2 lines, which lack the
+    * field. Pure — BenchSpec pins the shape, the string escaping, and the
+    * locale stability.
     */
   private[graft] def composeLedgerLine(
-      ts: String, total: Double, adjudicated: Double,
-      ctlMed: Double, stgMed: Double,
-      tripped: Int, rereadN: Int, guard: String,
+      ts: String, total: Double, ctlMed: Double, stgMed: Double,
       gcSec: Double, sf: String): String =
-    s"""{"ts":${jsonStr(ts)},"total":${rootF("%.3f", total)},"value_adjudicated":${rootF("%.3f", adjudicated)},"control_med":${rootF("%.3f", ctlMed)},"control_staged_med":${rootF("%.3f", stgMed)},"tripped_n":$tripped,"reread_n":$rereadN,"guard":${jsonStr(guard)},"gc_sec":${rootF("%.1f", gcSec)},"sf":${jsonStr(sf)}}"""
+    s"""{"ts":${jsonStr(ts)},"total":${rootF("%.3f", total)},"passes":$Passes,"control_med":${rootF("%.3f", ctlMed)},"control_staged_med":${rootF("%.3f", stgMed)},"gc_sec":${rootF("%.1f", gcSec)},"sf":${jsonStr(sf)}}"""
 
   /** Stdout-line length contract: the driver captures only the last ~2000
     * chars of the run log, and sbt prints its own `[success] Total time …`
@@ -351,10 +117,10 @@ object Bench {
     */
   private[graft] val LineBudget = 1880
   /** Below this many chars for the kept-queries map, the line switches to
-    * compact mode: the reread map and failed/flaky lists collapse to
-    * `{}`/`[]` (their counts survive in the always-present
-    * `reread_n`/`failed_n`/`flaky_n` fields; the detail file keeps the full
-    * structures), so the budget floor never forces an overflow.
+    * compact mode: the failed/flaky lists collapse to `[]` (their counts
+    * survive in the always-present `failed_n`/`flaky_n` fields; the detail
+    * file keeps the full lists), so the budget floor never forces an
+    * overflow.
     */
   private[graft] val MinKeptBudget = 300
 
@@ -372,34 +138,23 @@ object Bench {
       nQueries: Int,
       sfDir: String,
       ctlMed: Double, ctlMax: Double, stgMed: Double, stgMax: Double,
-      reread: Map[String, Double],
-      rereadRef: Int,
-      tripped: Int,
-      guard: String,
-      adjudicated: Double,
-      gcRereadSec: Double,
       failed: Seq[String],
       flaky: Seq[String],
       gcSec: Double): String = {
     def jnames(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     // sfDir is env-supplied and unbounded; the detail file keeps it whole.
-    val sfShown = if (sfDir.length <= 60) sfDir else "..." + sfDir.takeRight(57)
-    def render(kept: String, nOmitted: Int, omittedSec: Double,
-               rrS: String, fS: String, flS: String): String =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":{$kept},"queries_omitted":$nOmitted,"omitted_sec":$omittedSec%.3f,"n_queries":$nQueries,"sf":"$sfShown","passes":2,"interleaved":true,"control_med":$ctlMed%.3f,"control_max":$ctlMax%.3f,"control_staged_med":$stgMed%.3f,"control_staged_max":$stgMax%.3f,"reread":$rrS,"reread_n":${reread.size},"reread_ref":$rereadRef,"tripped_n":$tripped,"guard":"$guard","value_adjudicated":$adjudicated%.3f,"gc_reread_sec":$gcRereadSec%.1f,"failed":$fS,"failed_n":${failed.size},"flaky":$flS,"flaky_n":${flaky.size},"gc_sec":$gcSec%.1f,"detail":"bench_detail.json"}"""
-    val rrFull = reread.toSeq.sorted
-      .map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
+    val sfShown = jsonStr(if (sfDir.length <= 60) sfDir else "..." + sfDir.takeRight(57))
+    def render(kept: String, nOmitted: Int, omittedSec: Double, fS: String, flS: String): String =
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":{$kept},"queries_omitted":$nOmitted,"omitted_sec":$omittedSec%.3f,"n_queries":$nQueries,"sf":$sfShown,"passes":$Passes,"interleaved":true,"control_med":$ctlMed%.3f,"control_max":$ctlMax%.3f,"control_staged_med":$stgMed%.3f,"control_staged_max":$stgMax%.3f,"failed":$fS,"failed_n":${failed.size},"flaky":$flS,"flaky_n":${flaky.size},"gc_sec":$gcSec%.1f,"detail":"bench_detail.json"}"""
     // Fixed overhead MEASURED on the empty-kept render: with zero kept
     // entries, queries_omitted/omitted_sec take their widest values
     // (nQueries/total), so this length upper-bounds the fixed part of any
     // final render — keeping entries only shrinks those two fields.
-    def fixed(rrS: String, fS: String, flS: String): Int =
-      render("", nQueries, total, rrS, fS, flS).length
-    val (rrS, fS, flS) =
-      if (LineBudget - fixed(rrFull, jnames(failed), jnames(flaky)) >= MinKeptBudget)
-        (rrFull, jnames(failed), jnames(flaky))
-      else ("{}", "[]", "[]")
-    val budget = LineBudget - fixed(rrS, fS, flS)
+    def fixed(fS: String, flS: String): Int = render("", nQueries, total, fS, flS).length
+    val (fS, flS) =
+      if (LineBudget - fixed(jnames(failed), jnames(flaky)) >= MinKeptBudget) (jnames(failed), jnames(flaky))
+      else ("[]", "[]")
+    val budget = LineBudget - fixed(fS, flS)
     val kept = new StringBuilder
     var nKept = 0
     var full = false
@@ -412,7 +167,7 @@ object Bench {
       else full = true
     }
     val omitted = byCost.drop(nKept)
-    render(kept.result(), omitted.size, omitted.map(_._2).sum, rrS, fS, flS)
+    render(kept.result(), omitted.size, omitted.map(_._2).sum, fS, flS)
   }
 
   def main(args: Array[String]): Unit = {
@@ -536,49 +291,15 @@ object Bench {
         slot += 1
         once(name, fn)
       }
-    val pass1 = passOver()
-    val pass2 = passOver()
+    val passes = (1 to Passes).map(_ => passOver())
     val gcSec = (gcMillis - gc0) / 1000.0
-    val runs = namesSorted.zip(pass1).zip(pass2).map { case (((name, _), a), b) =>
-      name -> Seq(a, b).flatten
-    }
+    val runs = namesSorted.map(_._1).zip(passes.transpose).map { case (name, ts) => name -> ts.flatten }
 
     val results = runs.collect { case (name, ts) if ts.nonEmpty =>
-      name -> ts.map { case (b, e) => b + e }.min
+      name -> medianOf(ts.map { case (b, e) => b + e }.sorted)
     }
     val failed = runs.collect { case (name, ts) if ts.isEmpty => name }
-    val flaky = runs.collect { case (name, ts) if ts.size == 1 => name }
-
-    // The adjudication pass (see the header): re-read the worst
-    // quiet-median outliers once, minutes after their inflated samples,
-    // controls still sampled on the same cadence so the re-read window's
-    // environment is itself diagnosable from the trajectories.
-    val fnByName = namesSorted.toMap
-    // `reread_ref` (the loaded median count) distinguishes "nothing tripped
-    // the gate" from "the harness was OFF" (missing/malformed medians file,
-    // or a wrong CWD) — an empty reread map alone cannot tell them apart.
-    val medText = quietMediansText()
-    val medians = parseQuietMedians(medText)
-    val gcReread0 = gcMillis
-    val reread = rereadSelection(results, medians).flatMap { name =>
-      // A control pair per re-read (not per ControlEvery): the re-reads ARE
-      // the adjudication evidence, so their window must be densely
-      // diagnosable — a GC- or contention-inflated re-read that reproduces
-      // the elevated first read must be attributable from the artifact
-      // before it triggers a probe round. ~0.25 s per pair against ≥0.7 s
-      // re-reads.
-      controls += ((slot, controlOnce()))
-      stagedControls += ((slot, stagedControlOnce()))
-      slot += 1
-      once(name, fnByName(name)).map { case (b, e) => name -> (b + e) }
-    }.toMap
-    val gcRereadSec = (gcMillis - gcReread0) / 1000.0
-    // First reads stay authoritative in `queries`/`value`; the adjudicated
-    // total substitutes the re-read where it is FASTER (a re-read that
-    // reproduces the elevated number confirms the first read instead).
-    val adjudicated = results.map { case (name, t) =>
-      math.min(t, reread.getOrElse(name, t))
-    }.sum
+    val flaky = runs.collect { case (name, ts) if ts.nonEmpty && ts.size < Passes => name }
 
     def names(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
@@ -590,7 +311,7 @@ object Bench {
     // chars of the run log, and a 119-query JSON line is ~3× that — every
     // prior round's stdout line was head-truncated into unparseability.
     val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
-    val passes = runs.collect { case (name, ts) if ts.nonEmpty =>
+    val passTimes = runs.collect { case (name, ts) if ts.nonEmpty =>
       "\"" + name + "\":" + ts.map { case (b, e) => f"${b + e}%.3f" }.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     // Per-pass (build, exec) pairs — the phase attribution behind pass_times.
@@ -599,34 +320,21 @@ object Bench {
         ts.map { case (b, e) => f"[$b%.3f,$e%.3f]" }.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     // Control trajectories: [slot, seconds] per probe, slots counted across
-    // both passes (slot n_queries = start of pass 2). `control` is the
+    // all passes (slot k·n_queries = start of pass k+1). `control` is the
     // 2-stage trivial probe (CPU-contention signal); `control_staged` the
     // ~6-sequential-stage byte-light probe (per-stage-latency signal).
     val ctl = controls.map { case (i, t) => f"[$i,$t%.3f]" }.mkString("[", ",", "]")
     val ctlStaged = stagedControls.map { case (i, t) => f"[$i,$t%.3f]" }.mkString("[", ",", "]")
-    val rr = reread.toSeq.sorted
-      .map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
     val ctlSorted = controls.map(_._2).sorted
     val ctlMed = medianOf(ctlSorted)
     val ctlMax = if (ctlSorted.isEmpty) 0.0 else ctlSorted.last
     val stgSorted = stagedControls.map(_._2).sorted
     val stgMed = medianOf(stgSorted)
     val stgMax = if (stgSorted.isEmpty) 0.0 else stgSorted.last
-    // Guard verdict (VERDICT r16 #1/#4): the trip count is the UNCAPPED
-    // candidate set (the stale signal must not be masked by the re-read
-    // cap), and the stale-vs-contended call reads the re-read OUTCOMES —
-    // both recorded in the artifacts so the diagnosis needs no recompute.
-    val trippedN = rereadCandidates(results, medians).size
-    val (guard, guardNote) = guardVerdict(
-      tripped = trippedN, rereadCount = reread.size,
-      rereadReproduced = rereadReproducedCount(reread, medians),
-      ctlMed = ctlMed, stgMed = stgMed,
-      refCtl = parseMetaMedian(medText, "_control_med"),
-      refStg = parseMetaMedian(medText, "_control_staged_med"))
     val detailPath = java.nio.file.Paths.get("bench_detail.json")
     java.nio.file.Files.writeString(
       detailPath,
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"pass_times":$passes,"pass_build_exec":$phased,"control":$ctl,"control_staged":$ctlStaged,"reread":$rr,"reread_ref":${medians.size},"tripped_n":$trippedN,"guard":"$guard","value_adjudicated":$adjudicated%.3f,"gc_reread_sec":$gcRereadSec%.1f,"sf":"$sfDir","passes":2,"interleaved":true,"failed":${names(
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"pass_times":$passTimes,"pass_build_exec":$phased,"control":$ctl,"control_staged":$ctlStaged,"sf":${jsonStr(sfDir)},"passes":$Passes,"interleaved":true,"failed":${names(
           failed)},"flaky":${names(flaky)},"gc_sec":$gcSec%.1f}""")
     // Preserve this run's detail against the next run's overwrite (VERDICT
     // r15 #5: the r14 driver per-query detail was lost to a clobber before
@@ -645,10 +353,7 @@ object Bench {
       val line = composeLedgerLine(
         ts = java.time.Instant.now()
           .truncatedTo(java.time.temporal.ChronoUnit.SECONDS).toString,
-        total = total, adjudicated = adjudicated,
-        ctlMed = ctlMed, stgMed = stgMed,
-        tripped = trippedN, rereadN = reread.size, guard = guard,
-        gcSec = gcSec, sf = sfDir)
+        total = total, ctlMed = ctlMed, stgMed = stgMed, gcSec = gcSec, sf = sfDir)
       java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_ledger.jsonl"),
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
@@ -662,17 +367,12 @@ object Bench {
     }
 
     val byCost = results.sortBy { case (n, t) => (-t, n) }
-    // Guard message on stderr, BEFORE the stdout line so the tail keeps the
-    // machine-parseable line last; the code itself rides in both artifacts.
-    guardNote.foreach(System.err.println)
     // Stdout line — must survive the driver's 2000-char log tail INTACT to
     // be machine-parseable; see composeStdoutLine for the measured budget
     // and the compact fallback.
     println(composeStdoutLine(
       total, byCost, results.size, sfDir,
-      ctlMed, ctlMax, stgMed, stgMax,
-      reread, medians.size, trippedN, guard, adjudicated, gcRereadSec,
-      failed, flaky, gcSec))
+      ctlMed, ctlMax, stgMed, stgMax, failed, flaky, gcSec))
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

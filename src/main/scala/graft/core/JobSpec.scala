@@ -37,6 +37,7 @@ final case class JobSpec(
     else if (mapKilobytes <= 0) Left(s"map_kilobytes must be > 0, got $mapKilobytes")
     else if (userId.isEmpty) Left("user_id must be non-empty")
     else if (inputFiles.isEmpty) Left("input_files must be non-empty")
+    else if (outputDir.isEmpty) Left("output_dir must be non-empty")
     else
       inputFiles.find(f => !Files.isReadable(Paths.get(f))) match {
         case Some(f) => Left(s"input file not readable: $f")

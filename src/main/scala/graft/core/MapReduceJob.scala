@@ -10,6 +10,7 @@ import java.io.{BufferedWriter, IOException, OutputStreamWriter}
 import java.nio.charset.StandardCharsets
 import java.util.UUID
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** The whole reference runtime, Spark-first.
   *
@@ -197,11 +198,16 @@ object MapReduceJob {
     * under a hidden staging sibling of `outputDir` (`.<name>.staging-<uuid>`,
     * same filesystem) and returns `(partition, file)`. The driver takes the
     * accepted attempt of each partition — exactly `0 until R`, or the job
-    * fails — renames it to `final/{user_id}_result_{r}`, then replaces
-    * `outputDir` with `final` by one directory rename. A failed or
-    * speculative attempt writes only under `attempts/`, never into the
-    * published directory, and a failed job leaves the previous `outputDir`
-    * untouched. Attempt files are created non-recursively, so a straggler
+    * fails — renames it to `final/{user_id}_result_{r}`, then publishes
+    * `final` in two directory renames: the previous `outputDir` to
+    * `previous` under staging, then `final` to `outputDir`. If the second
+    * rename fails, `previous` is renamed back; if that fails too, staging is
+    * kept and the exception names where the previous output is. Deleting
+    * staging deletes the replaced output with it. A failed or speculative
+    * attempt writes only under `attempts/`, never into the published
+    * directory, and a failed job leaves the previous `outputDir` untouched;
+    * a driver that dies between the two renames leaves it under the staging
+    * sibling. Attempt files are created non-recursively, so a straggler
     * outliving the job cannot recreate the staging directory once it is
     * deleted. Tasks read the Hadoop conf from one broadcast instead of
     * carrying it in every task closure.
@@ -221,6 +227,7 @@ object MapReduceJob {
     val staging = new Path(out.getParent, s".${out.getName}.staging-${UUID.randomUUID()}")
     val attempts = new Path(staging, "attempts").toString
     val conf = job.sparkContext.broadcast(new SerializableConfiguration(hadoopConf)) // bounded: one Hadoop conf
+    var keepStaging = false
     try {
       if (!fs.mkdirs(new Path(attempts))) throw new IOException(s"failed to create $attempts")
       val written = reduced.mapPartitions { it =>
@@ -238,11 +245,24 @@ object MapReduceJob {
       val published = new Path(staging, "final")
       if (!fs.mkdirs(published)) throw new IOException(s"failed to create $published")
       written.foreach { case (r, file) => rename(fs, new Path(file), new Path(published, s"${userId}_result_$r")) }
-      if (fs.exists(out) && !fs.delete(out, true)) throw new IOException(s"failed to delete $out")
-      rename(fs, published, out)
+      val previous = new Path(staging, "previous")
+      val replacing = fs.exists(out)
+      if (replacing) rename(fs, out, previous)
+      try rename(fs, published, out)
+      catch { case NonFatal(e) if replacing =>
+        try rename(fs, previous, out)
+        catch { case NonFatal(r) =>
+          keepStaging = true
+          val lost = new IOException(
+            s"failed to publish $published to $out, and to restore the previous output: it is at $previous", e)
+          lost.addSuppressed(r)
+          throw lost
+        }
+        throw e
+      }
     } finally {
       conf.destroy()
-      fs.delete(staging, true)
+      if (!keepStaging) fs.delete(staging, true)
     }
   }
 

@@ -2,206 +2,20 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the bench's self-healing adjudication pass (VERDICT r14 #1) and its
-  * r16 hardening (VERDICT r15 #4/#5 + ADVICE r15): which queries get re-read
-  * at the end of a run, how the quiet-median reference file is parsed (and
-  * that string values cannot inject entries), when the stale-reference guard
-  * warns, and that the stdout line is length-bounded on pathological inputs.
-  * Pure-function tests — the pass itself runs inside Bench.main against the
-  * live session.
+/** Pins the bench's artifacts: the median it reports, the ledger line's
+  * shape and escaping, the tracked ledger's history, and that the stdout
+  * line is length-bounded and parseable on pathological inputs.
+  * Pure-function tests — the passes themselves run inside Bench.main
+  * against the live session.
   */
 class BenchSpec extends AnyFunSuite {
-
-  test("quiet-median parse: one-entry-per-line numeric entries in, meta and junk out") {
-    // The real file shape: json.dump(..., indent=0) — every entry alone on
-    // its own column-0 line.
-    val text =
-      """{
-        |"_provenance": "median of 3 quiet sf0.1 runs, r15",
-        |"_control_med": 0.104,
-        |"q1": 0.35,
-        |"dd_containment": 1.70,
-        |"weird": "string",
-        |"n": 2
-        |}""".stripMargin
-    val m = Bench.parseQuietMedians(text)
-    assert(m == Map("q1" -> 0.35, "dd_containment" -> 1.70, "n" -> 2.0))
-    assert(Bench.parseQuietMedians("") == Map.empty)
-    assert(Bench.parseQuietMedians("not json at all") == Map.empty)
-  }
-
-  test("quiet-median parse: numbers inside string values cannot inject entries (ADVICE r15)") {
-    // A caller-supplied provenance label containing an escaped quoted name
-    // followed by a number — the line-start anchor must reject it, and a
-    // mid-line entry (not the file's shape) must not parse either.
-    val adversarial =
-      """{
-        |"_provenance": "runs relabeled: \"dd_containment\": 0.01 via make_quiet_medians.py",
-        |"q1": 0.35, "smuggled_midline": 9.99,
-        |"q2": 0.50
-        |}""".stripMargin
-    val m = Bench.parseQuietMedians(adversarial)
-    assert(m == Map("q2" -> 0.50))
-    assert(!m.contains("dd_containment") && !m.contains("smuggled_midline") && !m.contains("q1"))
-  }
-
-  test("meta-median parse: underscore references read, absent keys None") {
-    val text =
-      """{
-        |"_provenance": "x",
-        |"_control_med": 0.104,
-        |"_control_staged_med": 0.153,
-        |"q1": 0.35
-        |}""".stripMargin
-    assert(Bench.parseMetaMedian(text, "_control_med").contains(0.104))
-    assert(Bench.parseMetaMedian(text, "_control_staged_med").contains(0.153))
-    assert(Bench.parseMetaMedian(text, "_absent").isEmpty)
-    assert(Bench.parseMetaMedian("", "_control_med").isEmpty)
-  }
-
-  test("reread selection: relative factor AND absolute slack both required") {
-    val medians = Map("big" -> 1.0, "small" -> 0.1, "nearby" -> 1.0)
-    val results = Seq(
-      "big" -> 1.9, // 1.9x, +0.9s  -> selected
-      "small" -> 0.2, // 2.0x but +0.1s < slack -> scheduler noise, skipped
-      "nearby" -> 1.3, // +0.3s but 1.3x < factor -> inside swing, skipped
-      "unknown" -> 9.0) // no recorded median -> skipped
-    assert(Bench.rereadSelection(results, medians) == Seq("big"))
-  }
-
-  test("reread selection: worst absolute excess first, capped at MaxRereads; candidates uncapped") {
-    val n = Bench.MaxRereads + 8
-    val medians = (1 to n).map(i => s"q$i" -> 1.0).toMap
-    // q1 has the largest excess, descending from there; all trip the gate.
-    val results = (1 to n).map(i => s"q$i" -> (2.0 + (n - i) * 0.01))
-    val sel = Bench.rereadSelection(results, medians)
-    assert(sel.size == Bench.MaxRereads)
-    assert(sel == (1 to Bench.MaxRereads).map(i => s"q$i"))
-    // The candidate set is the UNCAPPED stale-reference signal.
-    assert(Bench.rereadCandidates(results, medians).size == n)
-    // Ties break by name so the pass is deterministic across runs.
-    val tied = Seq("b" -> 2.0, "a" -> 2.0)
-    assert(Bench.rereadSelection(tied, Map("a" -> 1.0, "b" -> 1.0)) == Seq("a", "b"))
-  }
-
-  test("reread-reproduced count: a re-read still past BOTH gates reproduces the excess") {
-    val medians = Map("big" -> 1.0, "small" -> 0.1, "down" -> 1.0)
-    val reread = Map(
-      "big" -> 1.9, // 1.9x, +0.9s  -> reproduced
-      "small" -> 0.2, // 2.0x but +0.1s < slack -> not reproduced
-      "down" -> 1.05, // adjudicated down -> not reproduced
-      "unknown" -> 9.0) // no recorded median -> not countable
-    assert(Bench.rereadReproducedCount(reread, medians) == 1)
-    assert(Bench.rereadReproducedCount(Map.empty, medians) == 0)
-  }
-
-  test("guard verdict: the r16 DRIVER run diagnoses a contended window, not stale medians (VERDICT r16 #1)") {
-    // The real r16 driver numbers: 11 tripped, 11 completed re-reads,
-    // controls 0.120/0.189 — just under the 1.3x flat factor vs quiet refs
-    // 0.104/0.153 — and 9/11 re-reads adjudicated DOWN (only dd_containment
-    // 3.439 vs med 2.26 and ev_rfm 1.760 vs 1.032 reproduced). The old
-    // flat-controls-only trigger printed "refresh quiet_medians.json" here;
-    // the outcome conjunct must read the re-reads and say contended.
-    val (code, msg) = Bench.guardVerdict(
-      tripped = 11, rereadCount = 11, rereadReproduced = 2,
-      ctlMed = 0.120, stgMed = 0.189, refCtl = Some(0.104), refStg = Some(0.153))
-    assert(code == "contended")
-    assert(msg.exists(_.contains("contended")))
-    assert(msg.exists(_.contains("9/11")))
-    assert(!msg.exists(_.contains("refresh it")))
-    assert(msg.exists(_.contains("do not refresh quiet_medians.json")))
-  }
-
-  test("guard verdict: broad flat-control trips need majority-REPRODUCED re-reads to diagnose stale") {
-    val refs = (Some(0.104), Some(0.153))
-    // Majority reproduced under flat controls -> the medians are stale.
-    val (stale, warn) = Bench.guardVerdict(
-      tripped = 11, rereadCount = 11, rereadReproduced = 9,
-      ctlMed = 0.108, stgMed = 0.160, refCtl = refs._1, refStg = refs._2)
-    assert(stale == "stale")
-    assert(warn.exists(s => s.contains("stale") && s.contains("refresh")))
-    // Exactly half reproduced is NOT a majority -> contended.
-    assert(Bench.guardVerdict(
-      tripped = 10, rereadCount = 10, rereadReproduced = 5,
-      ctlMed = 0.108, stgMed = 0.160, refCtl = refs._1, refStg = refs._2)._1 == "contended")
-    // Zero completed re-reads cannot support staleness — and cannot support
-    // "the reference is current" either (ADVICE r17): with 0/0 adjudication
-    // evidence the verdict must HEDGE, not claim contention.
-    val (zCode, zMsg) = Bench.guardVerdict(
-      tripped = Bench.StaleTripThreshold, rereadCount = 0, rereadReproduced = 0,
-      ctlMed = 0.108, stgMed = 0.160, refCtl = refs._1, refStg = refs._2)
-    assert(zCode == "indeterminate")
-    assert(zMsg.exists(_.contains("NO re-read completed")))
-    assert(zMsg.exists(_.contains("no adjudication evidence")))
-    assert(!zMsg.exists(_.contains("the reference is current")))
-    // Broad trips under ELEVATED controls, below the cap -> no verdict
-    // (ordinary contended samples; the controls already grade the run).
-    assert(Bench.guardVerdict(
-      tripped = Bench.StaleTripThreshold, rereadCount = Bench.StaleTripThreshold,
-      rereadReproduced = Bench.StaleTripThreshold,
-      ctlMed = 0.25, stgMed = 0.40, refCtl = refs._1, refStg = refs._2) == ("none", None))
-    // Few trips under flat controls -> ordinary window noise, no verdict.
-    assert(Bench.guardVerdict(
-      tripped = Bench.StaleTripThreshold - 1, rereadCount = Bench.StaleTripThreshold - 1,
-      rereadReproduced = Bench.StaleTripThreshold - 1,
-      ctlMed = 0.108, stgMed = 0.160, refCtl = refs._1, refStg = refs._2) == ("none", None))
-    // ONE staged-control spike past the flat factor also blocks the stale
-    // verdict (both medians must be flat).
-    assert(Bench.guardVerdict(
-      tripped = 20, rereadCount = 20, rereadReproduced = 20,
-      ctlMed = 0.108, stgMed = 0.30, refCtl = refs._1, refStg = refs._2) == ("none", None))
-  }
-
-  test("guard verdict: cap saturation without references reads the re-read outcomes, hedged (ADVICE r16 #3)") {
-    // Majority reproduced -> likely-stale, but the message must hedge (no
-    // control references means heavy sustained contention is not excluded).
-    val (code, sat) = Bench.guardVerdict(
-      tripped = 30, rereadCount = Bench.MaxRereads, rereadReproduced = 20,
-      ctlMed = 0.108, stgMed = 0.160, refCtl = None, refStg = None)
-    assert(code == "saturated-stale")
-    assert(sat.exists(s => s.contains("SATURATED") && s.contains("refresh quiet_medians.json")))
-    assert(sat.exists(s => s.contains("contention cannot be excluded") && s.contains("control trajectories")))
-    // Majority adjudicated down -> contended even at saturation.
-    val (code2, sat2) = Bench.guardVerdict(
-      tripped = 30, rereadCount = Bench.MaxRereads, rereadReproduced = 4,
-      ctlMed = 0.108, stgMed = 0.160, refCtl = None, refStg = None)
-    assert(code2 == "contended")
-    assert(sat2.exists(s => s.contains("adjudicated DOWN") && !s.contains("refresh quiet_medians.json")))
-    // Below the cap with no references: nothing to conclude.
-    assert(Bench.guardVerdict(
-      tripped = 5, rereadCount = 5, rereadReproduced = 5,
-      ctlMed = 0.108, stgMed = 0.160, refCtl = None, refStg = None) == ("none", None))
-  }
-
-  test("guard verdict: saturation under ELEVATED controls diagnoses contention, not staleness") {
-    // The live r16 case: 50 tripped, 24 re-reads, controls 0.136/0.200 vs
-    // quiet 0.104/0.153 — a heavily contended run. The message must NOT
-    // tell the operator to refresh the reference, regardless of how many
-    // re-reads reproduced (the window spans the adjudication pass too).
-    val (code, sat) = Bench.guardVerdict(
-      tripped = 50, rereadCount = Bench.MaxRereads, rereadReproduced = Bench.MaxRereads,
-      ctlMed = 0.136, stgMed = 0.200, refCtl = Some(0.104), refStg = Some(0.153))
-    assert(code == "contended")
-    assert(sat.exists(s => s.contains("ELEVATED") && s.contains("contended")))
-    assert(!sat.exists(_.contains("refresh quiet_medians.json")))
-    // Saturation with flat controls and refs present falls into the
-    // broad-trip branch (cap <= trips), where the outcome conjunct rules:
-    val (flatCode, flatMsg) = Bench.guardVerdict(
-      tripped = Bench.MaxRereads, rereadCount = Bench.MaxRereads,
-      rereadReproduced = Bench.MaxRereads,
-      ctlMed = 0.108, stgMed = 0.160, refCtl = Some(0.104), refStg = Some(0.153))
-    assert(flatCode == "stale")
-    assert(flatMsg.exists(_.contains("stale")))
-  }
 
   private def parseJson(line: String): com.fasterxml.jackson.databind.JsonNode =
     new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
 
   test("medianOf: true median — matches Python statistics.median on even counts (ADVICE r17)") {
-    // The run-time control medians and the _control_med references they are
-    // compared against (ControlFlatFactor) must be the SAME statistic: the
-    // old upper-middle convention read sorted(0.1, 0.2) as 0.2 where the
-    // reference builder's statistics.median reads 0.15.
+    // Even counts (a flaky query with two surviving passes, the control
+    // samples) take the mean of the two middle values, not the upper one.
     assert(Bench.medianOf(Nil) == 0.0)
     assert(Bench.medianOf(Seq(0.5)) == 0.5)
     assert(math.abs(Bench.medianOf(Seq(0.1, 0.2)) - 0.15) < 1e-12)
@@ -211,25 +25,20 @@ class BenchSpec extends AnyFunSuite {
 
   test("ledger line: one parseable JSON line with the pinned compact fields (VERDICT r17 #2)") {
     val line = Bench.composeLedgerLine(
-      ts = "2026-08-16T19:21:03Z", total = 137.144, adjudicated = 132.969,
-      ctlMed = 0.101, stgMed = 0.148, tripped = 4, rereadN = 4,
-      guard = "none", gcSec = 4.0, sf = "/root/testdata/sf0.1")
+      ts = "2026-08-16T19:21:03Z", total = 137.144,
+      ctlMed = 0.101, stgMed = 0.148, gcSec = 4.0, sf = "/root/testdata/sf0.1")
     assert(!line.contains("\n"), "a ledger entry is exactly one line")
     val node = parseJson(line)
-    // The pinned shape: exactly these ten fields, no per-query map — the
+    // The pinned shape: exactly these seven fields, no per-query map — the
     // ledger is the durable compact history, not a second detail file.
     import scala.jdk.CollectionConverters._
     assert(node.properties().asScala.map(_.getKey).toSet == Set(
-      "ts", "total", "value_adjudicated", "control_med", "control_staged_med",
-      "tripped_n", "reread_n", "guard", "gc_sec", "sf"))
+      "ts", "total", "passes", "control_med", "control_staged_med", "gc_sec", "sf"))
     assert(node.get("ts").asText() == "2026-08-16T19:21:03Z")
     assert(node.get("total").asDouble() == 137.144)
-    assert(node.get("value_adjudicated").asDouble() == 132.969)
+    assert(node.get("passes").asInt() == 3)
     assert(node.get("control_med").asDouble() == 0.101)
     assert(node.get("control_staged_med").asDouble() == 0.148)
-    assert(node.get("tripped_n").asInt() == 4)
-    assert(node.get("reread_n").asInt() == 4)
-    assert(node.get("guard").asText() == "none")
     assert(node.get("gc_sec").asDouble() == 4.0)
     assert(node.get("sf").asText() == "/root/testdata/sf0.1")
   }
@@ -243,9 +52,8 @@ class BenchSpec extends AnyFunSuite {
     try {
       java.util.Locale.setDefault(java.util.Locale.GERMANY)
       val line = Bench.composeLedgerLine(
-        ts = "2026-08-16T19:21:03Z", total = 137.144, adjudicated = 132.969,
-        ctlMed = 0.101, stgMed = 0.148, tripped = 4, rereadN = 4,
-        guard = "none", gcSec = 4.0, sf = "/tmp/sf \"odd\\path\"\n")
+        ts = "2026-08-16T19:21:03Z", total = 137.144,
+        ctlMed = 0.101, stgMed = 0.148, gcSec = 4.0, sf = "/tmp/sf \"odd\\path\"\n")
       val node = parseJson(line)
       assert(node.get("total").asDouble() == 137.144, "decimal point, not comma")
       assert(node.get("sf").asText() == "/tmp/sf \"odd\\path\"\n")
@@ -256,17 +64,17 @@ class BenchSpec extends AnyFunSuite {
   test("ledger file: every line parses, fields pinned, ts monotone per sf (VERDICT r18 #5)") {
     // The tracked bench_ledger.jsonl is the durable history — keep the
     // backfilled + live-appended lines self-verifying as the file grows.
-    // Backfilled pre-field lines carry null values but the same ten keys.
+    // Older min-of-2 lines carry more keys (and backfilled nulls); every
+    // line carries at least these.
     import scala.jdk.CollectionConverters._
-    val pinned = Set("ts", "total", "value_adjudicated", "control_med",
-      "control_staged_med", "tripped_n", "reread_n", "guard", "gc_sec", "sf")
+    val required = Set("ts", "total", "control_med", "control_staged_med", "gc_sec", "sf")
     val lines = java.nio.file.Files.readAllLines(
       java.nio.file.Paths.get("bench_ledger.jsonl")).asScala.filter(_.nonEmpty)
     assert(lines.nonEmpty, "the ledger exists and is non-empty")
     val rows = lines.map { l =>
       val node = parseJson(l)   // throws on an unparseable line
-      assert(node.properties().asScala.map(_.getKey).toSet == pinned,
-        s"pinned field set on: $l")
+      assert(required.subsetOf(node.properties().asScala.map(_.getKey).toSet),
+        s"required fields on: $l")
       def text(k: String) = { val n = node.get(k); if (n.isTextual) Some(n.asText) else None }
       (text("sf"), text("ts"))
     }
@@ -279,51 +87,47 @@ class BenchSpec extends AnyFunSuite {
   test("stdout line: bounded and parseable on a typical full-gate run") {
     val byCost = (1 to 256).map(i => f"query_name_$i%03d" -> (3.0 - i * 0.01))
       .sortBy { case (n, t) => (-t, n) }
-    val reread = byCost.take(4).map { case (n, t) => n -> t / 2 }.toMap
     val line = Bench.composeStdoutLine(
       total = byCost.map(_._2).sum, byCost = byCost, nQueries = 256,
       sfDir = "/root/testdata/sf0.1",
       ctlMed = 0.108, ctlMax = 0.308, stgMed = 0.160, stgMax = 0.481,
-      reread = reread, rereadRef = 256, tripped = 4, guard = "none",
-      adjudicated = 137.0,
-      gcRereadSec = 0.0, failed = Nil, flaky = Nil, gcSec = 3.5)
+      failed = Nil, flaky = Nil, gcSec = 3.5)
     assert(line.length <= Bench.LineBudget, s"line ${line.length} > budget")
     val node = parseJson(line)
-    assert(node.get("n_queries").asInt() == 256)
-    assert(node.get("reread_n").asInt() == 4)
-    assert(node.get("reread").size() == 4)
-    // The guard verdict rides in the line (VERDICT r16 #4).
-    assert(node.get("tripped_n").asInt() == 4)
-    assert(node.get("guard").asText() == "none")
-    // value == sum(kept) + omitted_sec (nothing silently dropped).
     import scala.jdk.CollectionConverters._
+    assert(node.properties().asScala.map(_.getKey).toSet == Set(
+      "metric", "value", "unit", "queries", "queries_omitted", "omitted_sec", "n_queries", "sf",
+      "passes", "interleaved", "control_med", "control_max", "control_staged_med",
+      "control_staged_max", "failed", "failed_n", "flaky", "flaky_n", "gc_sec", "detail"))
+    assert(node.get("n_queries").asInt() == 256)
+    assert(node.get("passes").asInt() == 3)
+    assert(node.get("sf").asText() == "/root/testdata/sf0.1")
+    // value == sum(kept) + omitted_sec (nothing silently dropped).
     val keptSum = node.get("queries").properties().asScala.map(_.getValue.asDouble()).sum
     assert(math.abs(
       node.get("value").asDouble() - keptSum - node.get("omitted_sec").asDouble()) < 0.05)
   }
 
-  test("stdout line: bounded and parseable on a pathological run (max rereads, long names, failures)") {
+  test("stdout line: bounded and parseable on a pathological run") {
+    // Long names, 80 failed or flaky queries, and an sf path with a quote
+    // and a backslash in its shown tail.
     val byCost = (1 to 256)
       .map(i => f"extremely_long_query_name_for_overflow_testing_$i%03d" -> (5.0 - i * 0.01))
       .sortBy { case (n, t) => (-t, n) }
-    val reread = byCost.take(Bench.MaxRereads).map { case (n, t) => n -> t }.toMap
     val failed = byCost.slice(30, 70).map(_._1)
     val flaky = byCost.slice(70, 110).map(_._1)
+    val sfDir = "/an/extremely/long/env/supplied/scale/factor/directory/path/that/would/alone/blow/a/fixed/\"estimate\"\\sf0.1"
     val line = Bench.composeStdoutLine(
-      total = byCost.map(_._2).sum, byCost = byCost, nQueries = 256,
-      sfDir = "/an/extremely/long/env/supplied/scale/factor/directory/path/that/would/alone/blow/a/fixed/estimate/sf0.1",
+      total = byCost.map(_._2).sum, byCost = byCost, nQueries = 256, sfDir = sfDir,
       ctlMed = 0.308, ctlMax = 1.308, stgMed = 0.660, stgMax = 1.481,
-      reread = reread, rereadRef = 256, tripped = 250, guard = "saturated-stale",
-      adjudicated = 400.0,
-      gcRereadSec = 12.3, failed = failed, flaky = flaky, gcSec = 33.5)
+      failed = failed, flaky = flaky, gcSec = 33.5)
     assert(line.length <= Bench.LineBudget, s"line ${line.length} > budget")
     val node = parseJson(line)
-    // Compact mode engaged: structures collapsed, counts preserved.
-    assert(node.get("reread_n").asInt() == Bench.MaxRereads)
+    assert(node.get("sf").asText() == "..." + sfDir.takeRight(57))
+    // Compact mode engaged: lists collapsed, counts preserved.
+    assert(node.get("failed").size() == 0 && node.get("flaky").size() == 0)
     assert(node.get("failed_n").asInt() == 40)
     assert(node.get("flaky_n").asInt() == 40)
-    assert(node.get("tripped_n").asInt() == 250)
-    assert(node.get("guard").asText() == "saturated-stale")
     assert(node.get("queries").size() >= 1, "even compact mode reports the top queries")
   }
 }

@@ -43,6 +43,7 @@ class JobSpecSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(base.copy(numOutputs = 0).validate().isLeft)
     assert(base.copy(mapKilobytes = 0).validate().isLeft)
     assert(base.copy(userId = "").validate().isLeft)
+    assert(base.copy(outputDir = "").validate() == Left("output_dir must be non-empty"))
   }
   test("rejects unreadable input file") {
     assert(base.copy(inputFiles = Seq("/nonexistent/x.txt")).validate().isLeft)
