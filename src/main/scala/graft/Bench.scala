@@ -98,13 +98,15 @@ object Bench {
     * `ts` is wall-clock ISO-8601 UTC so the ledger orders runs across days
     * without relying on file mtimes; `passes` tells its `total` (per-query
     * medians of three) from the older min-of-2 lines, which lack the
-    * field. Pure — BenchSpec pins the shape, the string escaping, and the
-    * locale stability.
+    * field. `cpus` (the session's cores, `SPARK_GRAFT_CPUS`) and
+    * `host_cpus` (the machine's) tell a host change from a code change.
+    * Pure — BenchSpec pins the shape, the string escaping, and the locale
+    * stability.
     */
   private[graft] def composeLedgerLine(
       ts: String, total: Double, ctlMed: Double, stgMed: Double,
-      gcSec: Double, sf: String): String =
-    s"""{"ts":${jsonStr(ts)},"total":${rootF("%.3f", total)},"passes":$Passes,"control_med":${rootF("%.3f", ctlMed)},"control_staged_med":${rootF("%.3f", stgMed)},"gc_sec":${rootF("%.1f", gcSec)},"sf":${jsonStr(sf)}}"""
+      gcSec: Double, sf: String, cpus: Int, hostCpus: Int): String =
+    s"""{"ts":${jsonStr(ts)},"total":${rootF("%.3f", total)},"passes":$Passes,"control_med":${rootF("%.3f", ctlMed)},"control_staged_med":${rootF("%.3f", stgMed)},"gc_sec":${rootF("%.1f", gcSec)},"sf":${jsonStr(sf)},"cpus":$cpus,"host_cpus":$hostCpus}"""
 
   /** Stdout-line length contract: the driver captures only the last ~2000
     * chars of the run log, and sbt prints its own `[success] Total time …`
@@ -353,7 +355,9 @@ object Bench {
       val line = composeLedgerLine(
         ts = java.time.Instant.now()
           .truncatedTo(java.time.temporal.ChronoUnit.SECONDS).toString,
-        total = total, ctlMed = ctlMed, stgMed = stgMed, gcSec = gcSec, sf = sfDir)
+        total = total, ctlMed = ctlMed, stgMed = stgMed, gcSec = gcSec, sf = sfDir,
+        cpus = spark.sparkContext.defaultParallelism,
+        hostCpus = Runtime.getRuntime.availableProcessors)
       java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_ledger.jsonl"),
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),

@@ -44,10 +44,11 @@ import scala.util.control.NonFatal
   *    sort-based shuffle writes one spillable file per map task. No small-file
   *    explosion at M=10^5.
   *  - A task that declares a combiner ([[MapReduceTask.combine]]) shuffles at
-  *    most one pair per distinct key per map task and per [[CombineKeys]]
-  *    flush, instead of one per emitted pair; the combiner's hash map holds at
-  *    most [[CombineKeys]] keys. A reduce expressible as a SQL aggregate can
-  *    also use the DataFrame formulation, whose partial aggregation is
+  *    most one pair per distinct key per map task and per combiner flush,
+  *    instead of one per emitted pair; the combiner's hash map holds at most
+  *    [[CombineKeys]] keys and about [[CombineBytes]] bytes of keys and
+  *    values, whichever fills first. A reduce expressible as a SQL aggregate
+  *    can also use the DataFrame formulation, whose partial aggregation is
   *    codegen'd; see [[graft.tasks.WordCount.dataFrameQuery]].
   */
 object MapReduceJob {
@@ -93,15 +94,25 @@ object MapReduceJob {
   /** Distinct keys the map-side combiner holds before it flushes. */
   private[core] val CombineKeys = 65536
 
+  /** Estimated bytes the map-side combiner holds before it flushes. */
+  private[core] val CombineBytes = 64L << 20
+
+  /** The byte estimate's fixed cost per entry: a hash-map node and two
+    * string headers. Each char adds 2 bytes.
+    */
+  private val EntryBytes = 64
+
   /** Merge equal keys' values with `f` in a hash map of at most `maxKeys`
-    * keys. When the map is full, every entry is emitted and the map starts
-    * over, so memory stays bounded at any scale and a key may come out more
-    * than once — which a combiner's contract allows.
+    * keys and about `maxBytes` bytes, counted as each key is inserted. When
+    * either limit is reached, every entry is emitted and the map starts
+    * over, so memory stays bounded at any scale and key size, and a key may
+    * come out more than once — which a combiner's contract allows.
     */
   private[core] def combineBounded(
       pairs: Iterator[(String, String)],
       f: (String, String) => String,
-      maxKeys: Int
+      maxKeys: Int,
+      maxBytes: Long = CombineBytes
   ): Iterator[(String, String)] =
     new Iterator[(String, String)] {
       private var flushed: Iterator[(String, String)] = Iterator.empty
@@ -114,9 +125,11 @@ object MapReduceJob {
 
       private def fill(): Unit = {
         val acc = new java.util.HashMap[String, String]
-        while (acc.size < maxKeys && pairs.hasNext) {
+        var bytes = 0L
+        while (acc.size < maxKeys && bytes < maxBytes && pairs.hasNext) {
           val (k, v) = pairs.next()
           val old = acc.get(k)
+          if (old == null) bytes += 2L * (k.length + v.length) + EntryBytes
           acc.put(k, if (old == null) v else f(old, v))
         }
         flushed = acc.entrySet.iterator.asScala.map(e => (e.getKey, e.getValue))

@@ -1066,7 +1066,7 @@ object Dedup {
       // The count rides the session-scoped scalar cache, so the action runs
       // ONCE per (session, corpus) — against the RAM-pinned frame — not at
       // every plan construction (ADVICE r11).
-      require(graft.sources.Stored.scalarLong("dd_band_sweep_nonvacuous", dir)(
+      require(graft.sources.Stored.scalarLong("dd_band_sweep_nonvacuous", dir, s)(
           paired.limit(1).count()) == 1L,
         "dd_lsh_band_sweep: corpus has no verified near-dup pairs — the " +
           "sweep has no ground truth to measure and would diverge from its oracle")

@@ -697,7 +697,7 @@ object Learn {
       // The vocabulary SIZE is a one-value model stat: store it once and
       // fold it into scoring plans as a literal — the one-row frame +
       // broadcast join it replaced cost two plan stages per scoring query.
-      graft.sources.Stored.scalarLong("lm_vocab_v", dir)(
+      graft.sources.Stored.scalarLong("lm_vocab_v", dir, s)(
         graft.sources.Stored.materialize("lm_vocab", dir, s)(
           bgCounts.select(col("w2")).union(bgCounts.select(col("w1")))
             .agg(countDistinct(col("w2")).as("v")))

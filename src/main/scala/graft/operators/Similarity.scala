@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.HashFunctions.md5Long
+import graft.sources.Stored
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -532,7 +533,7 @@ object Similarity {
     // aggregation (map-side partial) to PqSub rows — O(n) with no extra
     // training pass, the index is read as-is.
     "ss_pq_distortion" -> { (s, dir) =>
-      val cb = materialize("pq_codebook", dir, s)(
+      val cb = Stored.materialize("pq_codebook", dir, s)(
         trainPqCodebook(subRows(vecs(s, dir))))
       val (codes, _) = pqIndex(s, dir)
       val sr = subRows(vecs(s, dir))
@@ -613,7 +614,7 @@ object Similarity {
     // is the consumer's division). Fourth consumer of the stored index.
     "ss_index_stats" -> { (s, dir) =>
       val e = vecs(s, dir)
-      val cent = materialize("ivf_centroids", dir, s)(trainCentroids(e))
+      val cent = Stored.materialize("ivf_centroids", dir, s)(trainCentroids(e))
       e.join(ivfCells(s, dir), "vec_id")
         .join(broadcast(cent.select(col("c_id").as("cell"), col("cv"))), Seq("cell")) // bounded: |cells| centroids
         .select(col("cell"),
@@ -696,8 +697,8 @@ object Similarity {
     // exact (n ≪ 2^53) and `lit(0.15)/lit(n)` constant-folds through the
     // same IEEE division the broadcast column fed, so the ranks are
     // bit-identical (oracle-gated).
-    val nD = graft.sources.Stored.scalarLong("pr_n_nodes", dir)(nodes.count()).toDouble
-    // knnGraph is a stored parquet index ([[materialize]]): each round's
+    val nD = Stored.scalarLong("pr_n_nodes", dir, s)(nodes.count()).toDouble
+    // knnGraph is a stored parquet index ([[Stored.materialize]]): each round's
     // scan of the edge table is a cheap re-read, no checkpoint needed.
     val edges = knnGraph(s, dir).select(col("vec_id").as("src"), col("nbr_id").as("dst"))
     val init = nodes.select(col("vec_id"), (lit(1.0) / lit(nD)).as("pr"))
@@ -802,7 +803,7 @@ object Similarity {
     * narrow pass and each query touches |corpus|·(probes/cells) candidates.
     * The trained centroid table and cell assignment are persisted once per
     * corpus and reused across queries AND across the sibling IVF-PQ path
-    * ([[materialize]]); training has zero driver-side actions.
+    * ([[Stored.materialize]]); training has zero driver-side actions.
     */
   private def ivfTopk(s: SparkSession, dir: String): DataFrame =
     ivfTopkAt(s, dir, IvfProbes)
@@ -828,7 +829,7 @@ object Similarity {
     */
   private def ivfScoredCandidates(s: SparkSession, dir: String, probes: Int): DataFrame = {
     val e = vecs(s, dir)
-    val cent = materialize("ivf_centroids", dir, s)(trainCentroids(e))
+    val cent = Stored.materialize("ivf_centroids", dir, s)(trainCentroids(e))
     // The corpus-side cell assignment comes from the STORED index
     // ([[ivfCells]]); only the (tiny) query side re-scores against the
     // broadcast centroids to pick its probe cells.
@@ -943,7 +944,7 @@ object Similarity {
     // it): the O(n²/G) block-grid build runs once per corpus, every
     // downstream consumer — including repeat invocations of the graph
     // query itself — reads the edge table.
-    materialize("knn_graph", dir, s)(knnGraphBuild(s, dir))
+    Stored.materialize("knn_graph", dir, s)(knnGraphBuild(s, dir))
 
   /** The one-time k-NN build plan (audited by PlanAuditSpec: partial
     * map-side heap shrink before the exchange, no cartesian node).
@@ -964,33 +965,17 @@ object Similarity {
         col("col.ord").as("cosine"))
   }
 
-  /** Materialize a trained index structure to parquet ONCE per (structure,
-    * dataset) and read it back — the production shape: codebooks, centroids,
-    * and the encoded corpus are built offline once and STORED; every query
-    * (and every repeat invocation in this JVM) reads the stored structure.
-    * Within one build this also keeps the training dataflow
-    * single-execution when two downstream consumers would otherwise each
-    * re-run the whole Lloyd's chain (exchange reuse does not deduplicate
-    * across an AQE plan's independent broadcasts). The build thunk is
-    * by-name so a cache hit constructs no training plan at all (plan
-    * construction itself was the LSH planning cliff). Keyed by dataset dir
-    * so scale factors never share an index; session-scoped via the JVM map
-    * — a new process retrains, exactly like a cold index build.
-    */
-  private def materialize(name: String, dir: String, s: SparkSession)(df: => DataFrame): DataFrame =
-    graft.sources.Stored.materialize(name, dir, s)(df)
-
   /** PQ index for a corpus: (codes, qparts). `codes` is the 64×-compressed
     * code table (neighbor_id, nrm, sub, cid) — the only thing the recurring
     * ADC scan reads; `qparts` is each query's partial-dot table against
     * every (sub, cid) codeword (queries × PqSub × PqK rows, broadcastable).
     */
   private def pqIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val cb = materialize("pq_codebook", dir, s)(trainPqCodebook(subRows(vecs(s, dir))))
+    val cb = Stored.materialize("pq_codebook", dir, s)(trainPqCodebook(subRows(vecs(s, dir))))
     // Encode: nearest codeword per (vector, subspace). The encoded corpus is
     // itself part of the stored index: built once, every ADC scan reads the
     // code table (that IS the 64× compression payoff).
-    val codes = materialize("pq_codes", dir, s)(
+    val codes = Stored.materialize("pq_codes", dir, s)(
       encodeAtCodebook(subRows(vecs(s, dir)), cb))
     val qparts = subRows(vecs(s, dir).filter(col("vec_id") < NQueries))
       .select(col("vec_id").as("query_id"), col("nrm").as("qnrm"), col("sub"), col("sv"))
@@ -1021,9 +1006,9 @@ object Similarity {
     * the ranked-window (c_cos DESC, c_id ASC) assignment exactly.
     */
   private[operators] def ivfCells(s: SparkSession, dir: String): DataFrame =
-    materialize("ivf_cells", dir, s) {
+    Stored.materialize("ivf_cells", dir, s) {
       val e = vecs(s, dir)
-      val cent = materialize("ivf_centroids", dir, s)(trainCentroids(e))
+      val cent = Stored.materialize("ivf_centroids", dir, s)(trainCentroids(e))
       assignCells(e, cent)
     }
 
@@ -1081,14 +1066,14 @@ object Similarity {
     * not a maintenance step.
     */
   private[graft] def baseIvfCentroids(s: SparkSession, dir: String): DataFrame =
-    materialize("ivf_base_centroids", dir, s)(trainCentroids(baseVecs(s, dir)))
+    Stored.materialize("ivf_base_centroids", dir, s)(trainCentroids(baseVecs(s, dir)))
 
   /** The STALE cell table: base-partition vectors assigned to the base
     * centroids, stored next to them (what a deployment has on disk when the
     * landing batch arrives).
     */
   private[graft] def baseIvfCells(s: SparkSession, dir: String): DataFrame =
-    materialize("ivf_base_cells", dir, s)(
+    Stored.materialize("ivf_base_cells", dir, s)(
       assignCells(baseVecs(s, dir), baseIvfCentroids(s, dir)))
 
   /** The STALE product quantizer: per-subspace codebooks trained on the
@@ -1098,7 +1083,7 @@ object Similarity {
     * discipline); re-training is a scheduled rebuild, not maintenance.
     */
   private[graft] def basePqCodebook(s: SparkSession, dir: String): DataFrame =
-    materialize("pq_base_codebook", dir, s)(
+    Stored.materialize("pq_base_codebook", dir, s)(
       trainPqCodebook(subRows(baseVecs(s, dir))))
 
   /** The STALE code table: base-partition slices encoded at the base
@@ -1106,7 +1091,7 @@ object Similarity {
     * the landing batch arrives) — the PQ analog of [[baseIvfCells]].
     */
   private[graft] def basePqCodes(s: SparkSession, dir: String): DataFrame =
-    materialize("pq_base_codes", dir, s)(
+    Stored.materialize("pq_base_codes", dir, s)(
       encodeAtCodebook(subRows(baseVecs(s, dir)), basePqCodebook(s, dir)))
 
   /** Checksum seed for [[codeFingerprint]] — PQ's own draw family
@@ -1207,7 +1192,7 @@ object Similarity {
     // corpus, not one per query family) and the same code table as
     // ss_ann_pq. Only the query probes re-score against the broadcast
     // centroids at query time.
-    val cent = materialize("ivf_centroids", dir, s)(trainCentroids(e))
+    val cent = Stored.materialize("ivf_centroids", dir, s)(trainCentroids(e))
     val wq = Window.partitionBy("vec_id").orderBy(col("c_cos").desc, col("c_id").asc)
     val qprobes = e.filter(col("vec_id") < NQueries)
       .crossJoin(broadcast(cent)) // bounded: |cells| centroids

@@ -324,7 +324,7 @@ object TextAnalysis {
       // frame with no corpus dependence, and the checkpoint boundary
       // formula (k·D) DIV K runs the identical integer arithmetic with d
       // inlined (oracle-gated).
-      val d = graft.sources.Stored.scalarLong("ta_heaps_ndocs", dir)(ranked.count())
+      val d = graft.sources.Stored.scalarLong("ta_heaps_ndocs", dir, s)(ranked.count())
       val ck = s.range(1, HeapsK + 1)
         .select(col("id").cast("int").as("k"))
         .select(col("k"), expr(s"(k * ${d}L) DIV $HeapsK").as("n_k"))

@@ -1,93 +1,110 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-scoped stored-structure tier (shared by the ANN indexes in
-  * [[graft.operators.Similarity]] and the BPE merge table in
-  * [[graft.operators.BpeTrainer]]): materialize a trained/derived structure
-  * to parquet ONCE per (structure, dataset dir) and read it back — the
-  * production shape, where codebooks, centroids, and tokenizers are built
-  * offline once and STORED; every query (and every repeat invocation in
-  * this JVM) reads the stored artifact.
+  * [[graft.operators.Similarity]], the BPE merge table in
+  * [[graft.operators.BpeTrainer]], the dd_* / rt_* / LM model stores):
+  * build a trained or derived structure ONCE per (structure, corpus) and
+  * reuse it — the production shape, where codebooks, centroids, and
+  * tokenizers are built offline once and STORED; every query (and every
+  * repeat invocation in this JVM) reads the stored artifact.
   *
-  * The build thunk is by-name so a cache hit constructs no training plan at
-  * all (plan construction itself was the LSH planning cliff). Keyed by
-  * dataset dir so scale factors never share a structure; session-scoped via
-  * the JVM map — a new process retrains, exactly like a cold index build.
+  * One cache holds every artifact kind — a parquet path ([[materialize]]),
+  * a driver-side long ([[scalarLong]]) and an executor-pinned frame
+  * ([[pinned]]) — keyed by (kind, name, dataset dir, and for pins the
+  * owning applicationId). The build thunks are by-name so a cache hit
+  * constructs no training plan at all (plan construction itself was the
+  * LSH planning cliff). Keyed by dataset dir so scale factors never share
+  * a structure; a new process rebuilds, exactly like a cold index build.
+  *
+  * Fingerprint contract: every entry carries the (relative path, length,
+  * mtime) listing of the files under its `dir`, taken before the build. A
+  * lookup whose listing differs is a miss, so a rewritten corpus rebuilds.
   */
 object Stored {
-  private val stored = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val scalars = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private case class Key(kind: String, name: String, dir: String, app: String = "")
+  private case class Entry(fp: Set[(String, Long, Long)], value: Any, owner: Option[SparkContext])
+  private val cache = new java.util.concurrent.ConcurrentHashMap[Key, Entry]()
+
+  /** The corpus fingerprint: every file under `dir` (recursively) with its
+    * length and modification time. A missing dir has the empty fingerprint.
+    */
+  private def fingerprint(dir: String, s: SparkSession): Set[(String, Long, Long)] = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val base = fs.makeQualified(root).toUri
+    try {
+      val it = fs.listFiles(root, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).map { st =>
+        (base.relativize(st.getPath.toUri).getPath, st.getLen, st.getModificationTime)
+      }.toSet
+    } catch { case _: java.io.FileNotFoundException => Set.empty }
+  }
+
+  /** The one lookup: a hit is an entry whose fingerprint matches the
+    * corpus now; anything else builds and replaces the entry.
+    */
+  private def lookup[A](key: Key, s: SparkSession, owner: Option[SparkContext] = None)(
+      build: => A): A = {
+    val fp = fingerprint(key.dir, s)
+    def fresh(e: Entry) = e != null && e.fp == fp
+    // NOT computeIfAbsent around the build: build thunks legitimately NEST
+    // (ivf_cells trains ivf_centroids inside its own thunk), and
+    // the concurrent map forbids recursive updates — the nested insert can
+    // land mid-resize and throw IllegalStateException("Recursive update"),
+    // bin-layout-dependent and therefore intermittent. Object-monitor
+    // synchronization is REENTRANT, so nested builds on one thread are
+    // fine; concurrent builders of different structures serialize, which is
+    // irrelevant at build frequency (once per structure per corpus).
+    val hit = cache.get(key)
+    val e =
+      if (fresh(hit)) hit
+      else this.synchronized {
+        val again = cache.get(key)
+        if (fresh(again)) again
+        else { val built = Entry(fp, build, owner); cache.put(key, built); built }
+      }
+    // Built (`e` was made above) or reused: the one place to report it.
+    e.value.asInstanceOf[A]
+  }
 
   /** A stored ONE-VALUE structure (a model hyperstat like the LM vocabulary
-    * size): compute once per (name, dataset dir) and cache the long on the
-    * driver, so consumers fold it into their plans as a LITERAL — removing
-    * a one-row scan + broadcast-join stage from every query that needs it.
-    * Same locking doctrine as [[materialize]] (reentrant monitor — the
-    * value thunk may itself call materialize).
-    *
-    * LOAD-BEARING ASSUMPTION (ADVICE r19): the corpus under `dir` is
-    * immutable for the SESSION's lifetime — the same contract
-    * [[materialize]] and the kNN/IVF/PQ index tiers already rely on for
-    * index reuse, but here it is load-bearing for RESULT VALUES, not just
-    * reuse: a folded literal (ss_pagerank's node count, ta_heaps's doc
-    * count) goes stale if the dir is rewritten mid-session, where the old
-    * in-plan count aggregate would have stayed live. Any future operator
-    * that WRITES into a corpus dir in-session must invalidate via
-    * [[dropSession]] (test hook) or use a fresh dir (the mt_* rewrite
-    * queries already do the latter — they write to derived paths, never
-    * into the corpus dir).
+    * size): computed once per (name, corpus) and cached on the driver, so
+    * consumers fold it into their plans as a LITERAL — removing a one-row
+    * scan + broadcast-join stage from every query that needs it. The value
+    * thunk may itself call [[materialize]] (the lookup's monitor is
+    * reentrant).
     */
-  def scalarLong(name: String, dir: String)(v: => Long): Long = {
-    val key = s"$name:$dir"
-    scalars.get(key) match {
-      case null =>
-        this.synchronized {
-          scalars.get(key) match {
-            case null => val x = v; scalars.put(key, x); x
-            case hit => hit.longValue()
-          }
-        }
-      case hit => hit.longValue()
-    }
-  }
+  def scalarLong(name: String, dir: String, s: SparkSession)(v: => Long): Long =
+    lookup(Key("scalar", name, dir), s)(v)
 
   /** A stored structure ALSO pinned in executor memory: one eagerly
-    * localCheckpointed frame per (SparkContext, name, dir), shared by every
-    * consumer in the session. The bench's build/exec attribution showed
-    * each consuming query paying ~1.4 s re-reading AND re-checkpointing the
-    * same stored parquet at construction; a production engine keeps hot
-    * model artifacts in the block manager once, not once per query. Only
-    * for boundedly-small frames (signature/model tables — the blocks stay
-    * resident for the context's lifetime); keyed by applicationId so a new
-    * context re-pins instead of reading another context's dead blocks.
-    * Entries of stopped contexts are dropped on the next lookup.
+    * localCheckpointed frame per (SparkContext, name, corpus), shared by
+    * every consumer in the session. The bench's build/exec attribution
+    * showed each consuming query paying ~1.4 s re-reading AND
+    * re-checkpointing the same stored parquet at construction; a production
+    * engine keeps hot model artifacts in the block manager once, not once
+    * per query. Only for boundedly-small frames (signature/model tables —
+    * the blocks stay resident for the context's lifetime); keyed by
+    * applicationId so a new context re-pins instead of reading another
+    * context's dead blocks. Entries of stopped contexts are dropped on the
+    * next lookup.
     */
   def pinned(name: String, dir: String, s: SparkSession)(df: => DataFrame): DataFrame = {
-    val key = s"${s.sparkContext.applicationId}:$name:$dir"
-    // Evict only entries whose OWNING context has stopped (each entry keeps
-    // its context ref so liveness is checked directly) — keying eviction on
-    // the current applicationId would let two live contexts in one JVM
-    // thrash each other's pins. A stopped context's checkpoint blocks died
-    // with its block manager, so dropping the map entry is the whole
-    // cleanup — there is nothing left to unpersist.
-    frames.values().removeIf(_._1.isStopped)
-    frames.get(key) match {
-      case null =>
-        this.synchronized {
-          frames.get(key) match {
-            case null =>
-              val f = df.localCheckpoint(true)
-              frames.put(key, (s.sparkContext, f))
-              f
-            case (_, hit) => hit
-          }
-        }
-      case (_, hit) => hit
-    }
+    evictStopped()
+    lookup(Key("pin", name, dir, s.sparkContext.applicationId), s, Some(s.sparkContext))(
+      df.localCheckpoint(true))
   }
-  private val frames =
-    new java.util.concurrent.ConcurrentHashMap[String, (org.apache.spark.SparkContext, DataFrame)]()
+
+  // Evict only entries whose OWNING context has stopped (each pin keeps its
+  // context ref so liveness is checked directly) — keying eviction on the
+  // current applicationId would let two live contexts in one JVM thrash
+  // each other's pins. A stopped context's checkpoint blocks died with its
+  // block manager, so dropping the entry is the whole cleanup.
+  private def evictStopped(): Unit = cache.values().removeIf(_.owner.exists(_.isStopped))
 
   /** [[pinned]] with a LOUD boundedness check (ADVICE r11): the pin tier is
     * only for metadata-sized frames, but some "grids" are bounded by a
@@ -96,10 +113,11 @@ object Stored {
     * grid scale with the fact table, and a strong-referenced localCheckpoint
     * of that would hold O(|events|) blocks in executor memory for the
     * context's lifetime. Counts the frame ONCE per (name, corpus) via the
-    * scalar cache; pins only under `maxRows`, otherwise logs loudly and
-    * returns the LIVE frame — consumers stay correct (they re-aggregate per
-    * query, the pre-pin behavior) and the engine degrades to the
-    * shuffle-per-query plan instead of an executor-memory cliff.
+    * scalar cache; pins only under `maxRows`, otherwise warns once (inside
+    * the count's build, so once per corpus fingerprint) and returns the
+    * LIVE frame — consumers stay correct (they re-aggregate per query, the
+    * pre-pin behavior) and the engine degrades to the shuffle-per-query
+    * plan instead of an executor-memory cliff.
     *
     * The pin path DELIBERATELY executes the frame twice at first touch
     * (once for the boundedness count, once inside [[pinned]]'s eager
@@ -113,81 +131,46 @@ object Stored {
     */
   def pinnedIfBounded(name: String, dir: String, s: SparkSession, maxRows: Long)(
       df: => DataFrame): DataFrame = {
-    val n = scalarLong(s"$name:nrows", dir)(df.count())
-    if (n <= maxRows) pinned(name, dir, s)(df)
-    else {
+    val n = scalarLong(s"$name:nrows", dir, s) {
+      val rows = df.count()
       // stderr, not log4j: pin-tier misuse must be visible in any run log,
-      // not filtered by logger level. Once per (name, dir) — every
-      // consumer of a hot store calls this per plan construction, and a
-      // repeated warning would bury the one that matters.
-      if (warned.add(s"$name:$dir"))
+      // not filtered by logger level.
+      if (rows > maxRows)
         System.err.println(
-          s"[graft.Stored] NOT pinning '$name' for $dir: $n rows exceeds the " +
+          s"[graft.Stored] NOT pinning '$name' for $dir: $rows rows exceeds the " +
             s"metadata-size bound $maxRows - the domain-boundedness assumption " +
             "does not hold on this corpus; consumers fall back to live plans")
-      df
+      rows
     }
+    if (n <= maxRows) pinned(name, dir, s)(df) else df
   }
-  private val warned =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Whether a frame is currently pinned (test hook for the boundedness
     * fallback — proves an over-bound frame was NOT pinned).
     */
   private[graft] def isPinned(name: String, dir: String, s: SparkSession): Boolean =
-    frames.containsKey(s"${s.sparkContext.applicationId}:$name:$dir")
+    cache.containsKey(Key("pin", name, dir, s.sparkContext.applicationId))
 
   /** Live pinned-entry count AFTER eviction — test hook for the eviction
     * policy (StoredSpec proves stopped-context entries are dropped and live
     * ones survive).
     */
   private[sources] def livePinCount: Int = {
-    frames.values().removeIf(_._1.isStopped)
-    frames.size()
+    evictStopped()
+    cache.keySet().stream().filter(_.kind == "pin").count().toInt
   }
 
-  /** Invalidate every session-cached structure derived from `dir` — the
-    * test-visible hook behind [[scalarLong]]'s corpus-immutability
-    * assumption (ADVICE r19): an operator that rewrites a corpus dir
-    * in-session must call this so folded scalars, materialized parquet
-    * paths, and pinned frames are all rebuilt from the new bytes on next
-    * touch. No production caller today (the gate corpus is immutable and
-    * the mt_* rewrites use derived paths); exists so a future
-    * incremental-ingest operator has a correct door instead of a silent
-    * stale-literal hazard.
+  /** Write a trained structure to parquet ONCE per (name, corpus) and read
+    * it back. Within one build this also keeps the training dataflow
+    * single-execution when two downstream consumers would otherwise each
+    * re-run the whole Lloyd's chain (exchange reuse does not deduplicate
+    * across an AQE plan's independent broadcasts). A rebuild writes a new
+    * path, so frames read from the old one stay readable.
     */
-  private[graft] def dropSession(dir: String): Unit = {
-    val suffix = s":$dir"
-    scalars.keySet().removeIf((k: String) => k.endsWith(suffix))
-    stored.keySet().removeIf((k: String) => k.endsWith(suffix))
-    frames.keySet().removeIf((k: String) => k.endsWith(suffix))
-    warned.removeIf((k: String) => k.endsWith(suffix))
-  }
-
-  def materialize(name: String, dir: String, s: SparkSession)(df: => DataFrame): DataFrame = {
-    val key = s"$name:$dir"
-    // NOT computeIfAbsent around the build: build thunks legitimately NEST
-    // (ivf_cells trains ivf_centroids inside its own thunk), and
-    // ConcurrentHashMap forbids recursive updates — the nested insert can
-    // land mid-resize and throw IllegalStateException("Recursive update"),
-    // bin-layout-dependent and therefore intermittent. Object-monitor
-    // synchronization is REENTRANT, so nested builds on one thread are
-    // fine; concurrent builders of different structures serialize, which is
-    // irrelevant at build frequency (once per structure per session).
-    val path = stored.get(key) match {
-      case null =>
-        this.synchronized {
-          stored.get(key) match {
-            case null =>
-              val p = graft.operators.Connectors.tmp(name)
-              df.write.mode("overwrite").parquet(p)
-              stored.put(key, p)
-              p
-            case hit => hit
-          }
-        }
-      case hit => hit
-    }
-    s.read.parquet(path)
-  }
+  def materialize(name: String, dir: String, s: SparkSession)(df: => DataFrame): DataFrame =
+    s.read.parquet(lookup(Key("path", name, dir), s) {
+      val p = graft.operators.Connectors.tmp(name)
+      df.write.mode("overwrite").parquet(p)
+      p
+    })
 }

@@ -25,15 +25,16 @@ class BenchSpec extends AnyFunSuite {
 
   test("ledger line: one parseable JSON line with the pinned compact fields (VERDICT r17 #2)") {
     val line = Bench.composeLedgerLine(
-      ts = "2026-08-16T19:21:03Z", total = 137.144,
+      ts = "2026-08-16T19:21:03Z", total = 137.144, cpus = 4, hostCpus = 32,
       ctlMed = 0.101, stgMed = 0.148, gcSec = 4.0, sf = "/root/testdata/sf0.1")
     assert(!line.contains("\n"), "a ledger entry is exactly one line")
     val node = parseJson(line)
-    // The pinned shape: exactly these seven fields, no per-query map — the
+    // The pinned shape: exactly these nine fields, no per-query map — the
     // ledger is the durable compact history, not a second detail file.
     import scala.jdk.CollectionConverters._
     assert(node.properties().asScala.map(_.getKey).toSet == Set(
-      "ts", "total", "passes", "control_med", "control_staged_med", "gc_sec", "sf"))
+      "ts", "total", "passes", "control_med", "control_staged_med", "gc_sec", "sf",
+      "cpus", "host_cpus"))
     assert(node.get("ts").asText() == "2026-08-16T19:21:03Z")
     assert(node.get("total").asDouble() == 137.144)
     assert(node.get("passes").asInt() == 3)
@@ -41,6 +42,8 @@ class BenchSpec extends AnyFunSuite {
     assert(node.get("control_staged_med").asDouble() == 0.148)
     assert(node.get("gc_sec").asDouble() == 4.0)
     assert(node.get("sf").asText() == "/root/testdata/sf0.1")
+    assert(node.get("cpus").asInt() == 4)
+    assert(node.get("host_cpus").asInt() == 32)
   }
 
   test("ledger line: string fields are JSON-escaped and doubles locale-stable (ADVICE r18)") {
@@ -52,7 +55,7 @@ class BenchSpec extends AnyFunSuite {
     try {
       java.util.Locale.setDefault(java.util.Locale.GERMANY)
       val line = Bench.composeLedgerLine(
-        ts = "2026-08-16T19:21:03Z", total = 137.144,
+        ts = "2026-08-16T19:21:03Z", total = 137.144, cpus = 4, hostCpus = 32,
         ctlMed = 0.101, stgMed = 0.148, gcSec = 4.0, sf = "/tmp/sf \"odd\\path\"\n")
       val node = parseJson(line)
       assert(node.get("total").asDouble() == 137.144, "decimal point, not comma")

@@ -33,6 +33,21 @@ class CombinerSpec extends SparkSpec {
     assert(MapReduceJob.combineBounded(Iterator.empty, sum, 4).isEmpty)
   }
 
+  test("the bounded combine also flushes on bytes: a few 1 MiB keys fill a small byte bound first") {
+    // Four keys of ~1 MiB, each in a run of three; about 2 MiB of estimate per key.
+    val keys = (0 until 4).map(i => s"$i" + "x" * (1 << 20))
+    val pairs = keys.flatMap(k => Seq.fill(3)((k, "1")))
+    val sum = (a: String, b: String) => (a.toLong + b.toLong).toString
+    def totals(ps: Seq[(String, String)]) =
+      ps.groupMapReduce(_._1)(_._2.toLong)(_ + _)
+    val bounded = MapReduceJob.combineBounded(pairs.iterator, sum, 1000, 5L << 20).toSeq
+    assert(bounded.size > keys.size, "5 MiB over 8 MiB of keys must flush before the 1000-key bound")
+    assert(bounded.size < pairs.size, "equal keys within one fill still merge")
+    assert(totals(bounded) == totals(pairs))
+    assert(MapReduceJob.combineBounded(pairs.iterator, sum, 1000).size == keys.size,
+      "under the production byte bound the four keys fit in one fill")
+  }
+
   test("WordCount with its combiner writes the same bytes as without one, Zipf-like input, R=8") {
     // ~20k words over a 2k vocabulary, rank frequencies ∝ 1/r^1.1, joined by
     // runs of the reference delimiters; 16 KiB splits give several map tasks.

@@ -1,13 +1,16 @@
 package graft.sources
 
 import graft.SparkSpec
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 
 /** The stored-structure tier's caching and eviction contracts: build thunks
-  * run once per (structure, dataset dir); pinned frames are cached per
-  * OWNING SparkContext and evicted only when that context stops (the r10
-  * advisory fix — eviction used to key on the current applicationId, which
-  * would let two live contexts thrash each other's pins).
+  * run once per (structure, dataset dir) and again when a file under the
+  * dir changes (a synthetic dir that does not exist never changes); pinned
+  * frames are cached per OWNING SparkContext and evicted only when that
+  * context stops (the r10 advisory fix — eviction used to key on the
+  * current applicationId, which would let two live contexts thrash each
+  * other's pins).
   */
 class StoredSpec extends SparkSpec {
 
@@ -28,8 +31,8 @@ class StoredSpec extends SparkSpec {
   test("scalarLong computes once and folds back the cached value") {
     var evals = 0
     def v = { evals += 1; 42L }
-    assert(Stored.scalarLong("spec_scalar", "specdir")(v) == 42L)
-    assert(Stored.scalarLong("spec_scalar", "specdir")(v) == 42L)
+    assert(Stored.scalarLong("spec_scalar", "specdir", spark)(v) == 42L)
+    assert(Stored.scalarLong("spec_scalar", "specdir", spark)(v) == 42L)
     assert(evals == 1)
   }
 
@@ -76,7 +79,7 @@ class StoredSpec extends SparkSpec {
     // 2, and a regression that drops the count cache would push it to 4.
     Stored.pinnedIfBounded("spec_pib_big", "specdirC", spark, 3L)(big)
     assert(builds == 3, "over-bound frames stay live (rebuilt per consumer), count cached once")
-    assert(Stored.scalarLong("spec_pib_big:nrows", "specdirC")(99L) == 4L,
+    assert(Stored.scalarLong("spec_pib_big:nrows", "specdirC", spark)(99L) == 4L,
       "the row count must be cached from the first boundedness check")
   }
 
@@ -99,5 +102,29 @@ class StoredSpec extends SparkSpec {
     val fresh = Stored.pinned("spec_pin_evict", "specdirB", s2)(frame(s2))
     assert(builds == 2, "a fresh context must re-pin, not read dead blocks")
     assert(fresh.head().getLong(0) == 5L)
+  }
+
+  test("a replaced file under a real dir rebuilds materialize, scalarLong and pinned once each") {
+    // The shared session, not `spark`: the eviction test above stopped that one.
+    val spark = graft.SparkSpec.session
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("stored-fingerprint")
+    try {
+      val file = dir.resolve("part.txt")
+      java.nio.file.Files.writeString(file, "one")
+      var mats, scalars, pins = 0
+      def touchAll(): Unit = {
+        Stored.materialize("spec_fp", dir.toString, spark) { mats += 1; Seq(1L).toDF("id") }
+        Stored.scalarLong("spec_fp", dir.toString, spark) { scalars += 1; 7L }
+        Stored.pinned("spec_fp", dir.toString, spark) { pins += 1; Seq(1L).toDF("id") }
+      }
+      touchAll(); touchAll()
+      assert((mats, scalars, pins) == ((1, 1, 1)), "an unchanged dir reuses every kind")
+      // A different length changes the fingerprint whatever the mtime resolution.
+      java.nio.file.Files.delete(file)
+      java.nio.file.Files.writeString(file, "two, longer")
+      touchAll(); touchAll()
+      assert((mats, scalars, pins) == ((2, 2, 2)), "a replaced file rebuilds each kind exactly once")
+    } finally FileUtils.deleteDirectory(dir.toFile)
   }
 }
