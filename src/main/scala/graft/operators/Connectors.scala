@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * every value that reaches the result (strings, integers, doubles,
   * timestamps).
   *
-  * The round-trip files land under java.io.tmpdir; writing them is part of
+  * The round-trip files land under the JVM temp dir ([[tmp]], the one
+  * temp-path mechanism in `src/main`); writing them is part of
   * query construction (a connector test IS a write+read). Within a process,
   * re-runs overwrite; the per-process directories are deleted by a JVM
   * shutdown hook, so repeated bench/verify invocations don't accumulate

@@ -691,8 +691,6 @@ object Dedup {
         ss.select(col("v"))
           .join(ss.select(col("u").as("v")), Seq("v"), "left_semi").isEmpty
       converged = starForest || (ssSig == edgesSig && ss.except(edges).isEmpty)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $round: ${ssSig._1} edges, stars=$starForest")
       freeCheckpoint(edges)
       edges = ss
       edgesSig = ssSig

@@ -86,16 +86,19 @@ object Bucketing {
     */
   def ensureGateTables(s: SparkSession, dir: String): Unit = gateTables(s, dir)
 
-  /** Build the gate's bucketed tables once per (session, source dir).
+  /** Build the gate's bucketed tables once per (session, corpus).
     *
     * Bucketing is a write-ONCE-query-many layout: the ingest shuffle is
     * paid at table build, every later join/agg on the bucket key is
     * exchange-free. Model that honestly — repeat invocations measure the
-    * steady state. Table names carry the dir so scale factors never share
-    * a stale layout; the in-memory catalog scopes reuse to this JVM.
+    * steady state. Catalog tables live per SparkContext, so they cannot sit
+    * in the context-free [[Stored]] cache; instead the names carry a short
+    * hash of the dir and its [[Stored.fingerprint]], so another scale
+    * factor or a rewritten corpus finds no table and builds its own. The
+    * in-memory catalog scopes reuse to this JVM.
     */
   private def gateTables(s: SparkSession, dir: String): (String, String) = {
-    val key = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val key = f"${(dir, Stored.fingerprint(dir, s)).hashCode}%08x"
     val liT = s"bk_gate_lineitem_$key"
     val oT = s"bk_gate_orders_$key"
     if (!s.catalog.tableExists(liT) || !s.catalog.tableExists(oT)) {

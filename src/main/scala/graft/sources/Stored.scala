@@ -12,7 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * tokenizers are built offline once and STORED; every query (and every
   * repeat invocation in this JVM) reads the stored artifact.
   *
-  * One cache holds every artifact kind — a parquet path ([[materialize]]),
+  * One cache holds every artifact kind — a built directory ([[path]]; the
+  * stream and versioned gate tables, and [[materialize]]'s parquet frames),
   * a driver-side long ([[scalarLong]]) and an executor-pinned frame
   * ([[pinned]]) — keyed by (kind, name, dataset dir, and for pins the
   * owning applicationId). The build thunks are by-name so a cache hit
@@ -23,6 +24,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Fingerprint contract: every entry carries the (relative path, length,
   * mtime) listing of the files under its `dir`, taken before the build. A
   * lookup whose listing differs is a miss, so a rewritten corpus rebuilds.
+  *
+  * A build runs under the cache's monitor, and a gate table's build
+  * ([[path]]) runs whole streaming queries: no micro-batch body may call
+  * `Stored`, or its stream thread waits on the monitor that the thread
+  * awaiting the stream holds.
   */
 object Stored {
   private case class Key(kind: String, name: String, dir: String, app: String = "")
@@ -32,7 +38,7 @@ object Stored {
   /** The corpus fingerprint: every file under `dir` (recursively) with its
     * length and modification time. A missing dir has the empty fingerprint.
     */
-  private def fingerprint(dir: String, s: SparkSession): Set[(String, Long, Long)] = {
+  private[graft] def fingerprint(dir: String, s: SparkSession): Set[(String, Long, Long)] = {
     val root = new Path(dir)
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
     val base = fs.makeQualified(root).toUri
@@ -160,17 +166,25 @@ object Stored {
     cache.keySet().stream().filter(_.kind == "pin").count().toInt
   }
 
+  /** A stored directory: a fresh [[graft.operators.Connectors.tmp]] path
+    * that `build` fills ONCE per (name, corpus); returns the path. A
+    * rebuild writes a new path, so frames read from the old one stay
+    * readable; a failed build stores nothing, so the next call starts
+    * from scratch in another new path. The path is removed at JVM exit.
+    */
+  def path(name: String, dir: String, s: SparkSession)(build: String => Unit): String =
+    lookup(Key("path", name, dir), s) {
+      val p = graft.operators.Connectors.tmp(name)
+      build(p)
+      p
+    }
+
   /** Write a trained structure to parquet ONCE per (name, corpus) and read
     * it back. Within one build this also keeps the training dataflow
     * single-execution when two downstream consumers would otherwise each
     * re-run the whole Lloyd's chain (exchange reuse does not deduplicate
-    * across an AQE plan's independent broadcasts). A rebuild writes a new
-    * path, so frames read from the old one stay readable.
+    * across an AQE plan's independent broadcasts).
     */
   def materialize(name: String, dir: String, s: SparkSession)(df: => DataFrame): DataFrame =
-    s.read.parquet(lookup(Key("path", name, dir), s) {
-      val p = graft.operators.Connectors.tmp(name)
-      df.write.mode("overwrite").parquet(p)
-      p
-    })
+    s.read.parquet(path(name, dir, s)(df.write.mode("overwrite").parquet(_)))
 }

@@ -133,6 +133,26 @@ object Versioned {
     if (raw.isEmpty) Seq.empty else raw.split("\n").toSeq
   }
 
+  /** The mt_vacuum_read gate table: two appends, a compaction [[replace]]
+    * and [[vacuum]](keep = 1), built once per corpus fingerprint through
+    * [[Stored.path]]; the post-build invariant is exactly one surviving
+    * version.
+    */
+  private[graft] def vacuumedTable(s: SparkSession, dir: String): String =
+    Stored.path("mt_vacuum_read", dir, s) { tdir =>
+      val orders = ordersSlice(s, dir)
+      append(orders.filter(col("o_orderdate") < lit("1997-01-01").cast("timestamp")), tdir)
+      append(orders.filter(col("o_orderdate") >= lit("1997-01-01").cast("timestamp")), tdir)
+      replace(read(s, tdir).coalesce(4), tdir) // the compaction rewrite
+      vacuum(tdir, keep = 1)
+      require(latest(tdir).contains(2) && !Files.exists(manifestPath(tdir, 0)),
+        s"vacuum gate expected one surviving version at $tdir")
+    }
+
+  private def ordersSlice(s: SparkSession, dir: String): DataFrame =
+    graft.operators.Relational.t(s, dir, "orders")
+      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"))
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Time travel on the gate: commit orders-before-1998 as v0, append the
@@ -140,26 +160,14 @@ object Versioned {
     // each version from the manifests alone. The v0 numbers are computed
     // AFTER v1's files landed in the same table — equality with the
     // date-filtered oracle proves snapshot isolation, not just storage
-    // round-tripping. Table built once per (session, source dir); repeat
-    // invocations measure the steady state (manifest resolve + scan), like
-    // the bucketed-layout gate.
+    // round-tripping. The table is built once per corpus fingerprint
+    // ([[Stored.path]]); repeat invocations measure the steady state
+    // (manifest resolve + scan), like the bucketed-layout gate.
     "mt_time_travel" -> { (s, dir) =>
-      val key = dir.replaceAll("[^A-Za-z0-9]", "_")
-      // PID-scoped like Connectors.tmp: rebuilt per process (a stale table
-      // from an older code version must never satisfy a fresh gate run),
-      // reused across invocations within one session.
-      val tdir =
-        s"${sys.props("java.io.tmpdir")}/graft_versioned_${ProcessHandle.current().pid()}_$key"
-      // The gate needs BOTH versions: a partial build (v0 committed, then
-      // the v1 append failed transiently) must rebuild from scratch, not
-      // wedge every retry on a missing v1 manifest.
-      if (Versioned.latest(tdir).forall(_ < 1)) {
-        val t = new java.io.File(tdir)
-        if (t.exists()) org.apache.commons.io.FileUtils.deleteDirectory(t)
-        val orders = graft.operators.Relational.t(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"))
-        append(orders.filter(col("o_orderdate") < lit("1998-01-01").cast("timestamp")), tdir)
-        append(orders.filter(col("o_orderdate") >= lit("1998-01-01").cast("timestamp")), tdir)
+      val tdir = Stored.path("mt_time_travel", dir, s) { p =>
+        val orders = ordersSlice(s, dir)
+        append(orders.filter(col("o_orderdate") < lit("1998-01-01").cast("timestamp")), p)
+        append(orders.filter(col("o_orderdate") >= lit("1998-01-01").cast("timestamp")), p)
       }
       def agg(v: Int): DataFrame =
         readVersion(s, tdir, v)
@@ -181,25 +189,8 @@ object Versioned {
     // every lakehouse retention job must satisfy (structural deletion
     // effects — manifests gone, time travel failing, dirs removed — are
     // asserted in VersionedSpec; the gate pins the data integrity half).
-    // Build-once per (session, source dir) like mt_time_travel; the
-    // post-build invariant is exactly one surviving version.
     "mt_vacuum_read" -> { (s, dir) =>
-      val key = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val tdir =
-        s"${sys.props("java.io.tmpdir")}/graft_vacuumed_${ProcessHandle.current().pid()}_$key"
-      val built = latest(tdir).contains(2) &&
-        !java.nio.file.Files.exists(manifestPath(tdir, 0))
-      if (!built) {
-        val t = new java.io.File(tdir)
-        if (t.exists()) org.apache.commons.io.FileUtils.deleteDirectory(t)
-        val orders = graft.operators.Relational.t(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"))
-        append(orders.filter(col("o_orderdate") < lit("1997-01-01").cast("timestamp")), tdir)
-        append(orders.filter(col("o_orderdate") >= lit("1997-01-01").cast("timestamp")), tdir)
-        replace(read(s, tdir).coalesce(4), tdir) // the compaction rewrite
-        vacuum(tdir, keep = 1)
-      }
-      read(s, tdir)
+      read(s, vacuumedTable(s, dir))
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_orders"),
           graft.operators.Relational.dsum(col("o_totalprice")).as("total_price"))

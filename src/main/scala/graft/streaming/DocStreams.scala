@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Streaming document ingestion + model scoring: classify documents as they
@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   * batch scorer applied per micro-batch — no streaming state at all. The
   * model sides re-broadcast per micro-batch (Spark re-plans the batch body
   * of foreachBatch each time); the stream side never shuffles on the skewed
-  * token key. Exactly-once delivery reuses [[EventStreams.versionedSink]]:
+  * token key. Exactly-once delivery reuses [[EventStreams.writeVersioned]]:
   * version == batchId, replays of the last committed batch are skipped, and
   * a mid-commit crash leaves only an invisible orphan the recommit clears.
   *
@@ -47,14 +47,8 @@ object DocStreams {
     */
   def classifyDocStream(docs: DataFrame, counts: DataFrame, labelStats: DataFrame,
       tableDir: String, ckpt: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        EventStreams.versionedSink(tableDir)(
-          graft.operators.Learn.classifyDocs(batch, counts, labelStats), batchId)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    EventStreams.writeVersioned(docs, tableDir, ckpt,
+      graft.operators.Learn.classifyDocs(_, counts, labelStats))
 
   /** Score a document stream with the trained bigram LM
     * ([[graft.operators.Learn.lmModel]]) — perplexity filtering applied to
@@ -63,14 +57,8 @@ object DocStreams {
     */
   def lmScoreDocStream(docs: DataFrame, bgCounts: DataFrame, ctxCounts: DataFrame,
       vocab: Long, tableDir: String, ckpt: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        EventStreams.versionedSink(tableDir)(
-          graft.operators.Learn.lmScoreRaw(batch, bgCounts, ctxCounts, vocab), batchId)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    EventStreams.writeVersioned(docs, tableDir, ckpt,
+      graft.operators.Learn.lmScoreRaw(_, bgCounts, ctxCounts, vocab))
 
   /** Near-dup screen the ingest firehose against a STATIC corpus shingle
     * index ([[graft.operators.Dedup.shingled]], persisted in production):
@@ -88,13 +76,7 @@ object DocStreams {
     */
   def dedupDocStream(docs: DataFrame, corpusShingles: DataFrame,
       tableDir: String, ckpt: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        EventStreams.versionedSink(tableDir)(
-          graft.operators.Dedup.incrementalMatches(
-            corpusShingles, graft.operators.Dedup.shingleDocs(batch)), batchId)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    EventStreams.writeVersioned(docs, tableDir, ckpt, batch =>
+      graft.operators.Dedup.incrementalMatches(
+        corpusShingles, graft.operators.Dedup.shingleDocs(batch)))
 }

@@ -743,11 +743,18 @@ object EventStreams {
     }
   }
 
-  /** Stream into a versioned table via [[versionedSink]] (AvailableNow). */
-  def writeVersioned(events: DataFrame, tableDir: String, ckpt: String)
+  /** Stream into a versioned table via [[versionedSink]] (AvailableNow:
+    * drains what exists, then stops) — the one exactly-once drain. Each
+    * micro-batch passes through `transform` inside `foreachBatch`, i.e. at
+    * the SINK, after any stateful operator in `stream`'s body.
+    */
+  def writeVersioned(stream: DataFrame, tableDir: String, ckpt: String,
+      transform: DataFrame => DataFrame = identity)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .foreachBatch(versionedSink(tableDir) _)
+    stream.writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        versionedSink(tableDir)(transform(batch), batchId)
+      }
       .option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()

@@ -1,8 +1,11 @@
 package graft.streaming
 
+import graft.operators.{Pipeline, Relational}
+import graft.sources.{Stored, Versioned}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** The exactly-once streaming sink ON the driver's hash gate.
@@ -19,13 +22,15 @@ import org.apache.spark.sql.types._
   * output — `mr_tasks.h:25,69`; this gate row is the strongest form of the
   * not-replicating-that-bug contract.)
   *
-  * Build shape: the ingest runs ONCE per (session, source dir) like the
-  * bucketed and time-travel gate tables — a landing dir is seeded with the
-  * events split into [[Splits]] files, a first AvailableNow query drains the
-  * first two (maxFilesPerTrigger=1 → one version per file), then the THIRD
-  * file lands and a SECOND query resumes from the same checkpoint — the
-  * restart path a production ingest exercises daily. Repeat invocations
-  * read the committed table (manifest resolve + scan): steady state.
+  * Build shape: the ingest runs ONCE per corpus fingerprint
+  * ([[graft.sources.Stored.path]]) like the time-travel gate tables — a
+  * landing dir is seeded with the events split into [[Splits]] files, a
+  * first AvailableNow query drains the first two (maxFilesPerTrigger=1 →
+  * one version per file), then the THIRD file lands and a SECOND query
+  * resumes from the same checkpoint — the restart path a production ingest
+  * exercises daily ([[restartDrain]], shared by all six gates). Repeat
+  * invocations read the committed table (manifest resolve + scan): steady
+  * state.
   *
   * Scale: the streamed body is a stateless narrow projection (the
   * DocStreams contract — per-row work, no shuffle, no state); the sink
@@ -55,14 +60,14 @@ object StreamGate {
     * handle — closed in finally or one handle leaks per landed split.
     */
   private def landSingleFile(df: DataFrame, tmpDir: String, dest: String): Unit = {
-    val pdir = java.nio.file.Paths.get(tmpDir)
+    val pdir = Paths.get(tmpDir)
     df.coalesce(1).write.parquet(tmpDir)
-    val st = java.nio.file.Files.list(pdir)
+    val st = Files.list(pdir)
     val leaf =
       try st.toArray.map(_.asInstanceOf[java.nio.file.Path])
         .find(_.toString.endsWith(".parquet")).get
       finally st.close()
-    java.nio.file.Files.move(leaf, java.nio.file.Paths.get(dest))
+    Files.move(leaf, Paths.get(dest))
     org.apache.commons.io.FileUtils.deleteDirectory(pdir.toFile)
   }
 
@@ -77,14 +82,66 @@ object StreamGate {
     * ADVICE r10). One-second spacing keeps the ordering unambiguous on
     * coarse-mtime filesystems.
     */
-  private def stampDeliveryOrder(paths: String*): Unit = {
+  private def stampDeliveryOrder(paths: Seq[String]): Unit = {
     val t0 = System.currentTimeMillis()
     paths.zipWithIndex.foreach { case (p, i) =>
-      java.nio.file.Files.setLastModifiedTime(
-        java.nio.file.Paths.get(p),
+      Files.setLastModifiedTime(Paths.get(p),
         java.nio.file.attribute.FileTime.fromMillis(t0 + i * 1000L))
     }
   }
+
+  /** The restart skeleton every gate shares, under the gate's build dir
+    * `base`: land each `before` frame as one file f0, f1, … in
+    * `base/landing`, stage the `after` frames OUTSIDE it, stamp delivery
+    * order over all of them, run `drain(landing, table, ckpt)` to
+    * completion, release the staged files into the landing dir, and drain
+    * again — a NEW query resuming from the same checkpoint commits exactly
+    * the late files. Returns the committed table's dir.
+    */
+  private def restartDrain(base: String, before: Seq[DataFrame], after: Seq[DataFrame])(
+      drain: (String, String, String) => StreamingQuery): String = {
+    val (landing, table, ckpt) = (s"$base/landing", s"$base/table", s"$base/ckpt")
+    Files.createDirectories(Paths.get(landing))
+    val files = (before ++ after).indices.map { k =>
+      if (k < before.size) s"$landing/f$k.parquet" else s"$base/f$k.staged"
+    }
+    (before ++ after).zip(files).zipWithIndex.foreach { case ((df, dest), k) =>
+      landSingleFile(df, s"$base/part$k", dest)
+    }
+    stampDeliveryOrder(files)
+    drain(landing, table, ckpt).awaitTermination()
+    files.zipWithIndex.drop(before.size).foreach { case (f, k) =>
+      Files.move(Paths.get(f), Paths.get(s"$landing/f$k.parquet"))
+    }
+    drain(landing, table, ckpt).awaitTermination()
+    table
+  }
+
+  /** An events-schema file stream over the landing dir, one file per
+    * micro-batch.
+    */
+  private def eventStream(s: SparkSession, landing: String): DataFrame =
+    s.readStream.schema(EventSchema).option("maxFilesPerTrigger", 1).parquet(landing)
+
+  private def us = unix_micros(col("ts"))
+
+  /** The events' time span and its two global time cuts at a third and two
+    * thirds: (min, c1, c2, max) in epoch micros. An empty events table has
+    * NULL min/max — fail with a clear message instead of an opaque NPE.
+    */
+  private def thirds(ev: DataFrame, gate: String, dir: String): (Long, Long, Long, Long) = {
+    val r = ev.agg(min(us), max(us)).head()
+    require(!r.isNullAt(0), s"$gate: events table at $dir is empty — nothing to stream")
+    val (minUs, maxUs) = (r.getLong(0), r.getLong(1))
+    (minUs, minUs + (maxUs - minUs) / 3, minUs + 2 * (maxUs - minUs) / 3, maxUs)
+  }
+
+  /** Far-future heartbeat rows in the events schema: `rows` supplies
+    * event_id, user_id and event_type; every row is stamped at `tsUs`.
+    */
+  private def sentinel(rows: DataFrame, tsUs: Long): DataFrame =
+    rows.select(col("event_id"), timestamp_micros(lit(tsUs)).as("ts"), col("user_id"),
+      col("event_type"), lit(0.0).as("value"), lit(null).cast("string").as("props"))
 
   /** The per-micro-batch transformation: a stateless exact-cents projection
     * (value → integer cents via the DECIMAL(18,2) cast — the
@@ -94,54 +151,21 @@ object StreamGate {
     batch.select(col("event_id"), col("user_id"), col("event_type"),
       col("value").cast(DecimalType(18, 2)).multiply(lit(100)).cast("long").as("cents"))
 
-  private def drain(s: SparkSession, landing: String, tableDir: String, ckpt: String): Unit = {
-    val q = s.readStream
-      .schema(EventSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landing)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        EventStreams.versionedSink(tableDir)(project(batch), batchId)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Build (once per session+dir) the stream-committed table and return its
-    * directory. The guard demands the full [[Splits]]-version history: a
-    * partial build (transient failure between the two queries) rebuilds
-    * from scratch rather than wedging on a half-landed table.
+  /** Build (once per corpus fingerprint) the stream-committed table and
+    * return its directory. A partial build (transient failure between the
+    * two queries) stores nothing, so the next call rebuilds from scratch in
+    * a new dir rather than wedging on a half-landed table.
     */
-  private def streamedTable(s: SparkSession, dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_streamgate_${ProcessHandle.current().pid()}_$key"
-    val (landing, tableDir, ckpt) = (s"$base/landing", s"$base/table", s"$base/ckpt")
-    if (graft.sources.Versioned.latest(tableDir).forall(_ < Splits - 1)) {
-      val b = new java.io.File(base)
-      if (b.exists()) org.apache.commons.io.FileUtils.deleteDirectory(b)
-      val ev = graft.operators.Relational.t(s, dir, "events")
-      (0 until Splits).foreach { k =>
-        landSingleFile(
-          ev.filter(pmod(col("event_id"), lit(Splits)) === k),
-          s"$landing/part$k", s"$landing/f$k.parquet")
+  private def streamedTable(s: SparkSession, dir: String): String =
+    Stored.path("st_stream_commit", dir, s) { base =>
+      val ev = Relational.t(s, dir, "events")
+      val files = (0 until Splits).map(k => ev.filter(pmod(col("event_id"), lit(Splits)) === k))
+      val committed = restartDrain(base, files.init, files.takeRight(1)) { (landing, table, ckpt) =>
+        EventStreams.writeVersioned(eventStream(s, landing), table, ckpt, project)
       }
-      // Hide the last file behind a rename so query #1 sees exactly two.
-      val hidden = java.nio.file.Paths.get(s"$base/f${Splits - 1}.parquet.staged")
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(s"$landing/f${Splits - 1}.parquet"), hidden)
-      drain(s, landing, tableDir, ckpt)
-      // The late file lands; a NEW query resumes from the same checkpoint
-      // and commits exactly the new data as the next version.
-      java.nio.file.Files.move(
-        hidden, java.nio.file.Paths.get(s"$landing/f${Splits - 1}.parquet"))
-      drain(s, landing, tableDir, ckpt)
-      require(graft.sources.Versioned.latest(tableDir).contains(Splits - 1),
+      require(Versioned.latest(committed).contains(Splits - 1),
         s"stream gate expected ${Splits} committed versions")
-    }
-    tableDir
-  }
+    } + "/table"
 
   /** Document-pipeline sibling of [[streamedTable]] — the SECOND gated
     * exactly-once chain, and a strictly harder one: the per-micro-batch
@@ -156,39 +180,20 @@ object StreamGate {
     * result — which is what the dd_incremental ORACLE computes, so this
     * query reuses that oracle verbatim (one source of truth).
     */
-  private def streamedDocTable(s: SparkSession, dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_docgate_${ProcessHandle.current().pid()}_$key"
-    val (landing, tableDir, ckpt) = (s"$base/landing", s"$base/table", s"$base/ckpt")
-    if (graft.sources.Versioned.latest(tableDir).forall(_ < Splits - 1)) {
-      val b = new java.io.File(base)
-      if (b.exists()) org.apache.commons.io.FileUtils.deleteDirectory(b)
-      val incoming = graft.operators.Relational.t(s, dir, "documents")
-        .filter(graft.operators.Pipeline.bucket(col("doc_id")) >= graft.operators.Pipeline.LandingBucketCap)
-      (0 until Splits).foreach { k =>
-        landSingleFile(
-          incoming.filter(pmod(col("doc_id"), lit(Splits.toLong)) === k),
-          s"$landing/part$k", s"$landing/f$k.parquet")
-      }
-      val hidden = java.nio.file.Paths.get(s"$base/f${Splits - 1}.parquet.staged")
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(s"$landing/f${Splits - 1}.parquet"), hidden)
+  private def streamedDocTable(s: SparkSession, dir: String): String =
+    Stored.path("st_doc_commit", dir, s) { base =>
+      val incoming = Relational.t(s, dir, "documents")
+        .filter(Pipeline.bucket(col("doc_id")) >= Pipeline.LandingBucketCap)
+      val files = (0 until Splits).map(k => incoming.filter(pmod(col("doc_id"), lit(Splits.toLong)) === k))
       val existing = graft.operators.Dedup.materialized(
         graft.operators.Dedup.shingled(s, dir)
-          .filter(graft.operators.Pipeline.bucket(col("doc_id")) < graft.operators.Pipeline.LandingBucketCap))
-      def drainDocs(): Unit =
-        DocStreams.dedupDocStream(
-          DocStreams.readDocStream(s, landing), existing, tableDir, ckpt)
-          .awaitTermination()
-      drainDocs()
-      java.nio.file.Files.move(
-        hidden, java.nio.file.Paths.get(s"$landing/f${Splits - 1}.parquet"))
-      drainDocs()
-      require(graft.sources.Versioned.latest(tableDir).contains(Splits - 1),
+          .filter(Pipeline.bucket(col("doc_id")) < Pipeline.LandingBucketCap))
+      val committed = restartDrain(base, files.init, files.takeRight(1)) { (landing, table, ckpt) =>
+        DocStreams.dedupDocStream(DocStreams.readDocStream(s, landing), existing, table, ckpt)
+      }
+      require(Versioned.latest(committed).contains(Splits - 1),
         s"doc stream gate expected ${Splits} committed versions")
-    }
-    tableDir
-  }
+    } + "/table"
 
   /** Window-gate versions: two time cuts before the restart, then the last
     * cut plus TWO sentinel flush files after. Append-mode windowed
@@ -218,46 +223,21 @@ object StreamGate {
     * and the gate reuses ev_window_agg's oracle verbatim (one source of
     * truth — the st_doc_commit device).
     */
-  private def streamedWindowTable(s: SparkSession, dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_wingate_${ProcessHandle.current().pid()}_$key"
-    val (landing, tableDir, ckpt) = (s"$base/landing", s"$base/table", s"$base/ckpt")
-    if (graft.sources.Versioned.latest(tableDir).forall(_ < WinSplits - 1)) {
-      val b = new java.io.File(base)
-      if (b.exists()) org.apache.commons.io.FileUtils.deleteDirectory(b)
-      val ev = graft.operators.Relational.t(s, dir, "events")
-      def us = unix_micros(col("ts"))
-      val r = ev.agg(min(us), max(us)).head()
-      require(!r.isNullAt(0),
-        s"streamedWindowTable: events table at $dir is empty — nothing to window")
-      val (minUs, maxUs) = (r.getLong(0), r.getLong(1))
-      val c1 = minUs + (maxUs - minUs) / 3
-      val c2 = minUs + 2 * (maxUs - minUs) / 3
-      landSingleFile(ev.filter(us < c1), s"$landing/part0", s"$landing/f0.parquet")
-      landSingleFile(ev.filter(us >= c1 && us < c2), s"$landing/part1", s"$landing/f1.parquet")
-      // The last cut and both sentinels stage OUTSIDE the landing dir
-      // until after the restart.
-      landSingleFile(ev.filter(us >= c2), s"$base/part2", s"$base/f2.staged")
-      def sentinel(k: Int, tsUs: Long) = landSingleFile(
-        ev.sparkSession.range(1).select(
-          lit(-k.toLong).as("event_id"),
-          timestamp_micros(lit(tsUs)).as("ts"),
-          lit(0L).as("user_id"),
-          lit("__flush").as("event_type"),
-          lit(0.0).as("value"),
-          lit(null).cast("string").as("props")),
-        s"$base/part$k", s"$base/f$k.staged")
-      // Sentinel A sits > 1 h + watermark past the last real event, so the
-      // post-A watermark clears every real window end; B sits another hour
-      // out so A's own window cannot finalize either.
-      sentinel(3, maxUs + 2L * 3600 * 1000000)
-      sentinel(4, maxUs + 3L * 3600 * 1000000)
-      // The real tail f2 MUST be processed before the watermark-advancing
-      // sentinels f3/f4 after the restart (and f0 before f1 on first drain).
-      stampDeliveryOrder(
-        s"$landing/f0.parquet", s"$landing/f1.parquet",
-        s"$base/f2.staged", s"$base/f3.staged", s"$base/f4.staged")
-      def drainWindows(): Unit = {
+  private def streamedWindowTable(s: SparkSession, dir: String): String =
+    Stored.path("st_window_commit", dir, s) { base =>
+      val ev = Relational.t(s, dir, "events")
+      val (_, c1, c2, maxUs) = thirds(ev, "streamedWindowTable", dir)
+      def flush(k: Int, tsUs: Long) = sentinel(s.range(1).select(
+        lit(-k.toLong).as("event_id"), lit(0L).as("user_id"), lit("__flush").as("event_type")), tsUs)
+      // The last cut and both sentinels stage until after the restart, and
+      // the real tail f2 MUST be processed before the watermark-advancing
+      // sentinels f3/f4. Sentinel A sits > 1 h + watermark past the last
+      // real event, so the post-A watermark clears every real window end;
+      // B sits another hour out so A's own window cannot finalize either.
+      val committed = restartDrain(base,
+        Seq(ev.filter(us < c1), ev.filter(us >= c1 && us < c2)),
+        Seq(ev.filter(us >= c2), flush(3, maxUs + 2L * 3600 * 1000000),
+          flush(4, maxUs + 3L * 3600 * 1000000))) { (landing, table, ckpt) =>
         // The sentinels are HEARTBEAT rows (the production pattern for
         // advancing an event-time clock on a quiet stream): they must flow
         // through the watermark collector, so their window is excluded at
@@ -266,34 +246,16 @@ object StreamGate {
         // reach the clock, and the last real windows never flush
         // (measured: 5 rows short). Sink-side the drop is trivially safe:
         // at most the one __flush window row, in the final eviction batch.
-        val q = EventStreams.streamingWindowedAgg(
-          s.readStream.schema(EventSchema)
-            .option("maxFilesPerTrigger", 1).parquet(landing))
-          .writeStream
-          .outputMode("append")
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            EventStreams.versionedSink(tableDir)(
-              batch.filter(col("event_type") =!= "__flush"), batchId)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        EventStreams.writeVersioned(
+          EventStreams.streamingWindowedAgg(eventStream(s, landing)), table, ckpt,
+          _.filter(col("event_type") =!= "__flush"))
       }
-      drainWindows()
-      (2 to 4).foreach { k =>
-        java.nio.file.Files.move(java.nio.file.Paths.get(s"$base/f$k.staged"),
-          java.nio.file.Paths.get(s"$landing/f$k.parquet"))
-      }
-      drainWindows()
       // ≥, not ==: AvailableNow appends a NO-DATA batch after each drain
       // when the watermark advanced (the stateful-query eviction batch),
       // so the five landing files commit as five-plus versions.
-      require(graft.sources.Versioned.latest(tableDir).exists(_ >= WinSplits - 1),
+      require(Versioned.latest(committed).exists(_ >= WinSplits - 1),
         s"window stream gate expected at least $WinSplits committed versions")
-    }
-    tableDir
-  }
+    } + "/table"
 
   /** Dedup-gate versions: landing files = micro-batches (2 before the
     * restart, 1 after), each carrying deliberately REPLAYED rows.
@@ -319,63 +281,32 @@ object StreamGate {
     * row-level hash (vs plain SELECT over the original events) cannot
     * match. The builder requires both replay slices non-empty — a corpus
     * change must fail loudly, never pass vacuously with no duplicates to
-    * drop.
+    * drop. The micro-batches are global time cuts, so the delivery-order
+    * stamp keeps the advanced watermark from late-dropping an earlier
+    * cut's rows.
     */
-  private def streamedDedupTable(s: SparkSession, dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_ddgate_${ProcessHandle.current().pid()}_$key"
-    val (landing, tableDir, ckpt) = (s"$base/landing", s"$base/table", s"$base/ckpt")
-    if (graft.sources.Versioned.latest(tableDir).forall(_ < DedupSplits - 1)) {
-      val b = new java.io.File(base)
-      if (b.exists()) org.apache.commons.io.FileUtils.deleteDirectory(b)
-      val ev = graft.operators.Relational.t(s, dir, "events")
-      def us = unix_micros(col("ts"))
-      val r = ev.agg(min(us), max(us)).head()
-      require(!r.isNullAt(0),
-        s"streamedDedupTable: events table at $dir is empty — nothing to ingest")
-      val (minUs, maxUs) = (r.getLong(0), r.getLong(1))
-      val c1 = minUs + (maxUs - minUs) / 3
-      val c2 = minUs + 2 * (maxUs - minUs) / 3
+  private def streamedDedupTable(s: SparkSession, dir: String): String =
+    Stored.path("st_dedup_commit", dir, s) { base =>
+      val ev = Relational.t(s, dir, "events")
+      val (_, c1, c2, _) = thirds(ev, "streamedDedupTable", dir)
       val replay1 = ev.filter(us >= c1 - ReplayHorizonUs && us < c1)
       val replay2 = ev.filter(us >= c2 - ReplayHorizonUs && us < c2)
       require(replay1.limit(1).count() == 1 && replay2.limit(1).count() == 1,
         "streamedDedupTable: a replay slice is empty — the gate would pass " +
           "vacuously with no duplicates for the state store to drop")
-      landSingleFile(ev.filter(us < c1), s"$landing/part0", s"$landing/f0.parquet")
-      landSingleFile(ev.filter(us >= c1 && us < c2).unionByName(replay1),
-        s"$landing/part1", s"$landing/f1.parquet")
-      landSingleFile(ev.filter(us >= c2).unionByName(replay2),
-        s"$base/part2", s"$base/f2.staged")
-      // Delivery-order pin (the window-gate device): the micro-batches are
-      // global time cuts, so the file source must see them in cut order or
-      // the advanced watermark late-drops an earlier cut's rows.
-      stampDeliveryOrder(
-        s"$landing/f0.parquet", s"$landing/f1.parquet", s"$base/f2.staged")
-      def drainDedup(): Unit = {
-        val q = s.readStream.schema(EventSchema)
-          .option("maxFilesPerTrigger", 1).parquet(landing)
-          .withWatermark("ts", DedupDelay)
-          .dropDuplicatesWithinWatermark("event_id")
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            EventStreams.versionedSink(tableDir)(project(batch), batchId)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+      val committed = restartDrain(base,
+        Seq(ev.filter(us < c1), ev.filter(us >= c1 && us < c2).unionByName(replay1)),
+        Seq(ev.filter(us >= c2).unionByName(replay2))) { (landing, table, ckpt) =>
+        EventStreams.writeVersioned(
+          eventStream(s, landing).withWatermark("ts", DedupDelay)
+            .dropDuplicatesWithinWatermark("event_id"),
+          table, ckpt, project)
       }
-      drainDedup()
-      java.nio.file.Files.move(java.nio.file.Paths.get(s"$base/f2.staged"),
-        java.nio.file.Paths.get(s"$landing/f2.parquet"))
-      drainDedup()
       // ≥, not ==: stateful drains may append trailing no-data eviction
       // batches (the window-gate observation).
-      require(graft.sources.Versioned.latest(tableDir).exists(_ >= DedupSplits - 1),
+      require(Versioned.latest(committed).exists(_ >= DedupSplits - 1),
         s"dedup stream gate expected at least $DedupSplits committed versions")
-    }
-    tableDir
-  }
+    } + "/table"
 
   /** Session-gate versions: two before the restart, two after (the last
     * time cut + the sentinel flush file).
@@ -400,73 +331,27 @@ object StreamGate {
     * session stays open and never emits. The committed table is therefore
     * EXACTLY the batch sessionization of the real events, and the gate
     * reuses ev_sessions' oracle verbatim (one source of truth — the
-    * st_doc_commit device).
+    * st_doc_commit device). The real tail f2 must precede the sentinel f3
+    * after the restart, or the flush closes every session before f2's
+    * events arrive and the frontier rule drops them.
     */
-  private def streamedSessionTable(s: SparkSession, dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_sessgate_${ProcessHandle.current().pid()}_$key"
-    val (landing, tableDir, ckpt) = (s"$base/landing", s"$base/table", s"$base/ckpt")
-    if (graft.sources.Versioned.latest(tableDir).forall(_ < SessSplits - 1)) {
-      val b = new java.io.File(base)
-      if (b.exists()) org.apache.commons.io.FileUtils.deleteDirectory(b)
-      val ev = graft.operators.Relational.t(s, dir, "events")
-      def us = unix_micros(col("ts"))
-      val r = ev.agg(min(us), max(us)).head()
-      // An empty events table has NULL min/max — fail with a clear message
-      // instead of an opaque NPE from getLong (the other gate builders'
-      // empty-source posture).
-      require(!r.isNullAt(0),
-        s"streamedSessionTable: events table at $dir is empty — nothing to split or sessionize")
-      val (minUs, maxUs) = (r.getLong(0), r.getLong(1))
-      val c1 = minUs + (maxUs - minUs) / 3
-      val c2 = minUs + 2 * (maxUs - minUs) / 3
-      landSingleFile(ev.filter(us < c1), s"$landing/part0", s"$landing/f0.parquet")
-      landSingleFile(ev.filter(us >= c1 && us < c2), s"$landing/part1", s"$landing/f1.parquet")
-      // The last cut and the sentinel stage OUTSIDE the landing dir until
-      // after the restart.
-      landSingleFile(ev.filter(us >= c2), s"$base/part2", s"$base/f2.staged")
-      landSingleFile(
+  private def streamedSessionTable(s: SparkSession, dir: String): String =
+    Stored.path("st_session_commit", dir, s) { base =>
+      val ev = Relational.t(s, dir, "events")
+      val (_, c1, c2, maxUs) = thirds(ev, "streamedSessionTable", dir)
+      val flush = sentinel(
         ev.select(col("user_id")).distinct()
-          .select(
-            (-col("user_id")).as("event_id"),
-            timestamp_micros(
-              lit(maxUs + EventStreams.SessionGapMicros + 3600L * 1000000)).as("ts"),
-            col("user_id"),
-            lit("__flush").as("event_type"),
-            lit(0.0).as("value"),
-            lit(null).cast("string").as("props")),
-        s"$base/part3", s"$base/f3.staged")
-      // Same delivery-order pin as the window gate: the real tail f2 must
-      // precede the session-flushing sentinel f3 after the restart, or the
-      // flush closes every session before f2's events arrive and the
-      // frontier rule drops them.
-      stampDeliveryOrder(
-        s"$landing/f0.parquet", s"$landing/f1.parquet",
-        s"$base/f2.staged", s"$base/f3.staged")
-      def drainSessions(): Unit = {
-        val q = EventStreams.sessionizeStream(
-          s.readStream.schema(EventSchema).option("maxFilesPerTrigger", 1).parquet(landing))
-          .toDF()
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            EventStreams.versionedSink(tableDir)(batch, batchId)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          .select((-col("user_id")).as("event_id"), col("user_id"), lit("__flush").as("event_type")),
+        maxUs + EventStreams.SessionGapMicros + 3600L * 1000000)
+      val committed = restartDrain(base,
+        Seq(ev.filter(us < c1), ev.filter(us >= c1 && us < c2)),
+        Seq(ev.filter(us >= c2), flush)) { (landing, table, ckpt) =>
+        EventStreams.writeVersioned(
+          EventStreams.sessionizeStream(eventStream(s, landing)).toDF(), table, ckpt)
       }
-      drainSessions()
-      java.nio.file.Files.move(java.nio.file.Paths.get(s"$base/f2.staged"),
-        java.nio.file.Paths.get(s"$landing/f2.parquet"))
-      java.nio.file.Files.move(java.nio.file.Paths.get(s"$base/f3.staged"),
-        java.nio.file.Paths.get(s"$landing/f3.parquet"))
-      drainSessions()
-      require(graft.sources.Versioned.latest(tableDir).contains(SessSplits - 1),
+      require(Versioned.latest(committed).contains(SessSplits - 1),
         s"session stream gate expected $SessSplits committed versions")
-    }
-    tableDir
-  }
+    } + "/table"
 
   /** Join-gate versions: two time cuts before the restart, then the last
     * cut plus TWO sentinel files after (the window gate's flush shape:
@@ -499,19 +384,10 @@ object StreamGate {
     * own join outputs are excluded at the SINK (error_id >= 0), the
     * window gate's trivially-safe drop.
     */
-  private def streamedJoinTable(s: SparkSession, dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_joingate_${ProcessHandle.current().pid()}_$key"
-    val (landing, tableDir, ckpt) = (s"$base/landing", s"$base/table", s"$base/ckpt")
-    if (graft.sources.Versioned.latest(tableDir).forall(_ < JoinSplits - 1)) {
-      val b = new java.io.File(base)
-      if (b.exists()) org.apache.commons.io.FileUtils.deleteDirectory(b)
-      val ev = graft.operators.Relational.t(s, dir, "events")
-      def us = unix_micros(col("ts"))
-      val r = ev.agg(min(us), max(us)).head()
-      require(!r.isNullAt(0),
-        s"streamedJoinTable: events table at $dir is empty — nothing to join")
-      val (minUs, maxUs) = (r.getLong(0), r.getLong(1))
+  private def streamedJoinTable(s: SparkSession, dir: String): String =
+    Stored.path("st_join_commit", dir, s) { base =>
+      val ev = Relational.t(s, dir, "events")
+      val (minUs, thirdUs, _, maxUs) = thirds(ev, "streamedJoinTable", dir)
       // Non-vacuity by CONSTRUCTION: natural thirds cuts make straddling
       // matches a corpus accident (measured zero at sf0.01 — matches are
       // rare and the horizon is 5 minutes of a 30-day span), so the restart
@@ -539,51 +415,24 @@ object StreamGate {
       // Keep the thirds shape when the pair allows it; pull c1 below the
       // error when it sits early so the error always lands in f1 (the file
       // whose state the restart must carry), never in f0.
-      val c1 = math.min(minUs + (maxUs - minUs) / 3, (minUs + eTu) / 2)
-      landSingleFile(ev.filter(us < c1), s"$landing/part0", s"$landing/f0.parquet")
-      landSingleFile(ev.filter(us >= c1 && us < c2), s"$landing/part1", s"$landing/f1.parquet")
-      landSingleFile(ev.filter(us >= c2), s"$base/part2", s"$base/f2.staged")
+      val c1 = math.min(thirdUs, (minUs + eTu) / 2)
       // Twin-typed sentinel file k: one error + one click row, far future.
-      def sentinel(k: Int, tsUs: Long) = landSingleFile(
-        ev.sparkSession.range(2).select(
-          (lit(-(2L * k)) - col("id")).as("event_id"),
-          timestamp_micros(lit(tsUs)).as("ts"),
-          (lit(-1L) - col("id")).as("user_id"),
-          when(col("id") === 0, lit("error")).otherwise(lit("click")).as("event_type"),
-          lit(0.0).as("value"),
-          lit(null).cast("string").as("props")),
-        s"$base/part$k", s"$base/f$k.staged")
-      sentinel(3, maxUs + 2L * 3600 * 1000000)
-      sentinel(4, maxUs + 3L * 3600 * 1000000)
-      stampDeliveryOrder(
-        s"$landing/f0.parquet", s"$landing/f1.parquet",
-        s"$base/f2.staged", s"$base/f3.staged", s"$base/f4.staged")
-      def drainJoin(): Unit = {
-        def src() = s.readStream.schema(EventSchema)
-          .option("maxFilesPerTrigger", 1).parquet(landing)
-        val q = EventStreams.streamingErrorClickPairsOuter(src(), src())
-          .select(col("error_id"), col("click_id"), col("user_id"))
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            EventStreams.versionedSink(tableDir)(
-              batch.filter(col("error_id") >= 0), batchId)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+      def flush(k: Int, tsUs: Long) = sentinel(s.range(2).select(
+        (lit(-(2L * k)) - col("id")).as("event_id"),
+        (lit(-1L) - col("id")).as("user_id"),
+        when(col("id") === 0, lit("error")).otherwise(lit("click")).as("event_type")), tsUs)
+      val committed = restartDrain(base,
+        Seq(ev.filter(us < c1), ev.filter(us >= c1 && us < c2)),
+        Seq(ev.filter(us >= c2), flush(3, maxUs + 2L * 3600 * 1000000),
+          flush(4, maxUs + 3L * 3600 * 1000000))) { (landing, table, ckpt) =>
+        EventStreams.writeVersioned(
+          EventStreams.streamingErrorClickPairsOuter(eventStream(s, landing), eventStream(s, landing))
+            .select(col("error_id"), col("click_id"), col("user_id")),
+          table, ckpt, _.filter(col("error_id") >= 0))
       }
-      drainJoin()
-      (2 to 4).foreach { k =>
-        java.nio.file.Files.move(java.nio.file.Paths.get(s"$base/f$k.staged"),
-          java.nio.file.Paths.get(s"$landing/f$k.parquet"))
-      }
-      drainJoin()
-      require(graft.sources.Versioned.latest(tableDir).exists(_ >= JoinSplits - 1),
+      require(Versioned.latest(committed).exists(_ >= JoinSplits - 1),
         s"join stream gate expected at least $JoinSplits committed versions")
-    }
-    tableDir
-  }
+    } + "/table"
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -592,7 +441,7 @@ object StreamGate {
     // — equality proves the restart-spanning ingest lost nothing and
     // duplicated nothing (sums and counts would both move on any slip).
     "st_stream_commit" -> { (s, dir) =>
-      graft.sources.Versioned.read(s, streamedTable(s, dir))
+      Versioned.read(s, streamedTable(s, dir))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),
           sum(col("cents")).as("total_cents"),
@@ -608,7 +457,7 @@ object StreamGate {
     // exactly the one-pass batch matches — nothing lost, duplicated, or
     // drifted through the streaming chain.
     "st_doc_commit" -> { (s, dir) =>
-      graft.sources.Versioned.read(s, streamedDocTable(s, dir))
+      Versioned.read(s, streamedDocTable(s, dir))
         .orderBy("incoming_id", "existing_id")
     },
 
@@ -621,7 +470,7 @@ object StreamGate {
     // one duplicates or renumbers them, and a cut-straddling session would
     // split in two. Nothing of the kind may appear for the hash to hold.
     "st_session_commit" -> { (s, dir) =>
-      graft.sources.Versioned.read(s, streamedSessionTable(s, dir))
+      Versioned.read(s, streamedSessionTable(s, dir))
         .orderBy("user_id", "sess_id")
     },
 
@@ -633,7 +482,7 @@ object StreamGate {
     // the checkpoint restart, and that append-mode finalization emitted
     // every real window exactly once.
     "st_window_commit" -> { (s, dir) =>
-      graft.sources.Versioned.read(s, streamedWindowTable(s, dir))
+      Versioned.read(s, streamedWindowTable(s, dir))
         .orderBy("window_start", "event_type")
     },
 
@@ -645,7 +494,7 @@ object StreamGate {
     // the ones arriving after the checkpoint restart, and passed every
     // genuine row exactly once.
     "st_dedup_commit" -> { (s, dir) =>
-      graft.sources.Versioned.read(s, streamedDedupTable(s, dir))
+      Versioned.read(s, streamedDedupTable(s, dir))
         .orderBy("event_id")
     },
 
@@ -656,7 +505,7 @@ object StreamGate {
     // state survived the restart (cut-straddling matches found, unmatched
     // errors null-extended exactly once at watermark eviction).
     "st_join_commit" -> { (s, dir) =>
-      graft.sources.Versioned.read(s, streamedJoinTable(s, dir))
+      Versioned.read(s, streamedJoinTable(s, dir))
         .orderBy("error_id", "click_id")
     }
   )

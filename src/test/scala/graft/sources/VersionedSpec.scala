@@ -1,24 +1,28 @@
 package graft.sources
 
 import graft.SparkSpec
+import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.functions._
 
-class VersionedSpec extends SparkSpec {
+class VersionedSpec extends SparkSpec with BeforeAndAfterAll {
+
+  private val made = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
 
   private def freshDir(): String = {
     val d = java.nio.file.Files.createTempDirectory("graft_versioned_spec").toFile
-    d.deleteOnExit()
+    made += d
     d.getAbsolutePath + "/t"
   }
 
+  override def afterAll(): Unit =
+    try made.foreach(org.apache.commons.io.FileUtils.deleteDirectory) finally super.afterAll()
+
   test("mt_vacuum_read leaves exactly one referenced version on disk") {
     // Run the gate query (builds append+append+replace+vacuum on first
-    // touch), then inspect its PID-scoped table dir structurally.
+    // touch), then inspect its stored table dir structurally.
     val rows = Versioned.queries("mt_vacuum_read")(spark, sf()).collect()
     assert(rows.nonEmpty)
-    val key = sf().replaceAll("[^A-Za-z0-9]", "_")
-    val tdir =
-      s"${sys.props("java.io.tmpdir")}/graft_vacuumed_${ProcessHandle.current().pid()}_$key"
+    val tdir = Versioned.vacuumedTable(spark, sf())
     // Only the replace commit's manifest survives; its data dir is the only
     // version dir left (v0/v1 data became unreferenced and were deleted).
     val names = new java.io.File(tdir).list().toSeq
