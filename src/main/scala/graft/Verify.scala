@@ -21,25 +21,16 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // Every string through `Bench.jsonStr`: a tab or CR left raw in
+    // builder-authored SQL would make the driver's json.load fail and
+    // silently zero the round's correctness.
     val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Bench.jsonStr(k)}: ${Bench.jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Full declared-query list: lets the local gate detect a query that
     // crashed (wrote no result dir) instead of silently skipping it.
     Files.writeString(Paths.get(s"$outDir/queries.json"),
-      SparkEntry.queries.keys.toSeq.filter(keep).sorted.map(q).mkString("[", ",", "]"))
+      SparkEntry.queries.keys.toSeq.filter(keep).sorted.map(Bench.jsonStr).mkString("[", ",", "]"))
     spark.stop()
   }
 }

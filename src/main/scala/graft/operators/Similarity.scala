@@ -692,9 +692,9 @@ object Similarity {
     // needed it PrIters+1 times): the old one-row count aggregate was
     // broadcast-cross-joined into init AND every round, costing an extra
     // corpus scan + broadcast build per round — 4 scans/builds at PrIters=3
-    // (r19 plan evidence: plans/r19/ss_pagerank_{before,after}.txt, 8 → 4
-    // embeddings scans). Arithmetic is unchanged: count→long→double is
-    // exact (n ≪ 2^53) and `lit(0.15)/lit(n)` constant-folds through the
+    // (r19 plan evidence, OPTIMIZATION_r19.md: 8 → 4 embeddings scans).
+    // Arithmetic is unchanged: count→long→double is exact (n ≪ 2^53) and
+    // `lit(0.15)/lit(n)` constant-folds through the
     // same IEEE division the broadcast column fed, so the ranks are
     // bit-identical (oracle-gated).
     val nD = Stored.scalarLong("pr_n_nodes", dir, s)(nodes.count()).toDouble

@@ -14,19 +14,15 @@ import org.apache.spark.sql.functions._
   */
 object Bucketing {
 
-  /** Write `df` as a bucketed managed table (sorted within buckets on the
-    * same key, enabling sort-merge joins without a sort either).
+  /** Write `df` as a bucketed external table (sorted within buckets on the
+    * same key, enabling sort-merge joins without a sort either). Its files
+    * live at a fresh `Connectors.tmp` path, so they go at JVM exit.
     */
   def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit = {
-    val spark = df.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    // A crashed previous run can leave the managed location behind without
-    // catalog metadata; Overwrite alone then fails with LOCATION_ALREADY_EXISTS.
-    val warehouse = new java.io.File(spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
-    val loc = new java.io.File(warehouse, table)
-    if (loc.exists()) org.apache.commons.io.FileUtils.deleteDirectory(loc)
+    df.sparkSession.sql(s"DROP TABLE IF EXISTS $table")
     df.write
       .mode(SaveMode.Overwrite)
+      .option("path", graft.operators.Connectors.tmp(table))
       .bucketBy(buckets, key)
       .sortBy(key)
       .format("parquet")

@@ -1,62 +1,86 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
+import java.security.MessageDigest
+import java.util.regex.Pattern
+import org.apache.spark.sql.execution.ExplainMode
 
-/** Dev tool: write each named query's `.explain("formatted")` text to
-  * `<outDir>/<name>_<suffix>.txt` — the optimization-round evidence format
-  * (plans/rNN/<query>_before.txt / _after.txt). Build-only: plans are
-  * captured without executing the query, so a snapshot run is cheap and
-  * does not disturb a concurrent measurement.
-  * Usage: PlanSnap <outDir> <suffix> <sfDir> <q1,q2,...> [exec] [conf:key=value ...]
+/** Dev tool: plan identity. Writes each named query's `.explain("formatted")`
+  * text, normalised, to `<outDir>/<name>.txt`, and `<outDir>/fingerprints.tsv`:
+  * one `name<TAB>hash` line per query, sorted by name, the hash being the
+  * first 16 hex digits of that text's SHA-256. No query list means every
+  * query. The session is always `local[4]`, since partition counts follow the
+  * core count. Plans are built, not run; with `exec` each query is collected
+  * first, so the text carries the AQE final plan.
   *
-  * With the trailing `exec` flag each query is RUN (noop sink) before the
-  * dump, so the text carries the AQE FINAL plan (`isFinalPlan=true`) —
-  * runtime rewrites like the sort-merge→shuffled-hash conversion are
-  * invisible in the initial plan and need this mode for honest evidence.
+  * Check: `PlanSnap <dir> <sf0.01 dir>`, then `diff plans/fingerprints.tsv
+  * <dir>/fingerprints.tsv`; `diff -r` two output dirs shows what moved.
+  * Usage: PlanSnap <outDir> <sfDir> [q1,q2,...] [exec] [conf:key=value ...]
   */
 object PlanSnap {
-  private val Usage = "usage: PlanSnap <outDir> <suffix> <sfDir> <q1,q2,...> [exec] [conf:key=value ...]"
+  private val Usage = "usage: PlanSnap <outDir> <sfDir> [q1,q2,...] [exec] [conf:key=value ...]"
+
+  /** `plan` without what varies by run, host, pid, checkout dir or corpus
+    * mtime: expression and codegen ids are renumbered in order of first
+    * appearance; plan, RDD and query-stage ids, call-site line numbers, JVM
+    * lambda and object addresses and the bucketed gate tables' corpus hash
+    * become `N`; the `Connectors.tmp` prefix (temp dir, pid, counter),
+    * `corpus` and the working dir become `<tmp>/`, `<corpus>` and `<cwd>`.
+    */
+  private[graft] def normalise(plan: String, corpus: String): String = {
+    def abs(dir: String) = Paths.get(dir).toAbsolutePath.normalize.toString
+    val dirs = Seq(abs(corpus) -> "<corpus>", abs(sys.props("user.dir")) -> "<cwd>").sortBy(-_._1.length)
+    val located = dirs.foldLeft(plan) { case (s, (d, tag)) => s.replace(d, tag) }
+    val stripped = Seq(
+      "[^\\s,\\[\\]:]*/graft_roundtrip_\\d+_\\d+_" -> "<tmp>/",
+      "(plan_id=|RDD\\[|\\.scala:|QueryStage\\n(?:Output .*\\n)?Arguments: )\\d+" -> "$1N",
+      "(Lambda)\\$?\\d*/0x\\p{XDigit}+" -> "$1",
+      "(?<=[\\w$])@\\p{XDigit}{1,8}\\b" -> "@N",
+      "(bk_gate_(?:lineitem|orders)_)\\p{XDigit}{8}\\b" -> "$1N"
+    ).foldLeft(located) { case (s, (re, to)) => s.replaceAll(re, to) }
+    Seq("(?<=codegen id : )\\d+", "(?<=#)\\d+").foldLeft(stripped) { (s, re) =>
+      val ids = collection.mutable.Map.empty[String, Int]
+      Pattern.compile(re).matcher(s).replaceAll(m => ids.getOrElseUpdate(m.group, ids.size + 1).toString)
+    }
+  }
+
+  private def hash(text: String): String =
+    MessageDigest.getInstance("SHA-256").digest(text.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
 
   def main(args: Array[String]): Unit = {
-    if (args.length < 4) ToolArgs.orUsage(Usage)(None)
-    val (outDir, suffix, sfDir) = (args(0), args(1), args(2))
-    val names = args(3).split(",").toSeq
-    // Flags live strictly AFTER the four positionals (ADVICE r19: a bare
-    // args.contains("exec") scanned the positionals too, so an outDir or
-    // suffix literally named "exec" silently flipped execution mode).
-    val flags = args.drop(4)
+    if (args.length < 2) ToolArgs.orUsage(Usage)(None)
+    val (outDir, sfDir) = (args(0), args(1))
+    val listed = args.lift(2).filterNot(a => a == "exec" || a.startsWith("conf:"))
+    val names = listed.fold(graft.SparkEntry.queries.keys.toSeq)(_.split(",").toSeq).sorted
+    val flags = args.drop(2 + listed.size)
     val exec = flags.contains("exec")
-    // Optional runtime-conf overrides (`conf:key=value` args): lets a
-    // snapshot pin an A/B arm, e.g. conf:spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold=0.
     val confs = ToolArgs.orUsage(Usage)(ToolArgs.prefixed(flags.filterNot(_ == "exec").toSeq, "conf:"))
-    val spark = graft.EngineSession.local()
+    val spark = graft.EngineSession.local("4")
     Files.createDirectories(Paths.get(outDir))
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    var failures = 0
-    names.foreach { name =>
+    def snap(name: String): String = {
+      val df = graft.SparkEntry.queries(name)(spark, sfDir)
+      // collect(), not a noop write: the write would run its own QueryExecution.
+      if (exec) df.collect()
+      normalise(df.queryExecution.explainString(ExplainMode.fromString("formatted")), sfDir)
+    }
+    val lines = names.flatMap { name =>
       try {
-        val df = graft.SparkEntry.queries(name)(spark, sfDir)
-        // collect(), not a noop write: the write wraps the plan in its OWN
-        // QueryExecution, leaving df.queryExecution un-executed (and the
-        // dump on the initial plan); collect() drives this one, so the dump
-        // carries the AQE final plan. Gate outputs are result-sized.
-        if (exec) df.collect()
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), txt)
-        println(s"[plansnap] wrote $outDir/${name}_$suffix.txt (${txt.linesIterator.size} lines)")
+        val first = snap(name)
+        // Spark orders a distinct-aggregate rewrite's groups (the Expand that
+        // adds `gid`) by a hash of their expression ids, which depend on what
+        // the JVM built before. Each build draws new ids: keep the least text.
+        val txt = if (first.contains(", gid#")) (first +: Seq.fill(15)(snap(name))).min else first
+        Files.writeString(Paths.get(outDir, s"$name.txt"), txt)
+        Some(s"$name\t${hash(txt)}")
       } catch { case e: Throwable =>
-        failures += 1
         System.err.println(s"[plansnap] $name failed: ${e.getMessage}")
+        None
       }
     }
+    Files.writeString(Paths.get(outDir, "fingerprints.tsv"), lines.map(_ + "\n").mkString)
+    println(s"[plansnap] wrote $outDir/fingerprints.tsv (${lines.size}/${names.size} queries)")
     spark.stop()
-    // Exit non-zero when any requested snapshot failed (ADVICE r19: a
-    // silent rc=0 made an evidence-capture run that produced nothing look
-    // successful to a calling script).
-    if (failures > 0) {
-      System.err.println(s"[plansnap] $failures/${names.size} snapshots FAILED")
-      sys.exit(1)
-    }
+    if (lines.size < names.size) sys.exit(1)
   }
 }

@@ -2,24 +2,24 @@ package graft.tools
 
 import graft.SparkEntry
 
-/** Dev tool: time named queries one after another in ONE JVM (optionally
-  * print each physical plan), with a per-stage listener.
-  * Usage: TimeQuery <name[,name...]> <sfDir> [explain] [noop]
+/** Dev tool: time named queries one after another in ONE JVM, with a
+  * per-stage listener.
+  * Usage: TimeQuery <name[,name...]> <sfDir> [noop]
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
     // Names AND dir REQUIRED: no machine-specific default (ADVICE r14).
     if (args.length < 2) {
-      System.err.println("usage: TimeQuery <name[,name...]> <sfDir> [explain] [noop]")
+      System.err.println("usage: TimeQuery <name[,name...]> <sfDir> [noop]")
       sys.exit(2)
     }
     val names = args(0).split(",").toSeq
     val sfDir = args(1)
     val flags = args.drop(2)
     // The ENGINE session, not a bare builder: a hand-rolled session here
-    // silently dropped GraftExtensions, so explained plans were missing
-    // every injected optimizer rule (TopKRewrite, JoinElimination,
-    // EagerAggregation) that the gate and bench sessions run with.
+    // silently dropped GraftExtensions and every injected optimizer rule
+    // (TopKRewrite, JoinElimination, EagerAggregation) that the gate and
+    // bench sessions run with.
     val spark = graft.EngineSession.local()
     spark.sparkContext.setLogLevel("WARN")
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
@@ -37,7 +37,6 @@ object TimeQuery {
       val tb = System.nanoTime()
       val df = SparkEntry.queries(name)(spark, sfDir)
       val buildSec = (System.nanoTime() - tb) / 1e9
-      if (flags.contains("explain")) df.explain("formatted")
       val t0 = System.nanoTime()
       val n = if (flags.contains("noop")) {
         df.write.mode("overwrite").format("noop").save(); -1L

@@ -23,6 +23,18 @@ class BucketingSpec extends SparkSpec {
       val expected = li.join(o, li("l_orderkey") === o("o_orderkey")).count()
       assert(joined.count() == expected)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    // Bucketed tables, the gate's included, are external: their files are
+    // not under the warehouse dir, where nothing would ever delete them.
+    Bucketing.ensureGateTables(spark, sf())
+    val warehouse = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+    val tables = Seq("b_lineitem", "b_orders") ++
+      spark.catalog.listTables().collect().map(_.name).filter(_.startsWith("bk_gate_"))
+    assert(tables.size >= 4, s"expected the two gate tables: $tables")
+    tables.foreach { t =>
+      val loc = spark.sql(s"DESCRIBE TABLE EXTENDED $t").collect()
+        .collectFirst { case r if r.getString(0) == "Location" => r.getString(1) }.get
+      assert(!loc.stripPrefix("file:").startsWith(warehouse), s"$t is stored under the warehouse dir: $loc")
+    }
   }
 
   test("gate query bk_colocated_join joins bucket-to-bucket with no exchange on the key") {
