@@ -146,6 +146,13 @@ object EngineSession {
       // The engine adds no per-session jars or files, so sessions share one
       // loader.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // The events table has shipped with parquet TIMESTAMP(NANOS) `ts`,
+      // which Spark's reader otherwise rejects (PARQUET_TYPE_ILLEGAL); the
+      // legacy flag reads it as an epoch-nanos long that Tables.normalizeTs
+      // turns back into a timestamp. It changes only nanosecond timestamp
+      // columns, and fixing it for the whole engine keeps a table's inferred
+      // schema a function of its files alone (the Stored schema cache key).
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.task.maxFailures", "4")
       .config("spark.speculation", "true")

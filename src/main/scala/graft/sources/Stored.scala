@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Session-scoped stored-structure tier (shared by the ANN indexes in
   * [[graft.operators.Similarity]], the BPE merge table in
@@ -14,8 +15,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * One cache holds every artifact kind — a built directory ([[path]]; the
   * stream and versioned gate tables, and [[materialize]]'s parquet frames),
-  * a driver-side long ([[scalarLong]]) and an executor-pinned frame
-  * ([[pinned]]) — keyed by (kind, name, dataset dir, and for pins the
+  * a driver-side long ([[scalarLong]]), an executor-pinned frame
+  * ([[pinned]]) and a parquet file's inferred schema ([[schema]], read by
+  * [[Tables.parquet]]) — keyed by (kind, name, dataset dir, and for pins the
   * owning applicationId). The build thunks are by-name so a cache hit
   * constructs no training plan at all (plan construction itself was the
   * LSH planning cliff). Keyed by dataset dir so scale factors never share
@@ -24,11 +26,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Fingerprint contract: every entry carries the (relative path, length,
   * mtime) listing of the files under its `dir`, taken before the build. A
   * lookup whose listing differs is a miss, so a rewritten corpus rebuilds.
+  * A schema's `dir` is the parquet path itself, so rewriting one table
+  * re-infers that table's schema only.
   *
   * A build runs under the cache's monitor, and a gate table's build
   * ([[path]]) runs whole streaming queries: no micro-batch body may call
   * `Stored`, or its stream thread waits on the monitor that the thread
-  * awaiting the stream holds.
+  * awaiting the stream holds. That includes every table read: the first
+  * [[Tables.parquet]] read of a path (so [[Tables.t]] and
+  * [[materialize]]) takes the monitor to store the schema.
   */
 object Stored {
   private case class Key(kind: String, name: String, dir: String, app: String = "")
@@ -166,6 +172,13 @@ object Stored {
     cache.keySet().stream().filter(_.kind == "pin").count().toInt
   }
 
+  /** The inferred schema of the parquet file or directory at `path`, once
+    * per listing of that path. A missing path fails in `infer` and stores
+    * nothing, so a call after the file appears reads it.
+    */
+  private[sources] def schema(path: String, s: SparkSession)(infer: => StructType): StructType =
+    lookup(Key("schema", "", path), s)(infer)
+
   /** A stored directory: a fresh [[graft.operators.Connectors.tmp]] path
     * that `build` fills ONCE per (name, corpus); returns the path. A
     * rebuild writes a new path, so frames read from the old one stay
@@ -186,5 +199,5 @@ object Stored {
     * across an AQE plan's independent broadcasts).
     */
   def materialize(name: String, dir: String, s: SparkSession)(df: => DataFrame): DataFrame =
-    s.read.parquet(path(name, dir, s)(df.write.mode("overwrite").parquet(_)))
+    Tables.parquet(s, path(name, dir, s)(df.write.mode("overwrite").parquet(_)))
 }

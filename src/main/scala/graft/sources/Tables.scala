@@ -6,15 +6,28 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
 /** Table access layer for the driver-generated parquet corpus (TESTDATA.md).
   *
+  * Every corpus table and every [[Stored.materialize]] read-back goes
+  * through the one reader, [[parquet]]. It takes the file's inferred schema
+  * from [[Stored.schema]], once per (path, listing of that path), and reads
+  * with it declared, so building a query starts no footer-merge job to
+  * infer a schema. Only the `StructType` is cached, never the DataFrame or
+  * its plan: a self-join needs fresh attribute ids on every read. The key holds no conf: `nanosAsLong` (below), which changes
+  * the inferred `ts` type, is fixed for the whole engine. Reads of paths
+  * written fresh per call (temp dirs, view versions) stay plain
+  * `read.parquet`: their first lookup would always miss. The first read of
+  * a path takes [[Stored]]'s monitor, so no micro-batch body or other
+  * stream-thread code may read a table through this object.
+  *
   * The one source quirk: `events.parquet` has shipped with two different `ts`
   * physical layouts across testdata generations, and the loader adapts to
   * whichever is on disk so every downstream plan sees the same logical column
   * (session-zone `TIMESTAMP`, micro precision):
   *
   *  - parquet `TIMESTAMP(NANOS)` — Spark's reader rejects it outright
-  *    (PARQUET_TYPE_ILLEGAL), so we read with
-  *    `spark.sql.legacy.parquet.nanosAsLong=true` (ts arrives as an epoch
-  *    nanos long) and rebuild a micros timestamp with integer division —
+  *    (PARQUET_TYPE_ILLEGAL), so the engine session reads with
+  *    `spark.sql.legacy.parquet.nanosAsLong=true` ([[graft.EngineSession]]):
+  *    ts arrives as an epoch nanos long, and the loader rebuilds a micros
+  *    timestamp with integer division —
   *    `DIV`, not `/`: a 2024 epoch-nanos value (~1.7e18) far exceeds a
   *    double's 53-bit mantissa, so float division would corrupt timestamps.
   *    Truncation (floor) matches how DuckDB converts nanos→micros.
@@ -28,7 +41,14 @@ object Tables {
 
   def t(s: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(s, dir)
-    else s.read.parquet(s"$dir/$name.parquet")
+    else parquet(s, s"$dir/$name.parquet")
+
+  /** The one parquet reader: `path` read with its stored inferred schema.
+    * The first read of a path takes [[Stored]]'s monitor: never call it
+    * from a micro-batch body.
+    */
+  def parquet(s: SparkSession, path: String): DataFrame =
+    s.read.schema(Stored.schema(path, s)(s.read.parquet(path).schema)).parquet(path)
 
   /** Normalize whatever `ts` layout the reader produced to micro-precision
     * session-zone TIMESTAMP. Long = legacy nanosAsLong read; NTZ = plain
@@ -41,8 +61,6 @@ object Tables {
       case _                => df
     }
 
-  def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(s.read.parquet(s"$dir/events.parquet"))
-  }
+  def events(s: SparkSession, dir: String): DataFrame =
+    normalizeTs(parquet(s, s"$dir/events.parquet"))
 }

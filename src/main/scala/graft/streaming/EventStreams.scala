@@ -23,15 +23,14 @@ object EventStreams {
   /** Streaming source over an events parquet directory.
     *
     * File-stream sources need the schema declared up front, and the events
-    * table has shipped with two `ts` layouts (epoch-nanos long under
-    * `nanosAsLong`, plain micros `TIMESTAMP_NTZ` — see
+    * table has shipped with two `ts` layouts (epoch-nanos long under the
+    * engine session's `nanosAsLong`, plain micros `TIMESTAMP_NTZ` — see
     * [[graft.sources.Tables]]). Probe the on-disk layout with a one-footer
     * batch schema read (driver-side metadata only, no data scan), then apply
     * the same normalization as the batch loader so the streaming and batch
     * plans see an identical logical column.
     */
   def readEventStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // An EMPTY landing directory is a legitimate stream start (checkpoint
     // created before the producer's first file); the schema probe cannot
     // infer from zero files, so fall back to the current generation's

@@ -181,6 +181,13 @@ class PlanAuditSpec extends SparkSpec {
       .exists(_.contains("org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")))
   }
 
+  test("engine session reads nanosecond parquet timestamps as longs") {
+    // events.parquet has shipped with TIMESTAMP(NANOS) ts, which the reader
+    // otherwise rejects. No read path sets it per call, and the Stored
+    // schema cache keys a table's schema on its files alone.
+    assert(spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
+  }
+
   test("incremental df maintenance reads the stored base index, never re-tokenizes it") {
     // rt_df_incremental's base side must be the STORED df parquet (the
     // stale index artifact, built once per session) and only the landing
