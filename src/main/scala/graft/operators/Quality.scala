@@ -8,13 +8,15 @@ import org.apache.spark.sql.functions._
   * 100 TB pipeline runs before a corpus version ships (and the dbt-test /
   * Deequ shape users expect of an analytics engine).
   *
-  * Scale posture: every check is either an algebraic aggregate over one
-  * narrow scan (nullability, ranges, exact-distinct uniqueness) or a
-  * key-partitioned left join with a conditional count (referential
-  * integrity — the probe side never materializes an anti-join copy).
-  * Checks are independent small plans unioned at the end, so they
-  * parallelize trivially and any subset can be run alone. Violation counts
-  * are exact, so the whole report is DuckDB-oracle-checkable; the catalog
+  * Scale posture: every check is an algebraic aggregate. Each
+  * dq_expectations check is one narrow scan (nullability, ranges,
+  * exact-distinct uniqueness) or a key-partitioned left join with a
+  * conditional count (the probe side never materializes an anti-join
+  * copy), and the checks are independent small plans unioned at the end.
+  * dq_referential audits every declared constraint in one keyed
+  * union-aggregate over one scan per table, so its shuffle carries per-key
+  * counts combined map-side, never raw rows. Violation counts are exact,
+  * so the whole report is DuckDB-oracle-checkable; the catalog
   * deliberately mixes hard constraints that hold (0 violations) with soft
   * expectations that fail (non-zero counts) — a validator that can only
   * ever report zero is untested.
@@ -81,26 +83,6 @@ object Quality {
       .orderBy("column_name")
   }
 
-  /** One RELY-constraint audit frame (ft.fk → pt.pk): the distinct'd-PK
-    * left join counted in a single pass, plus the PK-uniqueness one-row
-    * aggregate cross-joined on: all three soundness conditions.
-    */
-  private[graft] def riConstraint(s: SparkSession, dir: String,
-      ft: String, fk: String, pt: String, pk: String): DataFrame = {
-    val f = Relational.t(s, dir, ft).select(col(fk).as("fk"))
-    val p = Relational.t(s, dir, pt).select(col(pk).as("pk"))
-    val base = f.join(p.distinct(), col("fk") === col("pk"), "left_outer")
-      .agg(
-        count(lit(1)).as("n_rows"),
-        sum(when(col("fk").isNull, 1L).otherwise(0L)).as("n_null_fk"),
-        sum(when(col("fk").isNotNull && col("pk").isNull, 1L).otherwise(0L))
-          .as("n_orphans"))
-    base.crossJoin(broadcast( // bounded: one row
-        p.agg((count(lit(1)) - countDistinct(col("pk"))).as("n_dup_pk"))))
-      .select(lit(s"$ft.$fk->$pt.$pk").as("constraint_name"),
-        col("n_rows"), col("n_null_fk"), col("n_orphans"), col("n_dup_pk"))
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // RELY-registry audit — the nightly job that keeps unenforced
@@ -109,14 +91,46 @@ object Quality {
     // three soundness conditions the join-elimination rewrite rests on
     // (null FKs, orphan FKs, duplicate PKs). Both the query AND its oracle
     // are generated from the same registry sequence, so the optimizer, the
-    // auditor, and the gate can never drift apart. Shape: per constraint,
-    // one distinct'd-PK left join counted in a single pass (the
-    // dq_expectations RI mechanics) + a PK uniqueness aggregate; all
-    // |constraints| reports are one-row frames unioned.
+    // auditor, and the gate can never drift apart. Shape: one keyed
+    // union-aggregate for all constraints. Each table is scanned once and
+    // explodes to one (cid, key, is_fk) row per role it plays in the
+    // registry; grouping the union by (cid, key) counts FK rows `nf` and PK
+    // rows `np` per key, combined map-side, so the shuffle carries per-key
+    // counts, never raw FK rows. Grouping those by cid folds out the three
+    // conditions: a non-null key with np = 0 holds orphans, and each
+    // non-null key with np > 0 is one distinct PK. The report is the frame
+    // of constraint names left-joined to the counts, so a constraint whose
+    // tables are both empty still reports zeros.
     "dq_referential" -> { (s, dir) =>
-      graft.plans.JoinElimination.Declared.map { case (ft, fk, pt, pk) =>
-        riConstraint(s, dir, ft, fk, pt, pk)
-      }.reduce(_.unionByName(_)).orderBy("constraint_name")
+      val declared = graft.plans.JoinElimination.Declared.zipWithIndex
+      val roles = declared.flatMap { case ((ft, fk, pt, pk), cid) =>
+        Seq((ft, cid, fk, true), (pt, cid, pk, false))
+      }.groupBy(_._1)
+      val keys = roles.toSeq.sortBy(_._1).map { case (table, rs) =>
+        Relational.t(s, dir, table)
+          .select(explode(array(rs.map { case (_, cid, c, isFk) =>
+            struct(lit(cid).as("cid"), col(c).cast("long").as("key"), lit(isFk).as("is_fk"))
+          }: _*)).as("r"))
+          .select("r.*")
+      }.reduce(_.unionByName(_))
+      val counts = keys
+        .groupBy("cid", "key").agg(
+          sum(when(col("is_fk"), 1L).otherwise(0L)).as("nf"),
+          sum(when(col("is_fk"), 0L).otherwise(1L)).as("np"))
+        .groupBy("cid").agg(
+          sum(col("nf")).as("n_rows"),
+          sum(when(col("key").isNull, col("nf")).otherwise(0L)).as("n_null_fk"),
+          sum(when(col("key").isNotNull && col("np") === 0L, col("nf")).otherwise(0L))
+            .as("n_orphans"),
+          (sum(col("np")) - count(when(col("key").isNotNull && col("np") > 0L, 1)))
+            .as("n_dup_pk"))
+      val names = s.createDataFrame(declared.map { case ((ft, fk, pt, pk), cid) =>
+        (cid, s"$ft.$fk->$pt.$pk")
+      }).toDF("cid", "constraint_name")
+      val ns = Seq("n_rows", "n_null_fk", "n_orphans", "n_dup_pk")
+      names.join(broadcast(counts), Seq("cid"), "left") // bounded: one row per declared constraint
+        .select(col("constraint_name") +: ns.map(n => coalesce(col(n), lit(0L)).as(n)): _*)
+        .orderBy("constraint_name")
     },
 
     "dq_expectations" -> { (s, dir) =>

@@ -17,24 +17,27 @@ import org.apache.spark.sql.types.StructType
   * stream and versioned gate tables, and [[materialize]]'s parquet frames),
   * a driver-side long ([[scalarLong]]), an executor-pinned frame
   * ([[pinned]]) and a parquet file's inferred schema ([[schema]], read by
-  * [[Tables.parquet]]) — keyed by (kind, name, dataset dir, and for pins the
-  * owning applicationId). The build thunks are by-name so a cache hit
-  * constructs no training plan at all (plan construction itself was the
-  * LSH planning cliff). Keyed by dataset dir so scale factors never share
-  * a structure; a new process rebuilds, exactly like a cold index build.
+  * [[Tables.parquet]] and [[Versioned.readVersion]]) — keyed by (kind,
+  * name, dataset dir, and for pins the owning applicationId). The build
+  * thunks are by-name so a cache hit constructs no training plan at all
+  * (plan construction itself was the LSH planning cliff). Keyed by dataset
+  * dir so scale factors never share a structure; a new process rebuilds,
+  * exactly like a cold index build.
   *
   * Fingerprint contract: every entry carries the (relative path, length,
   * mtime) listing of the files under its `dir`, taken before the build. A
   * lookup whose listing differs is a miss, so a rewritten corpus rebuilds.
   * A schema's `dir` is the parquet path itself, so rewriting one table
-  * re-infers that table's schema only.
+  * re-infers that table's schema only; a versioned table's is the
+  * manifest of the version read.
   *
   * A build runs under the cache's monitor, and a gate table's build
   * ([[path]]) runs whole streaming queries: no micro-batch body may call
   * `Stored`, or its stream thread waits on the monitor that the thread
   * awaiting the stream holds. That includes every table read: the first
   * [[Tables.parquet]] read of a path (so [[Tables.t]] and
-  * [[materialize]]) takes the monitor to store the schema.
+  * [[materialize]]) and of a table version ([[Versioned.readVersion]])
+  * takes the monitor to store the schema.
   */
 object Stored {
   private case class Key(kind: String, name: String, dir: String, app: String = "")
@@ -172,9 +175,10 @@ object Stored {
     cache.keySet().stream().filter(_.kind == "pin").count().toInt
   }
 
-  /** The inferred schema of the parquet file or directory at `path`, once
-    * per listing of that path. A missing path fails in `infer` and stores
-    * nothing, so a call after the file appears reads it.
+  /** An inferred parquet schema, once per listing of `path`: the parquet
+    * file or directory itself, or the manifest naming the directories read.
+    * A missing path fails in `infer` and stores nothing, so a call after
+    * the file appears reads it.
     */
   private[sources] def schema(path: String, s: SparkSession)(infer: => StructType): StructType =
     lookup(Key("schema", "", path), s)(infer)

@@ -93,9 +93,18 @@ object Versioned {
     */
   private def canon(p: String): String = new java.io.File(p).getCanonicalPath
 
-  /** Read the table as of version `v` (time travel). */
-  def readVersion(spark: SparkSession, dir: String, v: Int): DataFrame =
-    spark.read.parquet(readManifest(dir, v): _*)
+  /** Read the table as of version `v` (time travel), with the schema
+    * stored once per listing of that version's manifest: a committed
+    * manifest and the data it lists never change, so a repeat read infers
+    * no schema. The first read of a version takes [[Stored]]'s monitor:
+    * never call it from a micro-batch body.
+    */
+  def readVersion(spark: SparkSession, dir: String, v: Int): DataFrame = {
+    val dirs = readManifest(dir, v)
+    val schema = Stored.schema(manifestPath(dir, v).toString, spark)(
+      spark.read.parquet(dirs: _*).schema)
+    spark.read.schema(schema).parquet(dirs: _*)
+  }
 
   /** Read the latest committed version. */
   def read(spark: SparkSession, dir: String): DataFrame =

@@ -662,16 +662,13 @@ class PlanAuditSpec extends SparkSpec {
       "q14_setops_nations" -> Map(
         "supplier.parquet" -> 3, "customer.parquet" -> 3, "nation.parquet" -> 6),
       "q34_setops_all" -> Map("orders.parquet" -> 4),
-      // Per-constraint / per-expectation audits: one pruned scan per
-      // declared rule (the shared-scan restructure was A/B'd SLOWER at
-      // gate scale and rejected — README "Performance measurement notes"):
+      // Per-check audits: one pruned scan per expectation or cascade leg.
+      // dq_referential, absent here, folds every constraint into one
+      // union-aggregate over one scan per table; dq_expectations has the
+      // same per-check shape and could take that form too:
       "dq_erasure" -> Map("customer.parquet" -> 3, "orders.parquet" -> 2),
       "dq_expectations" -> Map(
         "lineitem.parquet" -> 2, "documents.parquet" -> 3, "orders.parquet" -> 4),
-      "dq_referential" -> Map(
-        "lineitem.parquet" -> 3, "region.parquet" -> 2, "part.parquet" -> 2,
-        "supplier.parquet" -> 3, "customer.parquet" -> 3, "nation.parquet" -> 5,
-        "orders.parquet" -> 3),
       // Runtime-pruning audits: build leg + probe leg (+ exact-audit leg):
       "j3_bloom_semijoin" -> Map("orders.parquet" -> 3),
       "j6_bloom_fp_audit" -> Map("lineitem.parquet" -> 3, "orders.parquet" -> 2),

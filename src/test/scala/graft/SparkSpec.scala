@@ -14,6 +14,20 @@ trait SparkSpec extends AnyFunSuite {
   // swap by FailureRecoverySpec can't race a sibling suite's initialization.
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** Spark jobs started while `body` runs, counted on the context's bus. */
+  def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.ListenerBusDrain(sc); started.get }
+    finally sc.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {

@@ -5,6 +5,47 @@ import org.apache.spark.sql.functions._
 
 class QualitySpec extends SparkSpec {
 
+  test("referential audit: null keys, orphans, duplicate PKs and an empty FK table count exactly") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val dir = java.nio.file.Files.createTempDirectory("dq-referential")
+    try {
+      def table(name: String, cols: (String, DataType)*)(rows: Row*): Unit =
+        spark.createDataFrame(
+          spark.sparkContext.parallelize(rows, 1),
+          StructType(cols.map { case (c, t) => StructField(c, t) }))
+          .write.parquet(dir.resolve(s"$name.parquet").toString)
+      val (b, i) = (LongType, IntegerType)
+      table("lineitem", "l_orderkey" -> b, "l_partkey" -> b, "l_suppkey" -> b)(
+        Row(1L, 10L, 100L), Row(1L, 10L, 100L), Row(null, 11L, 100L), Row(99L, 77L, null))
+      table("orders", "o_orderkey" -> b, "o_custkey" -> b)(
+        Row(1L, 5L), Row(1L, 5L), Row(null, 555L))
+      table("customer", "c_custkey" -> b, "c_nationkey" -> i)(Row(5L, 3), Row(null, null))
+      table("supplier", "s_suppkey" -> b, "s_nationkey" -> i)()
+      table("nation", "n_nationkey" -> i, "n_regionkey" -> i)(Row(3, 0), Row(3, 7))
+      table("region", "r_regionkey" -> i)(Row(0))
+      table("part", "p_partkey" -> b)(Row(10L), Row(10L), Row(null))
+      // The DuckDB oracle's answer on this corpus (Quality.oracles), as
+      // (constraint_name, n_rows, n_null_fk, n_orphans, n_dup_pk).
+      val rows = Quality.queries("dq_referential")(spark, dir.toString).collect().toSeq
+        .map(r => (r.getString(0), r.get(1), r.get(2), r.get(3), r.get(4)))
+      assert(rows == Seq(
+        ("customer.c_nationkey->nation.n_nationkey", 2L, 1L, 0L, 1L),
+        ("lineitem.l_orderkey->orders.o_orderkey", 4L, 1L, 1L, 2L),
+        ("lineitem.l_partkey->part.p_partkey", 4L, 0L, 2L, 2L),
+        ("lineitem.l_suppkey->supplier.s_suppkey", 4L, 1L, 3L, 0L),
+        ("nation.n_regionkey->region.r_regionkey", 2L, 0L, 1L, 0L),
+        ("orders.o_custkey->customer.c_custkey", 3L, 0L, 1L, 1L),
+        ("supplier.s_nationkey->nation.n_nationkey", 0L, 0L, 0L, 1L)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("referential audit executes as one aggregate: at most 8 Spark jobs") {
+    val df = Quality.queries("dq_referential")(spark, sf())
+    val jobs = jobsStartedBy(df.write.format("noop").mode("overwrite").save())
+    assert(jobs <= 8, s"dq_referential started $jobs jobs")
+  }
+
   test("k-anonymity: reported groups are exactly those under K") {
     val flagged = Quality.queries("dq_k_anonymity")(spark, sf()).collect()
       .map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)).toMap

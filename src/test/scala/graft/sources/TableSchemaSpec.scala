@@ -2,32 +2,16 @@ package graft.sources
 
 import graft.SparkSpec
 import org.apache.commons.io.FileUtils
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
 
 /** A table's schema is inferred once per listing of its file: a warm build
   * starts no Spark job, a rewritten file is read with its new schema, and a
   * missing file fails as a plain read does and caches nothing.
   */
 class TableSchemaSpec extends SparkSpec {
-
-  /** Spark jobs started while `body` runs, counted on the context's bus. */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val started = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(l)
-    try { body; ListenerBusDrain(sc); started.get }
-    finally sc.removeSparkListener(l)
-  }
 
   /** A temp corpus dir holding copies of `tables` from the sf0.001 corpus. */
   private def withCorpus(tables: String*)(f: Path => Unit): Unit = {
@@ -51,7 +35,7 @@ class TableSchemaSpec extends SparkSpec {
 
   test("a warm build of a table-heavy query starts no Spark job") {
     val dir = sf()
-    val jobs = Seq("dq_referential", "q51_eager_agg").map { q =>
+    val jobs = Seq("dq_referential", "q51_eager_agg", "st_stream_commit", "mt_time_travel").map { q =>
       graft.SparkEntry.queries(q)(spark, dir)
       q -> jobsStartedBy(graft.SparkEntry.queries(q)(spark, dir))
     }
