@@ -13,13 +13,14 @@ import org.apache.spark.sql.functions._
   * exact-distinct uniqueness) or a key-partitioned left join with a
   * conditional count (the probe side never materializes an anti-join
   * copy), and the checks are independent small plans unioned at the end.
-  * dq_referential audits every declared constraint in one keyed
-  * union-aggregate over one scan per table, so its shuffle carries per-key
-  * counts combined map-side, never raw rows. Violation counts are exact,
-  * so the whole report is DuckDB-oracle-checkable; the catalog
-  * deliberately mixes hard constraints that hold (0 violations) with soft
-  * expectations that fail (non-zero counts) — a validator that can only
-  * ever report zero is untested.
+  * dq_referential audits every declared constraint, and dq_profile
+  * profiles every column, in one keyed union-aggregate over one scan per
+  * table, so the shuffle carries per-key counts combined map-side, never
+  * raw rows. Violation counts are exact, so the whole report is
+  * DuckDB-oracle-checkable; the catalog deliberately mixes hard
+  * constraints that hold (0 violations) with soft expectations that fail
+  * (non-zero counts) — a validator that can only ever report zero is
+  * untested.
   */
 object Quality {
 
@@ -38,47 +39,46 @@ object Quality {
       count(lit(1)).as("n_checked"),
       sum(when(bad, 1L).otherwise(0L)).as("n_violations")))
 
-  /** The dq_profile plan: one pruned scan, one hash aggregate to a 1-row
-    * frame, explode to the 4-row report. Per-column distinct strategy by
-    * DECLARED domain: the three domain-bounded columns ride
-    * size(collect_set) (state bounded by the domain, so the sole remaining
-    * countDistinct plans as a two-phase group-by instead of the ×5 Expand
-    * that 4 raw distincts cost — the r12 restructure).
+  /** The dq_profile plan: one keyed union-aggregate over one pruned scan.
+    * Each row explodes to one (cid, value) row per profiled column, the raw
+    * value riding the struct slot named after its type (the other slots
+    * null). Grouping by (cid, value) counts each distinct value once,
+    * combined map-side, so every aggregate below the 1-row fold is a hash
+    * aggregate with fixed-width buffers. The fold reads each column's nulls
+    * off its null-valued group and its exact distinct count as its number
+    * of non-null groups, then explodes to the 4-row report. Every column
+    * gets the same exact distinct, whatever its domain.
     */
   private[graft] def profileStats(s: SparkSession, dir: String): DataFrame = {
-    val d2 = org.apache.spark.sql.types.DecimalType(18, 2)
-    // Bounded-domain exact distinct: aggregation state is the domain.
-    def bdist(c: Column): Column = size(collect_set(c)).cast("long")
+    val cols = Seq("l_quantity", "l_extendedprice", "l_returnflag", "l_shipdate")
     // parallelizeNarrowScan spreads the map side across the session's
     // cores when the file layout under-splits (single-file local table);
     // no-op at scale, where the table scans as thousands of splits.
-    val a = Relational.parallelizeNarrowScan(
-      Relational.t(s, dir, "lineitem")
-        .select("l_quantity", "l_extendedprice", "l_returnflag", "l_shipdate")).agg(
-      count(lit(1)).as("n"),
-      (count(lit(1)) - count(col("l_quantity"))).as("qty_null"),
-      bdist(col("l_quantity")).as("qty_dist"),
-      min(col("l_quantity").cast(d2)).cast("string").as("qty_min"),
-      max(col("l_quantity").cast(d2)).cast("string").as("qty_max"),
-      (count(lit(1)) - count(col("l_extendedprice"))).as("price_null"),
-      countDistinct(col("l_extendedprice")).as("price_dist"),
-      min(col("l_extendedprice").cast(d2)).cast("string").as("price_min"),
-      max(col("l_extendedprice").cast(d2)).cast("string").as("price_max"),
-      (count(lit(1)) - count(col("l_returnflag"))).as("flag_null"),
-      bdist(col("l_returnflag")).as("flag_dist"),
-      min(col("l_returnflag")).as("flag_min"),
-      max(col("l_returnflag")).as("flag_max"),
-      (count(lit(1)) - count(col("l_shipdate"))).as("date_null"),
-      bdist(col("l_shipdate")).as("date_dist"),
-      min(col("l_shipdate")).cast("string").as("date_min"),
-      max(col("l_shipdate")).cast("string").as("date_max"))
-    def row(name: String, p: String) = struct(
-      lit(name).as("column_name"), col("n"),
-      col(s"${p}_null").as("n_null"), col(s"${p}_dist").as("n_distinct"),
-      col(s"${p}_min").as("min_value"), col(s"${p}_max").as("max_value"))
-    a.select(explode(array(
-      row("l_quantity", "qty"), row("l_extendedprice", "price"),
-      row("l_returnflag", "flag"), row("l_shipdate", "date"))).as("r"))
+    val li = Relational.parallelizeNarrowScan(Relational.t(s, dir, "lineitem").select(cols.map(col): _*))
+    val typed = cols.map(c => c -> li.schema(c).dataType).zipWithIndex
+    val slots = typed.map(_._1._2).distinct
+    val counts = li
+      .select(explode(array(typed.map { case ((c, t), cid) =>
+        struct(lit(cid).as("cid") +: slots.map(u => (if (u == t) col(c) else lit(null).cast(u)).as(u.typeName)): _*)
+      }: _*)).as("r"))
+      .select("r.*")
+      .groupBy(("cid" +: slots.map(_.typeName)).map(col): _*)
+      .agg(count(lit(1)).as("k"))
+    // Every column's groups count each row once; n reads the first's.
+    val n = coalesce(sum(when(col("cid") === 0, col("k"))), lit(0L))
+    val stats = typed.map { case ((c, t), cid) =>
+      val (mine, v) = (col("cid") === cid, col(t.typeName))
+      // Min/max stringify through engine-stable forms only (DECIMAL, DATE,
+      // VARCHAR), never raw double formatting, which differs across engines.
+      val ord = if (t == org.apache.spark.sql.types.DoubleType) Relational.dec(v) else v
+      struct(lit(c).as("column_name"), n.as("n"),
+        coalesce(sum(when(mine && v.isNull, col("k"))), lit(0L)).as("n_null"),
+        count(when(mine && v.isNotNull, 1)).as("n_distinct"),
+        min(when(mine, ord)).cast("string").as("min_value"),
+        max(when(mine, ord)).cast("string").as("max_value"))
+    }
+    counts.agg(array(stats: _*).as("rs"))
+      .select(explode(col("rs")).as("r"))
       .select("r.*")
       .orderBy("column_name")
   }
@@ -124,9 +124,12 @@ object Quality {
             .as("n_orphans"),
           (sum(col("np")) - count(when(col("key").isNotNull && col("np") > 0L, 1)))
             .as("n_dup_pk"))
+      // bounded: one row per declared constraint, so one partition. The join
+      // streams it as a single partition and the closing sort needs no
+      // range-partition exchange.
       val names = s.createDataFrame(declared.map { case ((ft, fk, pt, pk), cid) =>
         (cid, s"$ft.$fk->$pt.$pk")
-      }).toDF("cid", "constraint_name")
+      }).toDF("cid", "constraint_name").coalesce(1)
       val ns = Seq("n_rows", "n_null_fk", "n_orphans", "n_dup_pk")
       names.join(broadcast(counts), Seq("cid"), "left") // bounded: one row per declared constraint
         .select(col("constraint_name") +: ns.map(n => coalesce(col(n), lit(0L)).as(n)): _*)
@@ -333,25 +336,13 @@ object Quality {
     // Column profiler — the ANALYZE-style stats pass a lake runs on ingest
     // (and the numbers the CBO tier's CatalogStats path consumes): row
     // count, null count, exact distinct count, min/max per column, emitted
-    // as one row per column. ONE aggregation over one scan computes every
-    // column's stats together; the row-per-column shape is a 4-element
-    // explode of the 1-row result. Min/max stringify through engine-stable
-    // forms only (DECIMAL, DATE, VARCHAR — never raw double formatting,
-    // which differs across engines).
-    //
-    // Distinct strategy is per-column by DECLARED domain (r12 A/B:
-    // 2.3–2.6 s → 1.3–1.6 s at sf0.1): the three
-    // bounded-domain columns (quantity: integral 1..50; returnflag: enum;
-    // shipdate: calendar days) ride size(collect_set) — exact, with
-    // aggregation state bounded by the DOMAIN, not the row count — so the
-    // single high-cardinality column's countDistinct is the SOLE distinct
-    // aggregate and plans as a two-phase group-by instead of the ×5 Expand
-    // that multiplying 4 distincts over the scan used to cost (the Expand
-    // tier was ~2/3 of the query, against a no-distinct floor of
-    // 0.8–0.9 s). Boundedness is a declared contract per profiled
-    // column (like every pin-tier bound); a column without one must use
-    // countDistinct. No-Expand + one-scan is plan-asserted in
-    // PlanAuditSpec.
+    // as one row per column. One keyed union-aggregate over one scan
+    // computes every column's stats together (see profileStats): the scan
+    // explodes to (column, value) rows counted per distinct value, and one
+    // 1-row fold reads off each column's stats. No distinct aggregate is
+    // planned, so no per-value group carries collect_set buffers and no
+    // Expand multiplies the scan; one scan and no Expand are plan-asserted
+    // in PlanAuditSpec.
     "dq_profile" -> { (s, dir) => profileStats(s, dir) },
 
     // Distribution-drift monitor between two corpus snapshots — the

@@ -5,6 +5,32 @@ import java.security.MessageDigest
 import java.util.regex.Pattern
 import org.apache.spark.sql.execution.ExplainMode
 
+/** PlanSnap's argument parsing: pure parsers that return `None` on bad
+  * input, and [[orUsage]], which turns a `None` into the usage line on
+  * stderr and exit status 2.
+  */
+private[graft] object ToolArgs {
+
+  /** `key=value` with a non-empty key and value; the value may hold `=`. */
+  def keyValue(arg: String): Option[(String, String)] = arg.split("=", 2) match {
+    case Array(k, v) if k.nonEmpty && v.nonEmpty => Some((k, v))
+    case _                                       => None
+  }
+
+  /** Every arg as `<prefix>key=value`; `None` if any lacks the prefix or
+    * is malformed.
+    */
+  def prefixed(args: Seq[String], prefix: String): Option[Seq[(String, String)]] = {
+    val kvs = args.map(a => Option.when(a.startsWith(prefix))(a.stripPrefix(prefix)).flatMap(keyValue))
+    Option.when(kvs.forall(_.isDefined))(kvs.flatten)
+  }
+
+  def orUsage[A](usage: String)(parsed: Option[A]): A = parsed.getOrElse {
+    System.err.println(usage)
+    sys.exit(2)
+  }
+}
+
 /** Dev tool: plan identity. Writes each named query's `.explain("formatted")`
   * text, normalised, to `<outDir>/<name>.txt`, and `<outDir>/fingerprints.tsv`:
   * one `name<TAB>hash` line per query, sorted by name, the hash being the

@@ -14,14 +14,31 @@ class PlanAuditSpec extends SparkSpec {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf()).queryExecution.executedPlan.toString
 
+  /** Every query's plan, built once and shared by the whole-surface checks. */
+  private lazy val plans: Seq[(String, String)] =
+    SparkEntry.queries.keys.toSeq.sorted.map(name => name -> plan(name))
+
   test("no declared query plans an unbounded cartesian product") {
     // Construction alone is enough to see the chosen join strategies; a
     // CartesianProduct (both sides large, no key) is never acceptable — the
     // deliberately-quadratic operators (dd_embed_pairs' block grid,
     // ss_topk_bruteforce's bounded query side) are shaped as equality joins
     // or small-side broadcasts precisely so they never plan one.
-    for (name <- SparkEntry.queries.keys.toSeq.sorted) {
-      assert(!plan(name).contains("CartesianProduct"), s"$name plans a CartesianProduct")
+    for ((name, p) <- plans) {
+      assert(!p.contains("CartesianProduct"), s"$name plans a CartesianProduct")
+    }
+  }
+
+  test("no distinct aggregate groups per value under object or sort aggregate buffers") {
+    // Spark plans a lone distinct aggregate beside other aggregates by
+    // grouping on the distinct column first, so every other aggregate's
+    // buffer rides one group per distinct value. Object buffers there
+    // (collect_set and the like) fall back to sort-based aggregation past
+    // a few keys and shuffle whole: fold the distinct into a keyed count
+    // instead (dq_profile's shape).
+    for ((name, p) <- plans) {
+      assert(!PlanAuditSpec.hasDistinctOverObjectBuffers(p),
+        s"$name groups a distinct aggregate under object buffers:\n$p")
     }
   }
 
@@ -460,9 +477,9 @@ class PlanAuditSpec extends SparkSpec {
     val p = plan("dq_profile")
     val scans = p.linesIterator.count(_.contains("Scan parquet"))
     assert(scans == 1, s"dq_profile must profile all columns from ONE scan, found $scans:\n$p")
-    // And WITHOUT the multi-distinct Expand: the bounded-domain columns'
-    // distincts ride collect_set, leaving one sole countDistinct that
-    // plans as a two-phase group-by — the Expand used to multiply the
+    // And WITHOUT the multi-distinct Expand: every column's exact distinct
+    // is the count of its non-null groups in one keyed aggregate, so no
+    // distinct aggregate is planned — the Expand used to multiply the
     // scan ×5 and was ~2/3 of the query (r12 ProfileProbe A/B).
     assert(!p.contains("Expand"),
       s"dq_profile's distinct tier must not re-introduce the Expand:\n$p")
@@ -601,8 +618,7 @@ class PlanAuditSpec extends SparkSpec {
     // totals as broadcast one-row aggregates) must rank via partitioned
     // windows or the range-partition numbering path.
     val allowed = Set("an_skyline", "rt_df_histogram", "rt_df_incremental")
-    for (name <- SparkEntry.queries.keys.toSeq.sorted if !allowed(name)) {
-      val p = plan(name)
+    for ((name, p) <- plans if !allowed(name)) {
       assert(!PlanAuditSpec.hasGlobalWindowFunnel(p),
         s"$name windows over a single-partition exchange:\n$p")
     }
@@ -694,8 +710,7 @@ class PlanAuditSpec extends SparkSpec {
     // better), and keeping the over-generous cap would silently re-admit
     // up to cap scans later — tighten the row instead. The walk itself is
     // RescanAudit's (one definition, no tool-vs-gate drift).
-    for (name <- SparkEntry.queries.keys.toSeq.sorted) {
-      val p = plan(name)
+    for ((name, p) <- plans) {
       val corpus = graft.tools.RescanAudit.scanLocations(p).filter(_.contains(dir))
         .map(_.split('/').last).groupBy(identity).view.mapValues(_.size).toMap
       for ((table, n) <- corpus if n >= 2) {
@@ -807,6 +822,20 @@ class PlanAuditSpec extends SparkSpec {
 }
 
 object PlanAuditSpec {
+  /** A keyed `ObjectHashAggregate` or `SortAggregate` line that merges
+    * buffers (`merge_` functions): the aggregate that carries non-fixed-width
+    * buffers across an exchange, one group per key.
+    */
+  private val KeyedObjectMerge = """(ObjectHashAggregate|SortAggregate)\(keys=\[[^\]].*merge_""".r
+
+  /** True when the plan holds a distinct aggregate and a keyed object or
+    * sort aggregate that merges buffers: the shape a lone distinct takes
+    * beside collect_set-style aggregates, which then ride one group per
+    * distinct value.
+    */
+  def hasDistinctOverObjectBuffers(plan: String): Boolean =
+    plan.contains("(distinct ") && plan.linesIterator.exists(KeyedObjectMerge.findFirstIn(_).isDefined)
+
   /** A physical `Window` node line, whatever its tree-drawing prefix
     * (`+- `, `:- `, `:  +- `, indentation, codegen `*(n) ` stage ids) —
     * `trim.startsWith("Window ")` misses every non-root node. Anchored so

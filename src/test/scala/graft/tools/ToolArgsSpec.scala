@@ -16,14 +16,4 @@ class ToolArgsSpec extends AnyFunSuite {
     assert(ToolArgs.prefixed(Seq("conf:a=1", "other"), "conf:").isEmpty)
     assert(ToolArgs.prefixed(Seq("conf:a=1", "conf:b=2=3"), "conf:") == Some(Seq(("a", "1"), ("b", "2=3"))))
   }
-
-  test("ConfProbe options: a positive pass count, then fix:key=value only") {
-    assert(ConfProbe.options(Seq.empty) == Some((6, Seq.empty)))
-    assert(ConfProbe.options(Seq("4", "fix:k=v")) == Some((4, Seq(("k", "v")))))
-    assert(ConfProbe.options(Seq("fix:k=v")) == Some((6, Seq(("k", "v")))))
-    assert(ConfProbe.options(Seq("x")).isEmpty)
-    assert(ConfProbe.options(Seq("0")).isEmpty)
-    assert(ConfProbe.options(Seq("fix:foo")).isEmpty)
-    assert(ConfProbe.options(Seq("4", "5")).isEmpty)
-  }
 }
