@@ -19,8 +19,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     new ExpressionInfo(
       classOf[GraftExtensions].getName, null, name, usage, "", "", "", "", "", "", "built-in")
 
-  /** Constant-int extraction for expression-shape parameters (same contract
-    * as graft_shingles' n): demand foldability and an integral type at
+  /** Constant-int extraction for expression-shape parameters (graft_shingles'
+    * n, graft_winnow's k and w): demand foldability and an integral type at
     * analysis time, not as a runtime ClassCastException mid-job.
     */
   private def foldableInt(fn: String, param: String, e: Expression): Int = {
@@ -69,23 +69,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         info("graft_shingles", "graft_shingles(text, n) - distinct word n-gram shingles of text."),
         (args: Seq[Expression]) => args match {
           case Seq(c) => ShingleSet(c, 3)
-          case Seq(c, n) =>
-            // n parameterizes the expression itself, so it must be a constant:
-            // demand foldability and an integral type up front — a column or a
-            // fractional literal should fail at analysis, not as a runtime
-            // ClassCastException mid-job.
-            if (!n.foldable)
-              throw new IllegalArgumentException(
-                "graft_shingles(text, n): n must be a foldable integer literal")
-            n.eval() match {
-              case i: Int                              => ShingleSet(c, i)
-              case l: Long if l == l.toInt.toLong      => ShingleSet(c, l.toInt)
-              case s: Short                            => ShingleSet(c, s.toInt)
-              case b: Byte                             => ShingleSet(c, b.toInt)
-              case other =>
-                throw new IllegalArgumentException(
-                  s"graft_shingles(text, n): n must be an integer literal, got $other")
-            }
+          case Seq(c, n) => ShingleSet(c, foldableInt("graft_shingles(text, n)", "n", n))
           case _ =>
             throw new IllegalArgumentException(
               "graft_shingles expects (text) or (text, n)")

@@ -1,5 +1,6 @@
 package graft.sources
 
+import java.util.concurrent.{Callable, ExecutionException, FutureTask}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -31,17 +32,28 @@ import org.apache.spark.sql.types.StructType
   * re-infers that table's schema only; a versioned table's is the
   * manifest of the version read.
   *
-  * A build runs under the cache's monitor, and a gate table's build
-  * ([[path]]) runs whole streaming queries: no micro-batch body may call
-  * `Stored`, or its stream thread waits on the monitor that the thread
-  * awaiting the stream holds. That includes every table read: the first
-  * [[Tables.parquet]] read of a path (so [[Tables.t]] and
-  * [[materialize]]) and of a table version ([[Versioned.readVersion]])
-  * takes the monitor to store the schema.
+  * Each key builds single-flight (the memoizer of Goetz et al., *Java
+  * Concurrency in Practice* §5.6): the first caller to miss installs the
+  * entry and runs the build on its own thread, since job groups and the
+  * active session are thread-local; callers of the same key wait for that
+  * build, and builds of other keys, nested or on other threads, run
+  * alongside it.
   */
 object Stored {
   private case class Key(kind: String, name: String, dir: String, app: String = "")
-  private case class Entry(fp: Set[(String, Long, Long)], value: Any, owner: Option[SparkContext])
+
+  /** One artifact's build, run once by the thread that installed it. A
+    * failed build takes its entry out of the cache before its waiters wake,
+    * so the next call builds again.
+    */
+  private final class Entry(key: Key, val fp: Set[(String, Long, Long)], val owner: Option[SparkContext],
+      build: Callable[Any]) extends FutureTask[Any](build) {
+    val builder: Thread = Thread.currentThread
+    override protected def setException(t: Throwable): Unit = {
+      cache.remove(key, this)
+      super.setException(t)
+    }
+  }
   private val cache = new java.util.concurrent.ConcurrentHashMap[Key, Entry]()
 
   /** The corpus fingerprint: every file under `dir` (recursively) with its
@@ -60,38 +72,34 @@ object Stored {
   }
 
   /** The one lookup: a hit is an entry whose fingerprint matches the
-    * corpus now; anything else builds and replaces the entry.
+    * corpus now; anything else installs a new entry, unless another caller
+    * just installed a fresh one, and waits for the build.
     */
   private def lookup[A](key: Key, s: SparkSession, owner: Option[SparkContext] = None)(
       build: => A): A = {
     val fp = fingerprint(key.dir, s)
-    def fresh(e: Entry) = e != null && e.fp == fp
-    // NOT computeIfAbsent around the build: build thunks legitimately NEST
-    // (ivf_cells trains ivf_centroids inside its own thunk), and
-    // the concurrent map forbids recursive updates — the nested insert can
-    // land mid-resize and throw IllegalStateException("Recursive update"),
-    // bin-layout-dependent and therefore intermittent. Object-monitor
-    // synchronization is REENTRANT, so nested builds on one thread are
-    // fine; concurrent builders of different structures serialize, which is
-    // irrelevant at build frequency (once per structure per corpus).
     val hit = cache.get(key)
     val e =
-      if (fresh(hit)) hit
-      else this.synchronized {
-        val again = cache.get(key)
-        if (fresh(again)) again
-        else { val built = Entry(fp, build, owner); cache.put(key, built); built }
+      if (hit != null && hit.fp == fp) hit
+      else {
+        val mine = new Entry(key, fp, owner, () => build)
+        val won = cache.compute(key, (_, cur) => if (cur != null && cur.fp == fp) cur else mine)
+        if (won eq mine) mine.run()
+        won
       }
-    // Built (`e` was made above) or reused: the one place to report it.
-    e.value.asInstanceOf[A]
+    if (!e.isDone && (e.builder eq Thread.currentThread))
+      throw new IllegalStateException(
+        s"Stored: the build of ${key.kind} '${key.name}' for ${key.dir} re-enters its own key")
+    // Built (`mine` ran above) or reused: the one place to report it.
+    try e.get().asInstanceOf[A]
+    catch { case x: ExecutionException => throw x.getCause }
   }
 
   /** A stored ONE-VALUE structure (a model hyperstat like the LM vocabulary
     * size): computed once per (name, corpus) and cached on the driver, so
     * consumers fold it into their plans as a LITERAL — removing a one-row
     * scan + broadcast-join stage from every query that needs it. The value
-    * thunk may itself call [[materialize]] (the lookup's monitor is
-    * reentrant).
+    * thunk may itself call [[materialize]].
     */
   def scalarLong(name: String, dir: String, s: SparkSession)(v: => Long): Long =
     lookup(Key("scalar", name, dir), s)(v)

@@ -11,12 +11,11 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType}
   * from [[Stored.schema]], once per (path, listing of that path), and reads
   * with it declared, so building a query starts no footer-merge job to
   * infer a schema. Only the `StructType` is cached, never the DataFrame or
-  * its plan: a self-join needs fresh attribute ids on every read. The key holds no conf: `nanosAsLong` (below), which changes
-  * the inferred `ts` type, is fixed for the whole engine. Reads of paths
-  * written fresh per call (temp dirs, view versions) stay plain
-  * `read.parquet`: their first lookup would always miss. The first read of
-  * a path takes [[Stored]]'s monitor, so no micro-batch body or other
-  * stream-thread code may read a table through this object.
+  * its plan: a self-join needs fresh attribute ids on every read. The key
+  * holds no conf: `nanosAsLong` (below), which changes the inferred `ts`
+  * type, is fixed for the whole engine. Reads of paths written fresh per
+  * call (temp dirs, view versions) stay plain `read.parquet`: their first
+  * lookup would always miss.
   *
   * The one source quirk: `events.parquet` has shipped with two different `ts`
   * physical layouts across testdata generations, and the loader adapts to
@@ -43,10 +42,7 @@ object Tables {
     if (name == "events") events(s, dir)
     else parquet(s, s"$dir/$name.parquet")
 
-  /** The one parquet reader: `path` read with its stored inferred schema.
-    * The first read of a path takes [[Stored]]'s monitor: never call it
-    * from a micro-batch body.
-    */
+  /** The one parquet reader: `path` read with its stored inferred schema. */
   def parquet(s: SparkSession, path: String): DataFrame =
     s.read.schema(Stored.schema(path, s)(s.read.parquet(path).schema)).parquet(path)
 

@@ -96,8 +96,7 @@ object Versioned {
   /** Read the table as of version `v` (time travel), with the schema
     * stored once per listing of that version's manifest: a committed
     * manifest and the data it lists never change, so a repeat read infers
-    * no schema. The first read of a version takes [[Stored]]'s monitor:
-    * never call it from a micro-batch body.
+    * no schema.
     */
   def readVersion(spark: SparkSession, dir: String, v: Int): DataFrame = {
     val dirs = readManifest(dir, v)

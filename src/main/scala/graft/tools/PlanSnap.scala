@@ -5,32 +5,6 @@ import java.security.MessageDigest
 import java.util.regex.Pattern
 import org.apache.spark.sql.execution.ExplainMode
 
-/** PlanSnap's argument parsing: pure parsers that return `None` on bad
-  * input, and [[orUsage]], which turns a `None` into the usage line on
-  * stderr and exit status 2.
-  */
-private[graft] object ToolArgs {
-
-  /** `key=value` with a non-empty key and value; the value may hold `=`. */
-  def keyValue(arg: String): Option[(String, String)] = arg.split("=", 2) match {
-    case Array(k, v) if k.nonEmpty && v.nonEmpty => Some((k, v))
-    case _                                       => None
-  }
-
-  /** Every arg as `<prefix>key=value`; `None` if any lacks the prefix or
-    * is malformed.
-    */
-  def prefixed(args: Seq[String], prefix: String): Option[Seq[(String, String)]] = {
-    val kvs = args.map(a => Option.when(a.startsWith(prefix))(a.stripPrefix(prefix)).flatMap(keyValue))
-    Option.when(kvs.forall(_.isDefined))(kvs.flatten)
-  }
-
-  def orUsage[A](usage: String)(parsed: Option[A]): A = parsed.getOrElse {
-    System.err.println(usage)
-    sys.exit(2)
-  }
-}
-
 /** Dev tool: plan identity. Writes each named query's `.explain("formatted")`
   * text, normalised, to `<outDir>/<name>.txt`, and `<outDir>/fingerprints.tsv`:
   * one `name<TAB>hash` line per query, sorted by name, the hash being the
@@ -41,10 +15,9 @@ private[graft] object ToolArgs {
   *
   * Check: `PlanSnap <dir> <sf0.01 dir>`, then `diff plans/fingerprints.tsv
   * <dir>/fingerprints.tsv`; `diff -r` two output dirs shows what moved.
-  * Usage: PlanSnap <outDir> <sfDir> [q1,q2,...] [exec] [conf:key=value ...]
+  * Usage: PlanSnap <outDir> <sfDir> [q1,q2,...] [exec]
   */
 object PlanSnap {
-  private val Usage = "usage: PlanSnap <outDir> <sfDir> [q1,q2,...] [exec] [conf:key=value ...]"
 
   /** `plan` without what varies by run, host, pid, checkout dir or corpus
     * mtime: expression and codegen ids are renumbered in order of first
@@ -74,16 +47,17 @@ object PlanSnap {
     MessageDigest.getInstance("SHA-256").digest(text.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
 
   def main(args: Array[String]): Unit = {
-    if (args.length < 2) ToolArgs.orUsage(Usage)(None)
+    val listed = args.lift(2).filterNot(_ == "exec")
+    val flags = args.drop(2 + listed.size).toSeq
+    if (args.length < 2 || !(flags.isEmpty || flags == Seq("exec"))) {
+      System.err.println("usage: PlanSnap <outDir> <sfDir> [q1,q2,...] [exec]")
+      sys.exit(2)
+    }
     val (outDir, sfDir) = (args(0), args(1))
-    val listed = args.lift(2).filterNot(a => a == "exec" || a.startsWith("conf:"))
+    val exec = flags.nonEmpty
     val names = listed.fold(graft.SparkEntry.queries.keys.toSeq)(_.split(",").toSeq).sorted
-    val flags = args.drop(2 + listed.size)
-    val exec = flags.contains("exec")
-    val confs = ToolArgs.orUsage(Usage)(ToolArgs.prefixed(flags.filterNot(_ == "exec").toSeq, "conf:"))
     val spark = graft.EngineSession.local("4")
     Files.createDirectories(Paths.get(outDir))
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
     def snap(name: String): String = {
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
       // collect(), not a noop write: the write would run its own QueryExecution.

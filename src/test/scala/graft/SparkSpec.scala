@@ -41,6 +41,12 @@ object SparkSpec {
     _session
   }
 
+  /** A new directory at a [[graft.operators.Connectors.tmp]] path named
+    * after `prefix`, deleted at JVM exit with the engine's own temp paths.
+    */
+  def tempDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(graft.operators.Connectors.tmp(prefix)))
+
   /** Stop the running session (the shared one or a suite's own) so a suite
     * can build one with a different master; the next `session` call
     * recreates the shared one.

@@ -57,11 +57,11 @@ class CombinerSpec extends SparkSpec {
       Iterator.fill(10)(s"w${math.min(2000, math.pow(1 - rnd.nextDouble(), -1 / 1.1).toInt)}")
         .mkString(delims(rnd.nextInt(delims.length)))
     }.mkString("\n")
-    val in = Files.createTempDirectory("combine-in").resolve("input.txt")
+    val in = SparkSpec.tempDir("combine-in").resolve("input.txt")
     Files.writeString(in, text)
 
     def run(id: String, task: MapReduceTask): Seq[Array[Byte]] = {
-      val out = Files.createTempDirectory(s"combine-out-$id")
+      val out = SparkSpec.tempDir(s"combine-out-$id")
       TaskRegistry.register(id, task)
       MapReduceJob.run(spark, JobSpec(1, Seq("localhost:1"), Seq(in.toString), out.toString, 8, 16, id))
       (0 until 8).map(r => Files.readAllBytes(out.resolve(s"${id}_result_$r")))

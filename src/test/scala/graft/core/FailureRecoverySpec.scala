@@ -71,7 +71,7 @@ class FailureRecoverySpec extends AnyFunSuite {
   }
 
   private def runJob(spark: SparkSession, task: MapReduceTask, id: String, in: java.nio.file.Path): Seq[String] = {
-    val out = Files.createTempDirectory(s"o9-out-$id")
+    val out = SparkSpec.tempDir(s"o9-out-$id")
     TaskRegistry.register(id, task)
     MapReduceJob.run(
       spark,
@@ -82,7 +82,7 @@ class FailureRecoverySpec extends AnyFunSuite {
 
   test("reduce task failing once per attempt is retried; output has no duplicates (O9)") {
     withSession("local[4, 2]") { spark =>
-      val in = Files.createTempDirectory("o9-in").resolve("input.txt")
+      val in = SparkSpec.tempDir("o9-in").resolve("input.txt")
       Files.writeString(in, lines.mkString("\n"))
       val clean = runJob(spark, WordCount, "o9clean", in)
       assert(clean.nonEmpty)
@@ -97,7 +97,7 @@ class FailureRecoverySpec extends AnyFunSuite {
 
   test("map task failing once per attempt is retried; shuffle output not duplicated (O9)") {
     withSession("local[4, 2]") { spark =>
-      val in = Files.createTempDirectory("o9-in-map").resolve("input.txt")
+      val in = SparkSpec.tempDir("o9-in-map").resolve("input.txt")
       Files.writeString(in, lines.mkString("\n"))
       val clean = runJob(spark, WordCount, "o9clean2", in)
       val flaky = runJob(spark, FlakyMap, "o9flakymap", in)
@@ -108,7 +108,7 @@ class FailureRecoverySpec extends AnyFunSuite {
   test("without retries, the same injected failure fails the job (control)") {
     withSession("local[4]") { s => // 1 attempt per task
       s.sparkContext.setLogLevel("ERROR")
-      val in = Files.createTempDirectory("o9-in-ctl").resolve("input.txt")
+      val in = SparkSpec.tempDir("o9-in-ctl").resolve("input.txt")
       Files.writeString(in, lines.mkString("\n"))
       intercept[org.apache.spark.SparkException] {
         runJob(s, FlakyMap, "o9control", in)

@@ -38,7 +38,7 @@ class JobSessionSpec extends SparkSpec {
 
   test("concurrent jobs with different map_kilobytes on one session keep their own split size") {
     // 64 KiB of words: 4 KiB splits make 16 map tasks, 64 KiB splits one.
-    val in = Files.createTempDirectory("split-in").resolve("input.txt")
+    val in = SparkSpec.tempDir("split-in").resolve("input.txt")
     val text = Iterator.from(0).map(i => s"w${i % 97} x${i % 13}").take(20000).mkString("\n").take(65536)
     Files.writeString(in, text)
     val expected = text.split("\n").flatMap(_.split(WordCount.DelimRegex)).filter(_.nonEmpty)
@@ -57,7 +57,7 @@ class JobSessionSpec extends SparkSpec {
     try {
       implicit val ec: ExecutionContext = ExecutionContext.global
       val runs = Seq(4, 64).map { kb =>
-        val out = Files.createTempDirectory(s"split-out-$kb")
+        val out = SparkSpec.tempDir(s"split-out-$kb")
         Future {
           spark.sparkContext.setJobGroup(s"split$kb", s"map_kilobytes=$kb")
           try MapReduceJob.run(spark, spec(in.toString, out.toString, kb))
@@ -82,11 +82,11 @@ class JobSessionSpec extends SparkSpec {
     // The generated-class cache is keyed by class loader; were sessions'
     // artifacts isolated, each job's session would get its own executor
     // class loader and recompile every generated class.
-    val in = Files.createTempDirectory("codegen-in").resolve("input.txt")
+    val in = SparkSpec.tempDir("codegen-in").resolve("input.txt")
     Files.writeString(in, "a b c\nb c\nc")
     TaskRegistry.register("cs6210", WordCount)
     def job(): Unit =
-      MapReduceJob.run(spark, spec(in.toString, Files.createTempDirectory("codegen-out").toString, 64))
+      MapReduceJob.run(spark, spec(in.toString, SparkSpec.tempDir("codegen-out").toString, 64))
     job()
     val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     job()

@@ -56,7 +56,7 @@ class JobSpecSpec extends org.scalatest.funsuite.AnyFunSuite {
     }
   }
   test("parses INI key=value config") {
-    val f = Files.createTempFile("cfg", ".ini")
+    val f = SparkSpec.tempDir("cfg").resolve("cfg.ini")
     Files.writeString(
       f,
       """n_workers=2
@@ -90,8 +90,8 @@ class WordCountJobSpec extends SparkSpec {
     ls.flatMap(_.split(WordCount.DelimRegex)).filter(_.nonEmpty).groupBy(identity).view.mapValues(_.size.toLong).toMap
 
   private def runJob(r: Int): (Map[String, Long], Seq[Seq[String]]) = {
-    val in = Files.createTempDirectory("wc-in")
-    val out = Files.createTempDirectory("wc-out")
+    val in = SparkSpec.tempDir("wc-in")
+    val out = SparkSpec.tempDir("wc-out")
     Files.writeString(in.resolve("input.txt"), lines.mkString("\n"))
     TaskRegistry.register("cs6210", WordCount)
     MapReduceJob.run(

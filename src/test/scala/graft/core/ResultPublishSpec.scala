@@ -2,7 +2,6 @@ package graft.core
 
 import graft.SparkSpec
 import graft.tasks.WordCount
-import org.apache.commons.io.FileUtils
 import org.apache.hadoop.fs.{RawLocalFileSystem, Path => HPath}
 import org.apache.spark.{SparkException, TaskContext}
 
@@ -64,7 +63,7 @@ object FaultyFileSystem {
 class ResultPublishSpec extends SparkSpec {
 
   private def input(text: String): String = {
-    val in = Files.createTempDirectory("publish-in").resolve("input.txt")
+    val in = SparkSpec.tempDir("publish-in").resolve("input.txt")
     Files.writeString(in, text)
     in.toString
   }
@@ -89,7 +88,7 @@ class ResultPublishSpec extends SparkSpec {
       .filter(_.startsWith(s".${out.getFileName}.staging-")).toSeq
 
   test("a failed job leaves the previous output byte for byte and no staging directory") {
-    val out = Files.createTempDirectory("publish").resolve("out")
+    val out = SparkSpec.tempDir("publish").resolve("out")
     run(WordCount, words, out, 4)
     val before = snapshot(out)
     assert(before.keySet.count(_.startsWith("publish_result_")) == 4)
@@ -101,7 +100,7 @@ class ResultPublishSpec extends SparkSpec {
   }
 
   test("a successful job replaces the previous output whole and leaves no staging directory") {
-    val out = Files.createTempDirectory("publish").resolve("out")
+    val out = SparkSpec.tempDir("publish").resolve("out")
     run(WordCount, words, out, 4)
     run(WordCount, input("b a\nc a"), out, 2)
     val visible = Files.list(out).iterator.asScala.toSeq.filterNot(p => p.getFileName.toString.startsWith("."))
@@ -111,19 +110,16 @@ class ResultPublishSpec extends SparkSpec {
   }
 
   /** Runs `body` against `faulty:<root>/out`, with a new-output input under
-    * `root`, and deletes `root` afterwards.
+    * `root`.
     */
   private def withFaultyOut(body: (Path, String, String) => Unit): Unit = {
-    val root = Files.createTempDirectory("publish-fault")
+    val root = SparkSpec.tempDir("publish-fault")
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.faulty.impl", classOf[FaultyFileSystem].getName)
     try {
       val in = Files.writeString(root.resolve("new.txt"), "b a\nc a").toString
       body(root.resolve("out"), s"faulty://${root.resolve("out")}", in)
-    } finally {
-      conf.unset("fs.faulty.impl")
-      FileUtils.deleteDirectory(root.toFile)
-    }
+    } finally conf.unset("fs.faulty.impl")
   }
 
   test("a fault at any driver-side rename or delete leaves the old output or the new one") {

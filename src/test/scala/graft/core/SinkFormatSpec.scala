@@ -24,7 +24,7 @@ class SinkFormatSpec extends SparkSpec {
     * split at its first space (the reader's side of the contract).
     */
   private def roundTrip(pairs: Vector[(String, String)]): Seq[(String, String)] = {
-    val dir = Files.createTempDirectory("sink")
+    val dir = SparkSpec.tempDir("sink")
     val in = dir.resolve("input.txt")
     Files.writeString(in, pairs.indices.mkString("\n"))
     TaskRegistry.register("sink", EmitPairs(pairs))

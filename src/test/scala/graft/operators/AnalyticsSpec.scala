@@ -44,7 +44,7 @@ class AnalyticsSpec extends SparkSpec {
   test("an_runs survives near-constant daily series (degenerate guards)") {
     import spark.implicits._
     def eventsDir(counts: Seq[Int]): String = {
-      val dir = java.nio.file.Files.createTempDirectory("an_runs_degen").toString
+      val dir = SparkSpec.tempDir("an_runs_degen").toString
       counts.zipWithIndex.flatMap { case (n, d) =>
         (0 until n).map(i => java.sql.Timestamp.valueOf(f"2024-01-${d + 1}%02d 00:$i%02d:00"))
       }.toDF("ts").write.parquet(s"$dir/events.parquet")

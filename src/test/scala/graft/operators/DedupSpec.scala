@@ -392,7 +392,7 @@ class DedupSpec extends SparkSpec {
         ((1 to 10).map(i => s"bz$i").mkString(" "))),
       (3L, (1 to 40).map(i => s"c$i").mkString(" "))
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("spans").toString
+    val dir = SparkSpec.tempDir("spans").toString
     docs.write.parquet(s"$dir/documents.parquet")
     val spans = Dedup.queries("dd_dup_spans")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3))).toSet
@@ -424,7 +424,7 @@ class DedupSpec extends SparkSpec {
       (probes(0), exact),                                           // must link to index(0)
       (probes(1), base.take(50).mkString(" ") + " " + (1 to 50).map(i => s"y$i").mkString(" "))
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("er").toString
+    val dir = SparkSpec.tempDir("er").toString
     docs.write.parquet(s"$dir/documents.parquet")
     val links = Dedup.queries("er_best_match")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))

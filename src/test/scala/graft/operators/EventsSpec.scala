@@ -478,7 +478,7 @@ class EventsSpec extends SparkSpec {
     val rows =
       (0L until 30L).map(d => ev(d, d, "a", if (d < 20) 10.0 else 50.0)) ++
         (0L until 30L).map(d => ev(100 + d, d, "b", 7.0))
-    val dir = java.nio.file.Files.createTempDirectory("cp").toString
+    val dir = SparkSpec.tempDir("cp").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(s"$dir/events.parquet")
     val got = Events.queries("ev_changepoint")(spark, dir).collect()

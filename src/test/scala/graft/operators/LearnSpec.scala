@@ -24,7 +24,7 @@ class LearnSpec extends SparkSpec {
       val text = (0 until 12).map(j => v((i + j) % v.length)).mkString(" ")
       (i.toLong, if (i % 2 == 0) Learn.AucPosLabel else "xx", text)
     }.toDF("doc_id", "lang", "text")
-    val dir = java.nio.file.Files.createTempDirectory("nb").toString
+    val dir = SparkSpec.tempDir("nb").toString
     docs.write.parquet(s"$dir/documents.parquet")
 
     // Model: no token may appear under the wrong class.
@@ -146,7 +146,7 @@ class LearnSpec extends SparkSpec {
       val v = if (i % 2 == 0) Array(1.0f, j, 0.0f, j) else Array(j, 0.0f, 1.0f, j)
       (i.toLong, v, i % 2)
     }.toDF("vec_id", "embedding", "label")
-    val dir = java.nio.file.Files.createTempDirectory("knn").toString
+    val dir = SparkSpec.tempDir("knn").toString
     vecs.write.parquet(s"$dir/embeddings.parquet")
 
     val pred = Learn.queries("cl_knn_label")(spark, dir)
@@ -183,7 +183,7 @@ class LearnSpec extends SparkSpec {
         else (0 until 12).map(j => chain(((i + j) % chain.length).toInt)).mkString(" ")
       (i, "en", text)
     }.toDF("doc_id", "lang", "text")
-    val dir = java.nio.file.Files.createTempDirectory("lm").toString
+    val dir = SparkSpec.tempDir("lm").toString
     docs.write.parquet(s"$dir/documents.parquet")
 
     val scored = Learn.queries("cl_lm_perplexity")(spark, dir)
@@ -215,7 +215,7 @@ class LearnSpec extends SparkSpec {
       val v = if (buckets(i) >= Learn.TestBucket || i % 2 == 0) vocabT else vocabR
       (i, "en", (0 until 12).map(j => v(((i + j) % v.length).toInt)).mkString(" "))
     }.toDF("doc_id", "lang", "text")
-    val dir = java.nio.file.Files.createTempDirectory("dsir").toString
+    val dir = SparkSpec.tempDir("dsir").toString
     docs.write.parquet(s"$dir/documents.parquet")
 
     val w = Learn.queries("pl_dsir_weights")(spark, dir).collect()

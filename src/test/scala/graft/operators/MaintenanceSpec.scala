@@ -7,8 +7,8 @@ class MaintenanceSpec extends SparkSpec {
 
   test("compaction cuts file count and preserves content exactly") {
     val src = Relational.t(spark, sf(), "documents")
-    val frag = java.nio.file.Files.createTempDirectory("mt-frag").toString
-    val out = java.nio.file.Files.createTempDirectory("mt-out").toString
+    val frag = SparkSpec.tempDir("mt-frag").toString
+    val out = SparkSpec.tempDir("mt-out").toString
     src.repartition(37).write.mode("overwrite").parquet(frag)
     val before = Maintenance.dataFileCount(spark, frag)
     assert(before == 37)
@@ -25,8 +25,8 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("target count follows the byte budget") {
-    val frag = java.nio.file.Files.createTempDirectory("mt-frag2").toString
-    val out = java.nio.file.Files.createTempDirectory("mt-out2").toString
+    val frag = SparkSpec.tempDir("mt-frag2").toString
+    val out = SparkSpec.tempDir("mt-out2").toString
     Relational.t(spark, sf(), "documents").repartition(10).write.mode("overwrite").parquet(frag)
     // A huge byte budget collapses everything to one file.
     assert(Maintenance.compact(spark, frag, out, Long.MaxValue / 2) == 1)
@@ -35,8 +35,8 @@ class MaintenanceSpec extends SparkSpec {
 
   test("flat compact sizes from a partitioned tree's real bytes (recursive listing)") {
     val src = Relational.t(spark, sf(), "documents")
-    val frag = java.nio.file.Files.createTempDirectory("mt-frag3").toString
-    val out = java.nio.file.Files.createTempDirectory("mt-out3").toString
+    val frag = SparkSpec.tempDir("mt-frag3").toString
+    val out = SparkSpec.tempDir("mt-out3").toString
     src.repartition(8).write.mode("overwrite").partitionBy("lang").parquet(frag)
     // The pre-fix listing saw only `lang=*` directories at the top level,
     // summed 0 bytes, and planned n=1 regardless of actual data volume. A
@@ -48,8 +48,8 @@ class MaintenanceSpec extends SparkSpec {
 
   test("clusterBy produces range-disjoint files; scattered layout overlaps") {
     val src = Relational.t(spark, sf("sf0.01"), "documents")
-    val frag = java.nio.file.Files.createTempDirectory("mt-scatter").toString
-    val out = java.nio.file.Files.createTempDirectory("mt-clustered").toString
+    val frag = SparkSpec.tempDir("mt-scatter").toString
+    val out = SparkSpec.tempDir("mt-clustered").toString
     src.repartition(20).write.mode("overwrite").parquet(frag)
 
     def fileRanges(dir: String): Seq[(Long, Long)] =
@@ -100,8 +100,8 @@ class MaintenanceSpec extends SparkSpec {
 
   test("partitioned compact preserves the lang=* layout and bounds files per partition") {
     val src = Relational.t(spark, sf(), "documents")
-    val frag = java.nio.file.Files.createTempDirectory("mt-pfrag").toString
-    val out = java.nio.file.Files.createTempDirectory("mt-pout").toString
+    val frag = SparkSpec.tempDir("mt-pfrag").toString
+    val out = SparkSpec.tempDir("mt-pout").toString
     src.repartition(8).write.mode("overwrite").partitionBy("lang").parquet(frag)
     val langs = src.select("lang").distinct().collect().map(_.getString(0)).toSet
 
@@ -139,8 +139,8 @@ class MaintenanceSpec extends SparkSpec {
 
   test("partitioned compact on a SKEWED tree does not shatter small partitions") {
     val src = Relational.t(spark, sf(), "documents")
-    val frag = java.nio.file.Files.createTempDirectory("mt-skew-frag").toString
-    val out = java.nio.file.Files.createTempDirectory("mt-skew-out").toString
+    val frag = SparkSpec.tempDir("mt-skew-frag").toString
+    val out = SparkSpec.tempDir("mt-skew-out").toString
     // Skewed layout: 'en' is the whole corpus (many fragments), every other
     // lang a single tiny fragment.
     graft.sources.Formats.writePartitioned(
@@ -165,8 +165,8 @@ class MaintenanceSpec extends SparkSpec {
 
   test("recompress writes the requested codec and smaller files") {
     val src = Relational.t(spark, sf(), "documents")
-    val snappy = java.nio.file.Files.createTempDirectory("mt-snappy").toString
-    val zstd = java.nio.file.Files.createTempDirectory("mt-zstd").toString
+    val snappy = SparkSpec.tempDir("mt-snappy").toString
+    val zstd = SparkSpec.tempDir("mt-zstd").toString
     src.repartition(4).write.mode("overwrite").parquet(snappy)
     Maintenance.recompress(spark, snappy, zstd, "zstd", 64L * 1024)
 
@@ -184,8 +184,8 @@ class MaintenanceSpec extends SparkSpec {
 
   test("zOrderBy skips on BOTH dimensions from parquet stats; content survives") {
     val src = Relational.t(spark, sf(), "documents")
-    val frag = java.nio.file.Files.createTempDirectory("mt-zfrag").toString
-    val out = java.nio.file.Files.createTempDirectory("mt-zout").toString
+    val frag = SparkSpec.tempDir("mt-zfrag").toString
+    val out = SparkSpec.tempDir("mt-zout").toString
     src.repartition(40).write.mode("overwrite").parquet(frag)
 
     val n = Maintenance.zOrderBy(spark, frag, out, "doc_id", "n_chars", 4L * 1024)
@@ -225,7 +225,7 @@ class MaintenanceSpec extends SparkSpec {
 
   test("dynamic overwrite replaces only the incoming partitions, bytes-untouched elsewhere") {
     val src = Relational.t(spark, sf(), "documents")
-    val tbl = java.nio.file.Files.createTempDirectory("mt-dynover").toString
+    val tbl = SparkSpec.tempDir("mt-dynover").toString
     src.filter(col("lang") =!= "de" || pmod(col("doc_id"), lit(2)) === 0)
       .write.mode("overwrite").partitionBy("lang").parquet(tbl)
 

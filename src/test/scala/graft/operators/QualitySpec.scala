@@ -8,36 +8,34 @@ class QualitySpec extends SparkSpec {
   test("referential audit: null keys, orphans, duplicate PKs and an empty FK table count exactly") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("dq-referential")
-    try {
-      def table(name: String, cols: (String, DataType)*)(rows: Row*): Unit =
-        spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1),
-          StructType(cols.map { case (c, t) => StructField(c, t) }))
-          .write.parquet(dir.resolve(s"$name.parquet").toString)
-      val (b, i) = (LongType, IntegerType)
-      table("lineitem", "l_orderkey" -> b, "l_partkey" -> b, "l_suppkey" -> b)(
-        Row(1L, 10L, 100L), Row(1L, 10L, 100L), Row(null, 11L, 100L), Row(99L, 77L, null))
-      table("orders", "o_orderkey" -> b, "o_custkey" -> b)(
-        Row(1L, 5L), Row(1L, 5L), Row(null, 555L))
-      table("customer", "c_custkey" -> b, "c_nationkey" -> i)(Row(5L, 3), Row(null, null))
-      table("supplier", "s_suppkey" -> b, "s_nationkey" -> i)()
-      table("nation", "n_nationkey" -> i, "n_regionkey" -> i)(Row(3, 0), Row(3, 7))
-      table("region", "r_regionkey" -> i)(Row(0))
-      table("part", "p_partkey" -> b)(Row(10L), Row(10L), Row(null))
-      // The DuckDB oracle's answer on this corpus (Quality.oracles), as
-      // (constraint_name, n_rows, n_null_fk, n_orphans, n_dup_pk).
-      val rows = Quality.queries("dq_referential")(spark, dir.toString).collect().toSeq
-        .map(r => (r.getString(0), r.get(1), r.get(2), r.get(3), r.get(4)))
-      assert(rows == Seq(
-        ("customer.c_nationkey->nation.n_nationkey", 2L, 1L, 0L, 1L),
-        ("lineitem.l_orderkey->orders.o_orderkey", 4L, 1L, 1L, 2L),
-        ("lineitem.l_partkey->part.p_partkey", 4L, 0L, 2L, 2L),
-        ("lineitem.l_suppkey->supplier.s_suppkey", 4L, 1L, 3L, 0L),
-        ("nation.n_regionkey->region.r_regionkey", 2L, 0L, 1L, 0L),
-        ("orders.o_custkey->customer.c_custkey", 3L, 0L, 1L, 1L),
-        ("supplier.s_nationkey->nation.n_nationkey", 0L, 0L, 0L, 1L)))
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    val dir = SparkSpec.tempDir("dq-referential")
+    def table(name: String, cols: (String, DataType)*)(rows: Row*): Unit =
+      spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 1),
+        StructType(cols.map { case (c, t) => StructField(c, t) }))
+        .write.parquet(dir.resolve(s"$name.parquet").toString)
+    val (b, i) = (LongType, IntegerType)
+    table("lineitem", "l_orderkey" -> b, "l_partkey" -> b, "l_suppkey" -> b)(
+      Row(1L, 10L, 100L), Row(1L, 10L, 100L), Row(null, 11L, 100L), Row(99L, 77L, null))
+    table("orders", "o_orderkey" -> b, "o_custkey" -> b)(
+      Row(1L, 5L), Row(1L, 5L), Row(null, 555L))
+    table("customer", "c_custkey" -> b, "c_nationkey" -> i)(Row(5L, 3), Row(null, null))
+    table("supplier", "s_suppkey" -> b, "s_nationkey" -> i)()
+    table("nation", "n_nationkey" -> i, "n_regionkey" -> i)(Row(3, 0), Row(3, 7))
+    table("region", "r_regionkey" -> i)(Row(0))
+    table("part", "p_partkey" -> b)(Row(10L), Row(10L), Row(null))
+    // The DuckDB oracle's answer on this corpus (Quality.oracles), as
+    // (constraint_name, n_rows, n_null_fk, n_orphans, n_dup_pk).
+    val rows = Quality.queries("dq_referential")(spark, dir.toString).collect().toSeq
+      .map(r => (r.getString(0), r.get(1), r.get(2), r.get(3), r.get(4)))
+    assert(rows == Seq(
+      ("customer.c_nationkey->nation.n_nationkey", 2L, 1L, 0L, 1L),
+      ("lineitem.l_orderkey->orders.o_orderkey", 4L, 1L, 1L, 2L),
+      ("lineitem.l_partkey->part.p_partkey", 4L, 0L, 2L, 2L),
+      ("lineitem.l_suppkey->supplier.s_suppkey", 4L, 1L, 3L, 0L),
+      ("nation.n_regionkey->region.r_regionkey", 2L, 0L, 1L, 0L),
+      ("orders.o_custkey->customer.c_custkey", 3L, 0L, 1L, 1L),
+      ("supplier.s_nationkey->nation.n_nationkey", 0L, 0L, 0L, 1L)))
   }
 
   test("referential audit executes as one aggregate: at most 4 Spark jobs") {
@@ -113,7 +111,7 @@ class QualitySpec extends SparkSpec {
     // into a versioned table; the new version must hold exactly n_after
     // rows and zero requested keys, while time travel still reads the
     // pre-purge version in full (the audit trail survives the erasure).
-    val dir = java.nio.file.Files.createTempDirectory("erasure").toString
+    val dir = SparkSpec.tempDir("erasure").toString
     val cust = Relational.t(spark, sf(), "customer")
     val req = cust.filter(Pipeline.bucket(col("c_custkey")) < Quality.ErasurePct)
       .select(col("c_custkey").as("k"))
@@ -129,35 +127,33 @@ class QualitySpec extends SparkSpec {
   test("profile: nulls, duplicates and an empty table count exactly") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("dq-profile")
-    try {
-      val schema = StructType(Seq(
-        StructField("l_quantity", DoubleType), StructField("l_extendedprice", DoubleType),
-        StructField("l_returnflag", StringType), StructField("l_shipdate", TimestampNTZType)))
-      def day(d: String) = java.time.LocalDate.parse(d).atStartOfDay
-      def profile(name: String, rows: Row*) = {
-        val corpus = dir.resolve(name)
-        spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-          .write.parquet(corpus.resolve("lineitem.parquet").toString)
-        Quality.queries("dq_profile")(spark, corpus.toString).collect().toSeq
-          .map(r => (r.getString(0), r.get(1), r.get(2), r.get(3), r.get(4), r.get(5)))
-      }
-      // The DuckDB oracle's answer on each corpus (Quality.oracles), as
-      // (column_name, n, n_null, n_distinct, min_value, max_value).
-      assert(profile("dups",
-        Row(1.0, 10.5, "A", day("1995-01-01")),
-        Row(1.0, 10.5, "A", day("1995-01-01")),
-        Row(null, 20.25, "R", day("1996-03-15")),
-        Row(3.0, null, null, day("1996-03-15")),
-        Row(2.5, 10.5, "N", null),
-        Row(null, null, "N", day("1994-12-31"))) == Seq(
-        ("l_extendedprice", 6L, 2L, 2L, "10.50", "20.25"),
-        ("l_quantity", 6L, 2L, 3L, "1.00", "3.00"),
-        ("l_returnflag", 6L, 1L, 3L, "A", "R"),
-        ("l_shipdate", 6L, 1L, 3L, "1994-12-31 00:00:00", "1996-03-15 00:00:00")))
-      assert(profile("empty") == Seq("l_extendedprice", "l_quantity", "l_returnflag", "l_shipdate")
-        .map(c => (c, 0L, 0L, 0L, null, null)))
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    val dir = SparkSpec.tempDir("dq-profile")
+    val schema = StructType(Seq(
+      StructField("l_quantity", DoubleType), StructField("l_extendedprice", DoubleType),
+      StructField("l_returnflag", StringType), StructField("l_shipdate", TimestampNTZType)))
+    def day(d: String) = java.time.LocalDate.parse(d).atStartOfDay
+    def profile(name: String, rows: Row*) = {
+      val corpus = dir.resolve(name)
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+        .write.parquet(corpus.resolve("lineitem.parquet").toString)
+      Quality.queries("dq_profile")(spark, corpus.toString).collect().toSeq
+        .map(r => (r.getString(0), r.get(1), r.get(2), r.get(3), r.get(4), r.get(5)))
+    }
+    // The DuckDB oracle's answer on each corpus (Quality.oracles), as
+    // (column_name, n, n_null, n_distinct, min_value, max_value).
+    assert(profile("dups",
+      Row(1.0, 10.5, "A", day("1995-01-01")),
+      Row(1.0, 10.5, "A", day("1995-01-01")),
+      Row(null, 20.25, "R", day("1996-03-15")),
+      Row(3.0, null, null, day("1996-03-15")),
+      Row(2.5, 10.5, "N", null),
+      Row(null, null, "N", day("1994-12-31"))) == Seq(
+      ("l_extendedprice", 6L, 2L, 2L, "10.50", "20.25"),
+      ("l_quantity", 6L, 2L, 3L, "1.00", "3.00"),
+      ("l_returnflag", 6L, 1L, 3L, "A", "R"),
+      ("l_shipdate", 6L, 1L, 3L, "1994-12-31 00:00:00", "1996-03-15 00:00:00")))
+    assert(profile("empty") == Seq("l_extendedprice", "l_quantity", "l_returnflag", "l_shipdate")
+      .map(c => (c, 0L, 0L, 0L, null, null)))
   }
 
   test("profile stats match directly computed column facts") {

@@ -296,7 +296,7 @@ class SimilaritySpec extends SparkSpec {
       (0 until 5).map(i => (i.toLong, oneHot(0), 0)) ++
         (5 until 9).map(i => (i.toLong, oneHot(7), 1)) ++
         (9 until 30).map(i => (i.toLong, oneHot(14 + (i - 9)), 2))
-    val dir = java.nio.file.Files.createTempDirectory("semdedup").toString
+    val dir = SparkSpec.tempDir("semdedup").toString
     rows.toDF("vec_id", "embedding", "label").write.parquet(s"$dir/embeddings.parquet")
     val out = Similarity.queries("dd_semantic")(spark, dir).collect()
     val got = out.map(r =>

@@ -42,7 +42,7 @@ class TextAnalysisSpec extends SparkSpec {
     }
     // A corpus that IS one source has KL exactly 0: every per-token term
     // cancels algebraically (c = d, ns = n), before any rounding.
-    val dir = java.nio.file.Files.createTempDirectory("kl_onesource").toString
+    val dir = SparkSpec.tempDir("kl_onesource").toString
     Seq((1L, "the cat sat", "web"), (2L, "a dog ran far", "web"))
       .toDF("doc_id", "text", "source").write.parquet(s"$dir/documents.parquet")
     val one = TextAnalysis.queries("ta_source_kl")(spark, dir).collect()

@@ -17,8 +17,8 @@ class MatViewsSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
 
   private def fixture(): (String, String) = {
-    val base = java.nio.file.Files.createTempDirectory("mv-base").toString
-    val mv = java.nio.file.Files.createTempDirectory("mv-view").toString
+    val base = SparkSpec.tempDir("mv-base").toString
+    val mv = SparkSpec.tempDir("mv-view").toString
     graft.operators.Relational.t(spark, sf(), "documents")
       .write.mode("overwrite").parquet(base)
     MatViews.buildAndRegister(spark, base, mv, Seq("lang", "source"), Seq("n_chars"))
@@ -60,9 +60,9 @@ class MatViewsSpec extends SparkSpec {
   }
 
   test("append refresh merges batch partials; rerouted result equals full recompute") {
-    val base = java.nio.file.Files.createTempDirectory("mv-incr-base").toString
-    val mv1 = java.nio.file.Files.createTempDirectory("mv-incr-v1").toString
-    val mv2 = java.nio.file.Files.createTempDirectory("mv-incr-v2").toString
+    val base = SparkSpec.tempDir("mv-incr-base").toString
+    val mv1 = SparkSpec.tempDir("mv-incr-v1").toString
+    val mv2 = SparkSpec.tempDir("mv-incr-v2").toString
     val docs = graft.operators.Relational.t(spark, sf(), "documents")
     try {
       docs.filter(col("doc_id") < 300).write.mode("overwrite").parquet(base)

@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.SparkSpec
-import java.nio.file.Files
 
 class FormatsSpec extends SparkSpec {
 
@@ -10,7 +9,7 @@ class FormatsSpec extends SparkSpec {
 
   test("CSV round-trip preserves the customer table exactly") {
     val src = Tables.t(spark, sf(), "customer")
-    val dir = Files.createTempDirectory("csv-rt").toString
+    val dir = SparkSpec.tempDir("csv-rt").toString
     Formats.writeCsv(src, dir)
     val back = Formats.readCsv(spark, dir, src.schema)
     assert(back.schema == src.schema)
@@ -19,7 +18,7 @@ class FormatsSpec extends SparkSpec {
 
   test("JSON round-trip preserves the orders table (timestamps included)") {
     val src = Tables.t(spark, sf(), "orders")
-    val dir = Files.createTempDirectory("json-rt").toString
+    val dir = SparkSpec.tempDir("json-rt").toString
     Formats.writeJson(src, dir)
     val back = Formats.readJson(spark, dir, src.schema)
     assert(back.schema == src.schema)
@@ -28,7 +27,7 @@ class FormatsSpec extends SparkSpec {
 
   test("JSON round-trip preserves the embeddings array column") {
     val src = Tables.t(spark, sf(), "embeddings")
-    val dir = Files.createTempDirectory("json-emb").toString
+    val dir = SparkSpec.tempDir("json-emb").toString
     Formats.writeJson(src, dir)
     val back = Formats.readJson(spark, dir, src.schema)
     assert(canon(back) == canon(src))
@@ -36,7 +35,7 @@ class FormatsSpec extends SparkSpec {
 
   test("ORC round-trip preserves the orders table (timestamps included)") {
     val src = Tables.t(spark, sf(), "orders")
-    val dir = Files.createTempDirectory("orc-rt").toString
+    val dir = SparkSpec.tempDir("orc-rt").toString
     Formats.writeOrc(src, dir)
     val back = Formats.readOrc(spark, dir)
     assert(back.schema == src.schema)
@@ -46,7 +45,7 @@ class FormatsSpec extends SparkSpec {
   test("partitioned write lays out lang directories and prunes them at plan time") {
     import org.apache.spark.sql.functions.col
     val src = Tables.t(spark, sf(), "documents")
-    val dir = Files.createTempDirectory("part-rt").toString
+    val dir = SparkSpec.tempDir("part-rt").toString
     Formats.writePartitioned(src, dir, "lang")
     // One directory per language value.
     val langDirs = new java.io.File(dir).listFiles().filter(_.getName.startsWith("lang=")).map(_.getName)
@@ -70,7 +69,7 @@ class FormatsSpec extends SparkSpec {
   test("gzip text round-trip preserves lines and produces .gz part files") {
     import org.apache.spark.sql.functions.col
     val src = Tables.t(spark, sf(), "documents").select(col("text"))
-    val dir = Files.createTempDirectory("txt-gz").toString
+    val dir = SparkSpec.tempDir("txt-gz").toString
     Formats.writeTextGz(src, dir)
     val parts = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
     assert(parts.nonEmpty && parts.forall(_.getName.endsWith(".gz")))
@@ -80,7 +79,7 @@ class FormatsSpec extends SparkSpec {
 
   test("csv splits into multiple input partitions under a small split size") {
     val src = Tables.t(spark, sf(), "lineitem")
-    val dir = Files.createTempDirectory("csv-split").toString
+    val dir = SparkSpec.tempDir("csv-split").toString
     Formats.writeCsv(src.coalesce(1), dir)
     val prev = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
     try {

@@ -24,7 +24,7 @@ class StaleCorpusSpec extends SparkSpec {
     graft.SparkEntry.queries(q)(spark, dir.toString).collect().map(_.toString).toSeq
 
   test("a corpus dir rewritten mid-session answers like a fresh dir holding the same files") {
-    val root = Files.createTempDirectory("stale-corpus")
+    val root = SparkSpec.tempDir("stale-corpus")
     def tables = spark.catalog.listTables().collect().map(_.name).toSet
     val tablesBefore = tables
     try {
@@ -60,7 +60,6 @@ class StaleCorpusSpec extends SparkSpec {
     } finally {
       // The bucketed gate tables built on the temp dirs.
       (tables -- tablesBefore).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-      FileUtils.deleteDirectory(root.toFile)
     }
   }
 }

@@ -1,8 +1,11 @@
 package graft.sources
 
 import graft.SparkSpec
-import org.apache.commons.io.FileUtils
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong, AtomicReference}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The stored-structure tier's caching and eviction contracts: build thunks
   * run once per (structure, dataset dir) and again when a file under the
@@ -10,9 +13,27 @@ import org.apache.spark.sql.functions._
   * frames are cached per OWNING SparkContext and evicted only when that
   * context stops (the r10 advisory fix — eviction used to key on the
   * current applicationId, which would let two live contexts thrash each
-  * other's pins).
+  * other's pins). Each key builds single-flight: builds of different keys
+  * overlap, waiters on one key share its one build and its failure, and a
+  * build that re-enters its own key fails at once. Every test that starts a
+  * thread bounds its wait, so a build that serializes or deadlocks fails
+  * the test instead of hanging the suite.
   */
 class StoredSpec extends SparkSpec {
+
+  /** `body` on a new daemon thread. */
+  private final class Run[A](body: => A) {
+    private val out = new AtomicReference[Either[Throwable, A]]()
+    val thread = new Thread(() => out.set(try Right(body) catch { case e: Throwable => Left(e) }))
+    thread.setDaemon(true)
+    thread.start()
+
+    /** What `body` returned or threw, waiting at most `secs` seconds. */
+    def await(secs: Long): Either[Throwable, A] = {
+      thread.join(secs * 1000)
+      Option(out.get).getOrElse(fail(s"no result within $secs s"))
+    }
+  }
 
   test("materialize builds once per (name, dir) and round-trips the rows") {
     import spark.implicits._
@@ -108,23 +129,94 @@ class StoredSpec extends SparkSpec {
     // The shared session, not `spark`: the eviction test above stopped that one.
     val spark = graft.SparkSpec.session
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("stored-fingerprint")
+    val dir = SparkSpec.tempDir("stored-fingerprint")
+    val file = dir.resolve("part.txt")
+    java.nio.file.Files.writeString(file, "one")
+    var mats, scalars, pins = 0
+    def touchAll(): Unit = {
+      Stored.materialize("spec_fp", dir.toString, spark) { mats += 1; Seq(1L).toDF("id") }
+      Stored.scalarLong("spec_fp", dir.toString, spark) { scalars += 1; 7L }
+      Stored.pinned("spec_fp", dir.toString, spark) { pins += 1; Seq(1L).toDF("id") }
+    }
+    touchAll(); touchAll()
+    assert((mats, scalars, pins) == ((1, 1, 1)), "an unchanged dir reuses every kind")
+    // A different length changes the fingerprint whatever the mtime resolution.
+    java.nio.file.Files.delete(file)
+    java.nio.file.Files.writeString(file, "two, longer")
+    touchAll(); touchAll()
+    assert((mats, scalars, pins) == ((2, 2, 2)), "a replaced file rebuilds each kind exactly once")
+  }
+
+  test("builds of different keys run at the same time") {
+    val spark = graft.SparkSpec.session
+    val started = new CountDownLatch(2)
+    // 1 if the other build started while this one ran, 0 if they ran in turn.
+    def build: Long = { started.countDown(); if (started.await(10, TimeUnit.SECONDS)) 1L else 0L }
+    val runs = Seq("spec_overlap_a", "spec_overlap_b").map(k => new Run(Stored.scalarLong(k, "specdirO", spark)(build)))
+    assert(runs.map(_.await(60)) == Seq(Right(1L), Right(1L)), "builds of different keys must not serialize")
+  }
+
+  test("a micro-batch reads an unread table while a Stored.path build awaits its stream") {
+    val spark = graft.SparkSpec.session
+    val root = SparkSpec.tempDir("stored-stream")
+    val (table, landing) = (root.resolve("t.parquet").toString, root.resolve("landing").toString)
+    spark.range(3).write.parquet(table)
+    spark.range(2).write.parquet(landing)
+    val read = new AtomicLong(-1)
+    var query: StreamingQuery = null
+    var finished = false
     try {
-      val file = dir.resolve("part.txt")
-      java.nio.file.Files.writeString(file, "one")
-      var mats, scalars, pins = 0
-      def touchAll(): Unit = {
-        Stored.materialize("spec_fp", dir.toString, spark) { mats += 1; Seq(1L).toDF("id") }
-        Stored.scalarLong("spec_fp", dir.toString, spark) { scalars += 1; 7L }
-        Stored.pinned("spec_fp", dir.toString, spark) { pins += 1; Seq(1L).toDF("id") }
+      Stored.path("spec_stream_gate", "specdirS", spark) { _ =>
+        query = spark.readStream.schema(spark.read.parquet(landing).schema).parquet(landing).writeStream
+          .foreachBatch { (_: DataFrame, _: Long) => read.set(Tables.parquet(spark, table).count()) }
+          .option("checkpointLocation", root.resolve("ckpt").toString)
+          .trigger(Trigger.AvailableNow())
+          .start()
+        finished = query.awaitTermination(30000)
       }
-      touchAll(); touchAll()
-      assert((mats, scalars, pins) == ((1, 1, 1)), "an unchanged dir reuses every kind")
-      // A different length changes the fingerprint whatever the mtime resolution.
-      java.nio.file.Files.delete(file)
-      java.nio.file.Files.writeString(file, "two, longer")
-      touchAll(); touchAll()
-      assert((mats, scalars, pins) == ((2, 2, 2)), "a replaced file rebuilds each kind exactly once")
-    } finally FileUtils.deleteDirectory(dir.toFile)
+      assert(finished && query.exception.isEmpty, "the stream must finish while the build awaits it")
+      assert(read.get == 3L)
+    } finally if (query != null) query.stop()
+  }
+
+  test("a build that re-enters its own key fails at once, naming the key, and stores nothing") {
+    val spark = graft.SparkSpec.session
+    def key(v: => Long) = Stored.scalarLong("spec_reenter", "specdirR", spark)(v)
+    val r = new Run(key(key(1L))).await(60)
+    assert(r.left.exists(e => e.isInstanceOf[IllegalStateException] && e.getMessage.contains("spec_reenter")),
+      s"expected an IllegalStateException naming the key, got $r")
+    assert(key(5L) == 5L, "the failed build must leave no entry")
+  }
+
+  test("a failed build leaves no entry, and a caller waiting on it gets the same cause") {
+    val spark = graft.SparkSpec.session
+    val (entered, release) = (new CountDownLatch(1), new CountDownLatch(1))
+    val boom = new RuntimeException("spec build failed")
+    def key(v: => Long) = Stored.scalarLong("spec_fail", "specdirF", spark)(v)
+    val builder = new Run(key { entered.countDown(); release.await(30, TimeUnit.SECONDS); throw boom })
+    assert(entered.await(30, TimeUnit.SECONDS))
+    val waiter = new Run(key(2L))
+    // Fail the build only once the waiter is parked on it (or, under a lock, blocked).
+    def parked = waiter.thread.getState == Thread.State.BLOCKED ||
+      waiter.thread.getStackTrace.exists(f => f.getClassName == "java.util.concurrent.FutureTask" && f.getMethodName == "get")
+    val deadline = System.nanoTime + TimeUnit.SECONDS.toNanos(30)
+    while (!parked && System.nanoTime < deadline) Thread.sleep(10)
+    release.countDown()
+    assert(builder.await(60) == Left(boom))
+    assert(waiter.await(60) == Left(boom), "the waiter must get the build's own failure, not build again")
+    var rebuilt = 0
+    assert(key { rebuilt += 1; 3L } == 3L && rebuilt == 1, "the next call must build again")
+  }
+
+  test("threads that miss on one key together run its build once") {
+    val spark = graft.SparkSpec.session
+    val (go, builds) = (new CountDownLatch(1), new AtomicInteger)
+    val runs = (1 to 8).map(_ => new Run({
+      go.await()
+      Stored.scalarLong("spec_once", "specdirN", spark) { builds.incrementAndGet(); Thread.sleep(200); 9L }
+    }))
+    go.countDown()
+    assert(runs.map(_.await(60)).forall(_ == Right(9L)))
+    assert(builds.get == 1)
   }
 }

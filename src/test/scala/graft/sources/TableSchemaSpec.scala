@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.SparkSpec
-import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 
@@ -15,22 +14,18 @@ class TableSchemaSpec extends SparkSpec {
 
   /** A temp corpus dir holding copies of `tables` from the sf0.001 corpus. */
   private def withCorpus(tables: String*)(f: Path => Unit): Unit = {
-    val dir = Files.createTempDirectory("table-schema")
-    try {
-      tables.foreach(t => Files.copy(Paths.get(sf(), s"$t.parquet"), dir.resolve(s"$t.parquet")))
-      f(dir)
-    } finally FileUtils.deleteDirectory(dir.toFile)
+    val dir = SparkSpec.tempDir("table-schema")
+    tables.foreach(t => Files.copy(Paths.get(sf(), s"$t.parquet"), dir.resolve(s"$t.parquet")))
+    f(dir)
   }
 
   /** Replace the single parquet file `dir/<table>.parquet` with `df`. */
   private def overwrite(dir: Path, table: String, df: org.apache.spark.sql.DataFrame): Unit = {
-    val out = Files.createTempDirectory("table-schema-out")
-    try {
-      df.coalesce(1).write.mode("overwrite").parquet(out.resolve("t").toString)
-      val part = Files.list(out.resolve("t")).filter(_.getFileName.toString.endsWith(".parquet"))
-        .findFirst().get()
-      Files.move(part, dir.resolve(s"$table.parquet"), StandardCopyOption.REPLACE_EXISTING)
-    } finally FileUtils.deleteDirectory(out.toFile)
+    val out = SparkSpec.tempDir("table-schema-out")
+    df.coalesce(1).write.mode("overwrite").parquet(out.resolve("t").toString)
+    val part = Files.list(out.resolve("t")).filter(_.getFileName.toString.endsWith(".parquet"))
+      .findFirst().get()
+    Files.move(part, dir.resolve(s"$table.parquet"), StandardCopyOption.REPLACE_EXISTING)
   }
 
   test("a warm build of a table-heavy query starts no Spark job") {

@@ -1,21 +1,11 @@
 package graft.sources
 
 import graft.SparkSpec
-import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.functions._
 
-class VersionedSpec extends SparkSpec with BeforeAndAfterAll {
+class VersionedSpec extends SparkSpec {
 
-  private val made = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
-
-  private def freshDir(): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_versioned_spec").toFile
-    made += d
-    d.getAbsolutePath + "/t"
-  }
-
-  override def afterAll(): Unit =
-    try made.foreach(org.apache.commons.io.FileUtils.deleteDirectory) finally super.afterAll()
+  private def freshDir(): String = SparkSpec.tempDir("graft_versioned_spec").toAbsolutePath.toString + "/t"
 
   test("mt_vacuum_read leaves exactly one referenced version on disk") {
     // Run the gate query (builds append+append+replace+vacuum on first

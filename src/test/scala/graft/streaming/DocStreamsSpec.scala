@@ -12,10 +12,10 @@ class DocStreamsSpec extends SparkSpec {
     * must still equal one batch pass over the whole table.
     */
   lazy val docsDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("docs-stream")
+    val d = SparkSpec.tempDir("docs-stream")
     val docs = Relational.t(spark, sf(), "documents")
     Seq(0, 1).foreach { parity =>
-      val tmp = java.nio.file.Files.createTempDirectory(s"docs-half$parity")
+      val tmp = SparkSpec.tempDir(s"docs-half$parity")
       docs.filter(col("doc_id") % 2 === parity)
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
@@ -27,8 +27,8 @@ class DocStreamsSpec extends SparkSpec {
 
   test("streaming NB classification equals the batch scorer over all arriving docs") {
     val (counts, labelStats) = Learn.nbModel(spark, sf())
-    val tableDir = java.nio.file.Files.createTempDirectory("docstream-tbl").toString + "/t"
-    val ckpt = java.nio.file.Files.createTempDirectory("docstream-ckpt").toString
+    val tableDir = SparkSpec.tempDir("docstream-tbl").toString + "/t"
+    val ckpt = SparkSpec.tempDir("docstream-ckpt").toString
 
     val q = DocStreams.classifyDocStream(
       DocStreams.readDocStream(spark, docsDir), counts, labelStats, tableDir, ckpt)
@@ -49,8 +49,8 @@ class DocStreamsSpec extends SparkSpec {
 
   test("streaming LM perplexity scoring equals the batch scorer over all arriving docs") {
     val (bg, ctx, voc) = Learn.lmModel(spark, sf())
-    val tableDir = java.nio.file.Files.createTempDirectory("lmstream-tbl").toString + "/t"
-    val ckpt = java.nio.file.Files.createTempDirectory("lmstream-ckpt").toString
+    val tableDir = SparkSpec.tempDir("lmstream-tbl").toString + "/t"
+    val ckpt = SparkSpec.tempDir("lmstream-ckpt").toString
 
     val q = DocStreams.lmScoreDocStream(
       DocStreams.readDocStream(spark, docsDir), bg, ctx, voc, tableDir, ckpt)
@@ -68,8 +68,8 @@ class DocStreamsSpec extends SparkSpec {
     // Re-run against a fresh sink; each version's doc_ids must be exactly
     // the staged half's doc_ids (no cross-batch state, no loss).
     val (counts, labelStats) = Learn.nbModel(spark, sf())
-    val tableDir = java.nio.file.Files.createTempDirectory("docstream-tbl2").toString + "/t"
-    val ckpt = java.nio.file.Files.createTempDirectory("docstream-ckpt2").toString
+    val tableDir = SparkSpec.tempDir("docstream-tbl2").toString + "/t"
+    val ckpt = SparkSpec.tempDir("docstream-ckpt2").toString
     DocStreams.classifyDocStream(
       DocStreams.readDocStream(spark, docsDir), counts, labelStats, tableDir, ckpt)
       .awaitTermination()
@@ -105,17 +105,17 @@ class DocStreamsSpec extends SparkSpec {
     val existing = sh.filter(Pipeline.bucket(col("doc_id")) < 80)
     val incoming = Relational.t(spark, sf(), "documents")
       .filter(Pipeline.bucket(col("doc_id")) >= 80)
-    val d = java.nio.file.Files.createTempDirectory("dedup-stream")
+    val d = SparkSpec.tempDir("dedup-stream")
     Seq(0, 1).foreach { parity =>
-      val tmp = java.nio.file.Files.createTempDirectory(s"dedup-half$parity")
+      val tmp = SparkSpec.tempDir(s"dedup-half$parity")
       incoming.filter(col("doc_id") % 2 === parity)
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
         .find(_.getName.endsWith(".parquet")).get
       java.nio.file.Files.copy(part.toPath, d.resolve(s"half$parity.parquet"))
     }
-    val tableDir = java.nio.file.Files.createTempDirectory("dedupstream-tbl").toString + "/t"
-    val ckpt = java.nio.file.Files.createTempDirectory("dedupstream-ckpt").toString
+    val tableDir = SparkSpec.tempDir("dedupstream-tbl").toString + "/t"
+    val ckpt = SparkSpec.tempDir("dedupstream-ckpt").toString
     DocStreams.dedupDocStream(
       DocStreams.readDocStream(spark, d.toString), existing, tableDir, ckpt)
       .awaitTermination()

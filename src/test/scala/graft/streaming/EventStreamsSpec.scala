@@ -10,7 +10,7 @@ class EventStreamsSpec extends SparkSpec {
     * file into a temp dir once for the suite.
     */
   lazy val eventsDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("events-stream")
+    val d = SparkSpec.tempDir("events-stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"${sf()}/events.parquet"),
       d.resolve("events.parquet")
@@ -173,7 +173,7 @@ class EventStreamsSpec extends SparkSpec {
     // batch boundary for every user.
     val ev = graft.operators.Relational.t(spark, sf(), "events")
     val cut = ev.agg(expr("percentile_approx(unix_micros(ts), 0.5)")).head().getLong(0)
-    val d = java.nio.file.Files.createTempDirectory("events-roll")
+    val d = SparkSpec.tempDir("events-roll")
     ev.filter(unix_micros(col("ts")) <= cut).coalesce(1).write.parquet(d.resolve("p1").toString)
     ev.filter(unix_micros(col("ts")) > cut).coalesce(1).write.parquet(d.resolve("p2").toString)
     def land(part: String, name: String): Unit = {
@@ -208,7 +208,7 @@ class EventStreamsSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val ev = graft.operators.Relational.t(spark, sf(), "events")
     val cut = ev.agg(expr("percentile_approx(unix_micros(ts), 0.5)")).head().getLong(0)
-    val d = java.nio.file.Files.createTempDirectory("events-attr")
+    val d = SparkSpec.tempDir("events-attr")
     ev.filter(unix_micros(col("ts")) <= cut).coalesce(1).write.parquet(d.resolve("p1").toString)
     ev.filter(unix_micros(col("ts")) > cut).coalesce(1).write.parquet(d.resolve("p2").toString)
     def land(part: String, name: String): Unit = {
@@ -256,7 +256,7 @@ class EventStreamsSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val ev = graft.operators.Relational.t(spark, sf(), "events")
     val cut = ev.agg(expr("percentile_approx(unix_micros(ts), 0.5)")).head().getLong(0)
-    val d = java.nio.file.Files.createTempDirectory("events-funnel")
+    val d = SparkSpec.tempDir("events-funnel")
     ev.filter(unix_micros(col("ts")) <= cut).coalesce(1).write.parquet(d.resolve("p1").toString)
     ev.filter(unix_micros(col("ts")) > cut).coalesce(1).write.parquet(d.resolve("p2").toString)
     def land(part: String, name: String): Unit = {
@@ -302,7 +302,7 @@ class EventStreamsSpec extends SparkSpec {
     val t0 = 1700000000000000L
     val m = 60L * 1000000
     def write(name: String, rows: Seq[(Long, Long, Long, String, Double, String)]): Unit = {
-      val d = java.nio.file.Files.createTempDirectory("ooo-stage")
+      val d = SparkSpec.tempDir("ooo-stage")
       rows.toDF("event_id", "tsu", "user_id", "event_type", "value", "props")
         .select(col("event_id"), timestamp_micros(col("tsu")).as("ts"),
           col("user_id"), col("event_type"), col("value"), col("props"))
@@ -312,7 +312,7 @@ class EventStreamsSpec extends SparkSpec {
         .find(_.toString.endsWith(".parquet")).get
       java.nio.file.Files.copy(leaf, landing.resolve(name))
     }
-    lazy val landing = java.nio.file.Files.createTempDirectory("ooo-events")
+    lazy val landing = SparkSpec.tempDir("ooo-events")
     write("a.parquet", Seq(
       (1L, t0 + 0 * m, 1L, "view", 10.0, "{}"),
       (2L, t0 + 20 * m, 1L, "click", 20.0, "{}"),
@@ -323,7 +323,7 @@ class EventStreamsSpec extends SparkSpec {
   private def landSecond(landing: java.nio.file.Path, t0: Long): Unit = {
     import spark.implicits._
     val m = 60L * 1000000
-    val d = java.nio.file.Files.createTempDirectory("ooo-stage2")
+    val d = SparkSpec.tempDir("ooo-stage2")
     Seq(
       (3L, t0 + 15 * m, 1L, "purchase", 30.0, "{}"),
       (11L, t0 + 12 * m, 2L, "click", 6.0, "{}"),
@@ -408,7 +408,7 @@ class EventStreamsSpec extends SparkSpec {
     // first file later. The schema probe cannot infer from zero files, so
     // readEventStream must fall back to the declared layout instead of
     // throwing at start.
-    val d = java.nio.file.Files.createTempDirectory("events-empty")
+    val d = SparkSpec.tempDir("events-empty")
     val q = EventStreams.dedupStream(EventStreams.readEventStream(spark, d.toString))
       .writeStream.outputMode("append").format("memory").queryName("empty_start_test").start()
     try {
@@ -429,7 +429,7 @@ class EventStreamsSpec extends SparkSpec {
     // the nanos layout) lands later, the declared-vs-file type clash must
     // surface as a stream error, never as silently misread timestamps.
     import org.apache.spark.sql.functions.{col, lit}
-    val d = java.nio.file.Files.createTempDirectory("events-wronggen")
+    val d = SparkSpec.tempDir("events-wronggen")
     val q = EventStreams.readEventStream(spark, d.toString)
       .writeStream.outputMode("append").format("memory").queryName("wronggen_test").start()
     try {
@@ -458,7 +458,7 @@ class EventStreamsSpec extends SparkSpec {
 
   test("streaming dedup drops exact duplicate events across files") {
     // Stage the same events file twice: every event arrives in duplicate.
-    val d = java.nio.file.Files.createTempDirectory("events-dup")
+    val d = SparkSpec.tempDir("events-dup")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"${sf()}/events.parquet"), d.resolve("a.parquet"))
     java.nio.file.Files.copy(
@@ -478,7 +478,7 @@ class EventStreamsSpec extends SparkSpec {
     // arrives in the same micro-batch, i.e. well within the 10-minute
     // horizon of the original — exactly the retry-storm arrival pattern the
     // operator's state bound is designed around.
-    val d = java.nio.file.Files.createTempDirectory("events-dupww")
+    val d = SparkSpec.tempDir("events-dupww")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"${sf()}/events.parquet"), d.resolve("a.parquet"))
     java.nio.file.Files.copy(
@@ -500,9 +500,9 @@ class EventStreamsSpec extends SparkSpec {
     // plus checkpointed dedup state must yield zero new rows — the streaming
     // analogue of the batch retry-no-duplicates guarantee (FailureRecoverySpec),
     // and the bug class the reference's append-mode sinks had.
-    val srcDir = java.nio.file.Files.createTempDirectory("ex1-src")
-    val outDir = java.nio.file.Files.createTempDirectory("ex1-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ex1-ckpt").toString
+    val srcDir = SparkSpec.tempDir("ex1-src")
+    val outDir = SparkSpec.tempDir("ex1-out").toString
+    val ckpt = SparkSpec.tempDir("ex1-ckpt").toString
     def stage(name: String): Unit = {
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"${sf()}/events.parquet"), srcDir.resolve(name))
@@ -529,9 +529,9 @@ class EventStreamsSpec extends SparkSpec {
 
   test("foreachBatch versioned sink is idempotent under batch replay (custom-sink exactly-once)") {
     import graft.sources.Versioned
-    val srcDir = java.nio.file.Files.createTempDirectory("vsink-src")
-    val tableDir = java.nio.file.Files.createTempDirectory("vsink-tbl").toString + "/t"
-    val ckpt = java.nio.file.Files.createTempDirectory("vsink-ckpt").toString
+    val srcDir = SparkSpec.tempDir("vsink-src")
+    val tableDir = SparkSpec.tempDir("vsink-tbl").toString + "/t"
+    val ckpt = SparkSpec.tempDir("vsink-ckpt").toString
     def stage(name: String): Unit = {
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"${sf()}/events.parquet"), srcDir.resolve(name))

@@ -33,7 +33,7 @@ class ObservabilitySpec extends SparkSpec {
   }
 
   test("streaming observe() surfaces per-batch metrics in query progress") {
-    val d = java.nio.file.Files.createTempDirectory("events-obs")
+    val d = SparkSpec.tempDir("events-obs")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"${sf()}/events.parquet"), d.resolve("a.parquet"))
     val q = EventStreams.readEventStream(spark, d.toString)

@@ -25,8 +25,8 @@ class MonthlyStatsSpec extends SparkSpec {
   }
 
   test("end-to-end mean/max per month through the MapReduce runtime") {
-    val in = Files.createTempDirectory("ms-in")
-    val out = Files.createTempDirectory("ms-out")
+    val in = SparkSpec.tempDir("ms-in")
+    val out = SparkSpec.tempDir("ms-out")
     Files.writeString(in.resolve("temps.txt"), lines.mkString("\n"))
     TaskRegistry.register("monthly", MonthlyStats)
     MapReduceJob.run(
